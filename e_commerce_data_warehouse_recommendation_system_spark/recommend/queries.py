@@ -16,9 +16,13 @@ mapping:
   ``implicitPrefs=True, seed=42`` (reference seeds SGD with 42 at
   mf_knn_recommender.py:108). Different optimizer (ALS normal equations vs
   SGD), so parity is metric-level, never factor-level — SURVEY §7 phase 3;
-- serving (M4/M5)       -> ``recommendForAllUsers`` / ``recommendForUserSubset``
-  (the cluster replaces the reference's ThreadPoolExecutor,
-  reference: mf_knn_recommender.py:298-312);
+- serving (M4/M5)       -> one float32 top-k kernel (``_topk_kernel``) that
+  replays MLlib's scoring: batch serving runs it per Arrow batch over the
+  user factors (the cluster replaces the reference's ThreadPoolExecutor,
+  reference: mf_knn_recommender.py:298-312); single-user serving runs it
+  on the driver-resident factors with no Spark job (reference:
+  use_model.py:46-50). ``recommendForUserSubset`` stays as the reference
+  the kernel is checked against;
 - MMR (M6/M12)          -> grouped ``applyInPandas`` greedy re-ranker —
   sequential per user, embarrassingly parallel across users
   (reference: mf_knn_recommender.py:477-547);
@@ -39,8 +43,10 @@ trains on, reference: mf_knn_recommender.py:40-70).
 
 Scale posture: encoding dictionaries are bounded (distinct users/items);
 the ALS shuffle is on block ids (MLlib-internal); top-k serving emits
-k rows/user; eval joins shuffle on user_idx only. Nothing collects to the
-driver except final scalar metrics (which ARE the result rows).
+k rows/user; eval joins shuffle on user_idx only. Besides final scalar
+metrics (which ARE the result rows), the only driver collect is the serving
+state: the trained factor tables, bounded by the dictionaries
+(``_serving_state``).
 """
 
 from __future__ import annotations
@@ -218,13 +224,14 @@ def _artifacts(spark: SparkSession, sf_dir: str) -> dict:
 
 
 def _decode_recs(recs: DataFrame, art: dict) -> DataFrame:
-    """Shared decode of an MLlib recommendations frame (user_idx +
+    """Decode of an MLlib recommendations frame (user_idx +
     recommendations array of (item_idx, rating) structs) back to natural
     ids with 1-based ranks — the inverse_transform step
     (reference: mf_knn_recommender.py:276). One posexplode + two broadcast
-    dictionary joins; every serving path (all-users, subset digest,
-    single-user) decodes through here so the struct contract lives in
-    exactly one place."""
+    dictionary joins. Only the MLlib reference path decodes through here
+    (:func:`rec_user_topk`, and the ``serve_user`` parity test that checks
+    :func:`_topk_kernel` against it); the kernel paths decode by array
+    lookup in :func:`_serving_state`."""
     exploded = recs.select(
         "user_idx", F.posexplode("recommendations").alias("rnk0", "rec")
     ).select(
@@ -240,177 +247,210 @@ def _decode_recs(recs: DataFrame, art: dict) -> DataFrame:
     )
 
 
-def _topk_from_factors(model, k: int, subset: DataFrame | None = None) -> DataFrame:
-    """Batch top-k serving DIRECTLY from the factor frames — a bit-faithful,
-    already-exploded replacement for ``recommendForAllUsers(k)`` /
-    ``recommendForUserSubset(subset, k)`` (r15 opt, guide §8 "decide with
-    small rows" + §4.2 native code per batch; VERDICT r14 item 1). Returns
-    ``(user_idx int, rnk0 int, item_idx int, rating float)`` with rnk0 the
-    0-based position MLlib's recommendations array would carry.
+#: schema of every serving frame: batch (:func:`_topk_from_factors`) and
+#: single-user (:func:`serve_user`)
+_SERVE_SCHEMA = "user_id bigint, item_id bigint, rnk int, score float"
 
-    Why it is faster: MLlib's ``recommendForAll`` cross-joins blockified
-    factor frames and pushes every (user, item) score through a per-user
-    JVM priority queue, then shuffles partial queues through an aggregator.
-    Here the catalog-sized item-factor matrix is COLLECTED ONCE (bounded by
-    the catalog — the same asymmetry MLlib's blocked cross product
-    exploits; rank x n_items floats, ~1-12 MB at sf0.1) and broadcast; each
-    user-factor partition scores all items in one vectorized numpy pass and
-    selects top-k with argpartition — no cross-join, no shuffle, no
-    per-candidate queue work. The only exchange left is the round-robin
-    repartition that spreads ALS's ~10 user blocks across every core.
 
-    BIT-FAITHFULNESS (the correctness contract, verified empirically —
-    plans/r15/als_factor_serve_parity.txt):
-    - scores: MLlib computes each score with dev.ludovic.netlib JavaBLAS
-      ``sgemv`` — a SEQUENTIAL float32 multiply-add over the rank (plain
-      Java, no FMA). The accumulation below reproduces it exactly: one
-      float32 elementwise multiply + one float32 add per rank step, in the
-      same r = 0..rank-1 order. Measured 0 bit mismatches over every
-      (user, item) pair MLlib reports at sf0.001/0.01/0.1 for rank 16 and
-      for the rank-150 backtest twin.
-    - top-k SET: unique when no two float32 scores tie at the k-th
-      boundary — measured zero boundary ties at every SF for every served
-      (model, k) pair; sets verified identical by EXCEPT ALL both ways.
-    - ORDER: MLlib sorts its array by score descending; with distinct
-      scores inside the top-k the order is unique and this path matches it
-      row-for-row. Where two picks tie EXACTLY (2 of 15k users at sf0.1),
-      this path breaks the tie by item_idx ascending while MLlib's queue
-      order is arbitrary — the swapped rows carry EQUAL scores, and every
-      hashed consumer is invariant to permuting equal-score picks
-      (contract flags use min/max rnk; eval hits are set joins; MMR and
-      the backtest pool re-rank by (score, item) themselves; the parity
-      row compares per-rank SCORES, equal under the swap). Verified by the
-      full oracle differential at all three SFs.
+def _topk_kernel(U, V, k: int):
+    """The one top-k scoring kernel. Batch serving
+    (:func:`_topk_from_factors`, per Arrow batch), single-user serving
+    (:func:`serve_user`, one row) and fold-in scoring
+    (scripts/recommend_user.py) all rank through it.
 
-    Scale posture: the user side partitions freely (mapInArrow, one batch
-    in memory per worker, items blocked so the score buffer stays ~16 MB);
-    the item side is the bounded catalog, shipped once per executor. The
-    driver collect is catalog-bounded (the repo's documented bounded-
-    collect class — same justification as every F.broadcast(items))."""
+    ``U`` is an (m, rank) float32 user-factor block and ``V`` the
+    (n, rank) float32 item factors ordered by item_idx. Returns
+    ``(pos, score)``, both (m, min(k, n)): ``pos`` indexes rows of ``V``
+    and ``score`` is float32. Each row is ordered by score descending,
+    ties by position ascending — that is by item_idx, and so by item_id,
+    because ``_encode`` numbers ids by a sorted dense rank.
+
+    Scores replay MLlib's arithmetic: the pure-Java dev.ludovic.netlib
+    BLAS computes each score as a SEQUENTIAL float32 multiply-add over
+    the rank (plain Java, no FMA). Here each rank step is one float32
+    product plus one float32 add, in the same r = 0..rank-1 order, so
+    the scores are bit-equal to ``recommendForUserSubset``'s whenever
+    that BLAS is the one MLlib loads (a native JNIBLAS accumulates
+    differently). tests/test_serve_user_parity.py checks this for every
+    trained user. Rows are independent, so a user's result does not
+    depend on which block it is scored in. Cost: one (m, n) float32
+    score buffer; callers chunk m."""
     import numpy as np
 
-    spark = model.itemFactors.sparkSession
-    itp = model.itemFactors.select("id", "features").toPandas()
-    order = np.argsort(itp["id"].to_numpy(), kind="stable")
-    iids = itp["id"].to_numpy()[order].astype(np.int32)
-    vmat = np.stack(itp["features"].to_numpy()[order]).astype(np.float32)
-    bc = spark.sparkContext.broadcast((iids, vmat))
-    n_items = int(vmat.shape[0])
-    k_eff = min(int(k), n_items)
+    m, n = U.shape[0], V.shape[0]
+    k = max(0, min(int(k), n))
+    S = np.zeros((m, n), dtype=np.float32)
+    tmp = np.empty_like(S)
+    for r in range(V.shape[1]):
+        np.multiply(U[:, r][:, None], V[None, :, r], out=tmp)
+        S += tmp
+    if k < n:
+        pos = np.argpartition(-S, k - 1, axis=1)[:, :k]
+    else:
+        pos = np.broadcast_to(np.arange(n), (m, n)).copy()
+    score = np.take_along_axis(S, pos, axis=1)
+    # deterministic order: position asc first, then a STABLE sort by
+    # score desc — ties end up item_idx-ascending
+    o1 = np.argsort(pos, axis=1, kind="stable")
+    pos = np.take_along_axis(pos, o1, axis=1)
+    score = np.take_along_axis(score, o1, axis=1)
+    o2 = np.argsort(-score, axis=1, kind="stable")
+    return np.take_along_axis(pos, o2, axis=1), np.take_along_axis(score, o2, axis=1)
 
-    uf = model.userFactors.select("id", "features")
-    if subset is not None:
-        uf = uf.join(
-            subset.select(F.col("user_idx").alias("id")), "id", "left_semi"
+
+def _serving_state(art: dict) -> dict:
+    """Driver-resident serving state of one trained model, memoized in the
+    artifact dict: built by the refresh's first batch-serving call, then
+    reused by every request until the model is refit.
+
+    - ``item_ids`` int64 (n_items,) and ``V`` float32 (n_items, rank): the
+      item side, ordered by item_idx;
+    - ``user_row`` (user_id -> row) and ``U`` float32 (n_users, rank): the
+      user side;
+    - ``user_id_by_idx``: int64 user_idx -> user_id lookup, the batch
+      path's user decode.
+
+    One collect: both factor frames, each joined to its encoding
+    dictionary, as one tagged union. The collect is bounded by the
+    dictionaries — (n_users + n_items) x rank float32 plus the id vectors,
+    about 2.3 MB at sf0.1 for rank 16."""
+    if "serving" in art:
+        return art["serving"]
+    import numpy as np
+
+    model = art["model"]
+
+    def side(factors, dictionary, idx_col, id_col, is_user):
+        return factors.join(
+            F.broadcast(dictionary), F.col("id") == F.col(idx_col)
+        ).select(
+            F.lit(is_user).alias("is_user"),
+            F.col("id").alias("idx"),
+            F.col(id_col).alias("nat_id"),
+            "features",
         )
+
+    # dictionary-bounded driver collect (see docstring)
+    rows = (
+        side(model.userFactors, art["users"], "user_idx", "user_id", True)
+        .unionByName(side(model.itemFactors, art["items"], "item_idx", "item_id", False))
+        .collect()
+    )
+    rank = model.rank
+
+    def arrays(is_user):
+        sel = sorted((r for r in rows if r.is_user == is_user), key=lambda r: r.idx)
+        idx = np.array([r.idx for r in sel], dtype=np.int64)
+        ids = np.array([r.nat_id for r in sel], dtype=np.int64)
+        mat = np.array([r.features for r in sel], dtype=np.float32).reshape(len(sel), rank)
+        return idx, ids, mat
+
+    u_idx, u_ids, U = arrays(True)
+    _, item_ids, V = arrays(False)
+    user_id_by_idx = np.full(int(u_idx.max()) + 1 if len(u_idx) else 0, -1, dtype=np.int64)
+    user_id_by_idx[u_idx] = u_ids
+    art["serving"] = {
+        "item_ids": item_ids,
+        "V": V,
+        "U": U,
+        "user_row": {int(u): i for i, u in enumerate(u_ids)},
+        "user_id_by_idx": user_id_by_idx,
+    }
+    return art["serving"]
+
+
+def _serving_broadcast(art: dict):
+    """The one broadcast of the serving state's item side plus the user
+    decode vector, memoized per model: every batch-serving call reuses it
+    rather than shipping (and leaking) a new catalog-sized copy."""
+    if "serving_bc" not in art:
+        st = _serving_state(art)
+        sc = art["model"].itemFactors.sparkSession.sparkContext
+        art["serving_bc"] = sc.broadcast((st["item_ids"], st["V"], st["user_id_by_idx"]))
+    return art["serving_bc"]
+
+
+def _topk_from_factors(art: dict, k: int) -> DataFrame:
+    """Batch top-k serving for every trained user, straight from the
+    factor frames: ``(user_id, item_id, rnk, score)`` in natural ids, the
+    rows ``recommendForAllUsers(k)`` plus a decode would give (order
+    among exactly tied scores aside, see :func:`_topk_kernel`; every
+    consumer is invariant to that order: the contract flags read min/max
+    rnk, eval hits are set joins, MMR re-ranks by (score, item) itself).
+
+    The user-factor frame is spread over every core and each Arrow batch
+    runs :func:`_topk_kernel` against the item side of the memoized
+    serving broadcast (:func:`_serving_broadcast`), decoding both ids by
+    array lookup in the same pass — no cross-join, no per-candidate
+    queue, no shuffle beyond the round-robin repartition, and no decode
+    join. The item side is collected and broadcast once per model; the
+    k=10 and k=30 frames of a refresh share it.
+
+    Scale: the user side partitions freely (one batch per worker in
+    memory, scored in chunks so the score buffer stays ~16 MB); the item
+    side is the bounded catalog, shipped once per executor."""
+    bc = _serving_broadcast(art)
+    uf = art["model"].userFactors.select("id", "features")
+    spark = uf.sparkSession
 
     def score_partition(batches):
         import numpy as np
         import pyarrow as pa
 
-        ids, V = bc.value  # once per task (guide §4.5)
-        n = V.shape[0]
-        rank = V.shape[1]
+        item_ids, V, user_id_by_idx = bc.value  # once per task
+        n, rank = V.shape
+        k_eff = max(0, min(int(k), n))
         # per-chunk score buffer ~16 MB however large the user side grows
         rows_per_chunk = max(1, (4 << 20) // max(n, 1))
-        rnk0_tmpl = np.arange(k_eff, dtype=np.int32)
-
-        def topk_chunk(uid_c, U):
-            m = U.shape[0]
-            S = np.zeros((m, n), dtype=np.float32)
-            tmp = np.empty_like(S)
-            # EXACT float32 sequential accumulation (see docstring): each
-            # rank step is one f32 product + one f32 add, like the JVM's
-            for r in range(rank):
-                np.multiply(U[:, r][:, None], V[None, :, r], out=tmp)
-                S += tmp
-            if k_eff < n:
-                part = np.argpartition(-S, k_eff - 1, axis=1)[:, :k_eff]
-            else:
-                part = np.broadcast_to(np.arange(n), (m, n)).copy()
-            psc = np.take_along_axis(S, part, axis=1)
-            # deterministic order: item position asc first, then a STABLE
-            # sort by score desc — ties end up item_idx-ascending
-            o1 = np.argsort(part, axis=1, kind="stable")
-            part = np.take_along_axis(part, o1, axis=1)
-            psc = np.take_along_axis(psc, o1, axis=1)
-            o2 = np.argsort(-psc, axis=1, kind="stable")
-            part = np.take_along_axis(part, o2, axis=1)
-            psc = np.take_along_axis(psc, o2, axis=1)
-            return pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.repeat(uid_c, k_eff), type=pa.int32()),
-                    pa.array(np.tile(rnk0_tmpl, m), type=pa.int32()),
-                    pa.array(ids[part].ravel(), type=pa.int32()),
-                    pa.array(psc.ravel(), type=pa.float32()),
-                ],
-                names=["user_idx", "rnk0", "item_idx", "rating"],
-            )
-
+        rnk = np.arange(1, k_eff + 1, dtype=np.int32)
         for rb in batches:
             m_rows = rb.num_rows
             if m_rows == 0:
                 continue
-            uid = rb.column("user_idx" if "user_idx" in rb.schema.names else "id")
-            uid = uid.to_numpy(zero_copy_only=False)
+            uid = user_id_by_idx[rb.column("id").to_numpy(zero_copy_only=False)]
             feats = rb.column("features")
             offsets = feats.offsets.to_numpy(zero_copy_only=False)
             widths = np.diff(offsets)
             if (
-                len(widths)
-                and (widths == widths[0]).all()
-                and widths[0] == V.shape[1]
+                (widths == rank).all()
                 and not feats.values.null_count
                 and not feats.null_count
             ):
                 flat = feats.values.to_numpy(zero_copy_only=False)
-                U = flat[offsets[0] : offsets[-1]].reshape(m_rows, V.shape[1])
+                U = flat[offsets[0] : offsets[-1]].reshape(m_rows, rank)
             else:  # defensive: factor frames are uniform by construction
                 U = np.stack(feats.to_pandas().to_numpy()).astype(np.float32)
             for lo in range(0, m_rows, rows_per_chunk):
                 hi = min(lo + rows_per_chunk, m_rows)
-                yield topk_chunk(uid[lo:hi], U[lo:hi])
+                pos, score = _topk_kernel(U[lo:hi], V, k_eff)
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(np.repeat(uid[lo:hi], k_eff), type=pa.int64()),
+                        pa.array(item_ids[pos].ravel(), type=pa.int64()),
+                        pa.array(np.tile(rnk, hi - lo), type=pa.int32()),
+                        pa.array(score.ravel(), type=pa.float32()),
+                    ],
+                    names=["user_id", "item_id", "rnk", "score"],
+                )
 
     # spread ALS's ~numUserBlocks output partitions across the cluster —
     # scale-adaptive: never fewer than the session's parallelism, never
     # repartitioning a big frame DOWN (tiny rows, round-robin is cheap)
     return uf.repartition(spark.sparkContext.defaultParallelism).mapInArrow(
-        score_partition,
-        schema="user_idx int, rnk0 int, item_idx int, rating float",
-    )
-
-
-def _decode_flat(flat: DataFrame, art: dict) -> DataFrame:
-    """Decode an already-exploded serving frame (``_topk_from_factors``
-    output) to natural ids with 1-based ranks — the flat twin of
-    :func:`_decode_recs` (which stays for the single-user MLlib path)."""
-    exploded = flat.select(
-        "user_idx",
-        (F.col("rnk0") + 1).cast("int").alias("rnk"),
-        "item_idx",
-        F.col("rating").alias("score"),
-    )
-    return (
-        exploded.join(F.broadcast(art["users"]), "user_idx")
-        .join(F.broadcast(art["items"]), "item_idx")
-        .select("user_id", "item_id", "rnk", "score")
+        score_partition, schema=_SERVE_SCHEMA
     )
 
 
 def _serve_all(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """M4/M5 serving plan, built fresh (no memoization): batch top-k for
-    every trained user, decoded back to natural ids. Served from the
-    factor frames (r15 opt — see :func:`_topk_from_factors`; rows
-    bit-identical to the former ``recommendForAllUsers`` plan)."""
-    art = _artifacts(spark, sf_dir)
-    return _decode_flat(_topk_from_factors(art["model"], k), art)
+    every trained user in natural ids (:func:`_topk_from_factors`)."""
+    return _topk_from_factors(_artifacts(spark, sf_dir), k)
 
 
 def _topk_recs(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """Memoized wrapper around :func:`_serve_all`, per (session, sf_dir, k):
-    ``recommendForAllUsers`` is the most expensive serving op and feeds the
-    serving digest, the eval stack, coverage, AND the MMR pool — without
-    the cache each consumer re-runs the factor cross-product."""
+    batch serving feeds the serving digest, the eval stack, coverage, AND
+    the MMR pool — without the cache each consumer re-runs the scoring."""
     art = _artifacts(spark, sf_dir)
     memo_key = f"recs_k{k}"
     if memo_key in art:
@@ -473,7 +513,7 @@ def rec_als_fit_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @bench_workload("rec_als_serve_all", warmup=_warm_model)
 def rec_als_serve_all_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M4 alone: ``recommendForAllUsers`` + dictionary decode on an
+    """M4 alone: batch top-k serving for every trained user on an
     already-fitted model (fit happens in the off-clock warmup)."""
     return _serve_all(spark, sf_dir)
 
@@ -599,7 +639,7 @@ def rec_user_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def rec_als_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M3+M4+M5: train implicit ALS, batch-serve top-10 for every user
-    (``recommendForAllUsers``), serve the deterministic user subset
+    (``_topk_recs``), serve the deterministic user subset
     (``recommendForUserSubset``, every 50th id), decode ids — then emit the
     serving contract as an oracle row: exactly k recs per trained user,
     ranks 1..k, every recommended item inside the catalog dictionary, and
@@ -2031,16 +2071,44 @@ def rec_decayed_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def serve_user(spark: SparkSession, sf_dir: str, user_id: int, k: int = TOP_K) -> DataFrame:
     """Public single-user serving API — the reference's
-    ``recommend_items_for_user`` (use_model.py:46-50) as one
-    ``recommendForUserSubset`` call on the memoized model. Returns an
-    EMPTY frame (not an apology string, reference:
+    ``recommend_items_for_user`` (use_model.py:46-50), which answers with
+    dot products over the trained factors. It runs no Spark job: a dict
+    lookup of the user's row in the driver-resident serving state
+    (:func:`_serving_state`, built once per model by the refresh),
+    :func:`_topk_kernel` on that one row, and the k rows wrapped as a
+    frame over a pyarrow Table, which plans as a LocalTableScan (building
+    and collecting it submit no job).
+
+    Returns ``user_id bigint, item_id bigint, rnk int, score float``: the
+    user's rows of batch serving, bit for bit, and MLlib's
+    ``recommendForUserSubset`` rows up to the order of exactly tied scores
+    (ties go item_id ascending; tests/test_serve_user_parity.py). Returns
+    an EMPTY frame of that schema (not an apology string, reference:
     mf_knn_recommender.py:234-242) when the user wasn't trained — callers
     route unknowns to fold-in (rec_fold_in_user_factors) or the
-    popularity shelf (rec_popular_fallback); see scripts/recommend_user.py."""
+    popularity shelf (rec_popular_fallback); see scripts/recommend_user.py.
+
+    Memory: the state keeps n_users x rank float32 user factors (plus
+    n_items x rank item factors) on the driver for the model's lifetime,
+    about 1 MB of users at sf0.1 for rank 16."""
+    import numpy as np
+    import pyarrow as pa
+
     prepare(spark, sf_dir)
-    art = _artifacts(spark, sf_dir)
-    subset = art["users"].filter(F.col("user_id") == user_id)
-    return _decode_recs(art["model"].recommendForUserSubset(subset, k), art)
+    st = _serving_state(_artifacts(spark, sf_dir))
+    row = st["user_row"].get(user_id)
+    U = st["U"][row : row + 1] if row is not None else st["U"][:0]
+    pos, score = _topk_kernel(U, st["V"], k)
+    n = pos.size
+    table = pa.table(
+        {
+            "user_id": pa.array(np.full(n, user_id, dtype=np.int64), type=pa.int64()),
+            "item_id": pa.array(st["item_ids"][pos.ravel()], type=pa.int64()),
+            "rnk": pa.array(np.arange(1, n + 1), type=pa.int32()),
+            "score": pa.array(score.ravel(), type=pa.float32()),
+        }
+    )
+    return spark.createDataFrame(table, schema=_SERVE_SCHEMA)
 
 
 # --------------------------------------------------------------------------

@@ -59,16 +59,26 @@ def upsert(old: DataFrame, new: DataFrame, keys: list[str]) -> DataFrame:
     semantics); the anti-join form is shuffle-on-key and scales with AQE
     skew handling.
 
+    Keys match null-safely (``eqNullSafe``): a NULL key component equals
+    NULL, so ``(2, NULL, 'b2')`` replaces an old ``(2, NULL, 'b')``
+    instead of both surviving. Plain ``=`` would never match the NULL
+    and the target would grow by one row per NULL-keyed upsert.
+
     The reference's 100k-row chunking (its H5) is obsolete: the write is
     distributed.
     """
-    survivors = old.join(new.select(*keys).distinct(), on=keys, how="left_anti")
+    # renamed so each condition side resolves unambiguously, even when
+    # ``new`` is derived from ``old``
+    new_keys = new.select(*[F.col(k).alias(f"_new_{k}") for k in keys]).distinct()
+    matched = [F.col(k).eqNullSafe(F.col(f"_new_{k}")) for k in keys]
+    survivors = old.join(new_keys, on=matched, how="left_anti")
     return new.unionByName(survivors.select(*new.columns))
 
 
 def merge_keys_condition(keys: list[str], target: str = "t", source: str = "s") -> str:
-    """MERGE ON condition for a key list: ``t.k1 = s.k1 AND ...``."""
-    return " AND ".join(f"{target}.{k} = {source}.{k}" for k in keys)
+    """MERGE ON condition for a key list, null-safe like :func:`upsert`:
+    ``t.k1 <=> s.k1 AND ...``."""
+    return " AND ".join(f"{target}.{k} <=> {source}.{k}" for k in keys)
 
 
 def parquet_target_exists(path: str) -> bool:

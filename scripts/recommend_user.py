@@ -49,11 +49,10 @@ def main(argv: list[str] | None = None) -> int:
     if args.user is None and not args.batch_all:
         ap.error("--user or --batch-all required")
 
+    import numpy as np
+    import pyarrow as pa
     from pyspark.sql import functions as F
 
-    from e_commerce_data_warehouse_recommendation_system_spark.operators.similarity import (
-        _dot_fast,
-    )
     from e_commerce_data_warehouse_recommendation_system_spark.recommend import queries as rq
     from e_commerce_data_warehouse_recommendation_system_spark.session import get_spark
 
@@ -86,10 +85,12 @@ def main(argv: list[str] | None = None) -> int:
             rq.mmr_rerank(spark, sf)
             .filter((F.col("user_id") == args.user) & (F.col("mmr_rank") <= args.top_k))
             .orderBy("mmr_rank")
+            .cache()  # emptiness probe + display share one execution
         )
     else:
+        # a local frame: caching it buys nothing, and would make later
+        # identical serve_user frames read the cache through a Spark job
         served = rq.serve_user(spark, sf, args.user, k=args.top_k)
-    served = served.cache()  # emptiness probe + display share one execution
     if served.count() == 0:
         if not args.fold_in:
             print(
@@ -112,23 +113,23 @@ def main(argv: list[str] | None = None) -> int:
         if history.count() == 0:
             print(f"# user {args.user}: no trained-item history — popularity shelf")
             return shelf()
-        folded = rq.rec_fold_in_user_factors(spark, sf, interactions_df=history)
-        itf = art["model"].itemFactors.select(
-            F.col("id").alias("item_idx"), F.col("features").alias("ifeat")
-        )
-        scored = (
-            folded.join(F.broadcast(itf))
-            .select("item_idx", _dot_fast(F.col("features"), F.col("ifeat")).alias("score"))
-            .join(F.broadcast(art["items"]), "item_idx")
-            .orderBy(F.desc("score"), F.asc("item_id"))
-            .limit(args.top_k)
-            .cache()
-        )
-        if scored.count() == 0:
+        folded = rq.rec_fold_in_user_factors(spark, sf, interactions_df=history).collect()
+        # score the folded factor with the serving kernel against the
+        # model's driver-resident item side
+        st = rq._serving_state(art)
+        U = np.array([r.features for r in folded], dtype=np.float32).reshape(-1, st["V"].shape[1])
+        pos, score = rq._topk_kernel(U[:1], st["V"], args.top_k)
+        if pos.size == 0:
             print(f"# user {args.user}: fold-in yielded no scores — popularity shelf")
             return shelf()
         print(f"# user {args.user}: served via fold-in")
-        scored.select("item_id", "score").show(args.top_k, truncate=False)
+        scored = pa.table(
+            {
+                "item_id": pa.array(st["item_ids"][pos[0]], type=pa.int64()),
+                "score": pa.array(score[0], type=pa.float32()),
+            }
+        )
+        spark.createDataFrame(scored).show(args.top_k, truncate=False)
         return 0
     print(f"# user {args.user}: top-{args.top_k}")
     served.show(args.top_k, truncate=False)

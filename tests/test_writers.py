@@ -32,6 +32,28 @@ def test_upsert_is_idempotent(spark):
     assert sorted(map(tuple, twice.collect())) == [(1, "A")]
 
 
+def test_upsert_matches_null_key_components(spark):
+    """A NULL key component matches its NULL twin: the new row replaces
+    the old one instead of both surviving."""
+    schema = "k1 int, k2 int, v string"
+    old = spark.createDataFrame([(1, 1, "a"), (2, None, "b")], schema)
+    new = spark.createDataFrame([(2, None, "b2")], schema)
+    got = sorted(map(tuple, upsert(old, new, ["k1", "k2"]).collect()), key=str)
+    assert got == [(1, 1, "a"), (2, None, "b2")]
+
+
+def test_upsert_path_matches_null_key_components(spark, tmp_path):
+    from e_commerce_data_warehouse_recommendation_system_spark.sources.writers import (
+        upsert_path,
+    )
+
+    schema = "k1 int, k2 int, v string"
+    target = str(tmp_path / "tgt")
+    upsert_path(spark, target, spark.createDataFrame([(2, None, "b")], schema), ["k1", "k2"])
+    upsert_path(spark, target, spark.createDataFrame([(2, None, "b2")], schema), ["k1", "k2"])
+    assert [tuple(r) for r in spark.read.parquet(target).collect()] == [(2, None, "b2")]
+
+
 def test_delete_by_keys(spark):
     df = _df(spark, [(1, "a"), (2, "b"), (3, "c")])
     dels = spark.createDataFrame([(2,), (9,)], schema="k int")
@@ -57,8 +79,9 @@ def test_merge_keys_condition():
         merge_keys_condition,
     )
 
-    assert merge_keys_condition(["a"]) == "t.a = s.a"
-    assert merge_keys_condition(["a", "b"]) == "t.a = s.a AND t.b = s.b"
+    # null-safe, like upsert's anti-join
+    assert merge_keys_condition(["a"]) == "t.a <=> s.a"
+    assert merge_keys_condition(["a", "b"]) == "t.a <=> s.a AND t.b <=> s.b"
 
 
 def test_upsert_path_parquet_fallback(spark, tmp_path):
