@@ -136,7 +136,9 @@ def _encode(
     return keyed.select(F.col(id_col), (F.col("_sk") - 1).cast("int").alias(idx_col))
 
 
-def _encode_bounds_pair(df: DataFrame, user_c: str, item_c: str) -> tuple[list, list]:
+def _encode_bounds_pair(
+    df: DataFrame, user_c: str, item_c: str, **counts: F.Column
+) -> tuple[list, list, dict]:
     """ONE aggregation job computing bucket boundaries for BOTH encoding
     dictionaries (r15 opt, guide §1.2 / VERDICT r14 item 4): the two
     ``_encode`` calls each ran an eager approxQuantile over a distinct()
@@ -145,19 +147,29 @@ def _encode_bounds_pair(df: DataFrame, user_c: str, item_c: str) -> tuple[list, 
     bucket balance, never the surrogate-key result. A single
     ``percentile_approx`` pass over both raw columns (no distinct —
     multiplicity skews placement only) replaces both. Sketches merge
-    map-side, so this is one shuffle-free scan of the (cached)
-    interaction frame."""
+    map-side, so on its own this is one shuffle-free scan of the (cached)
+    interaction frame.
+
+    ``counts``: named aggregate columns evaluated in the same pass, so a
+    caller gets the frame's counts without a job of their own. Returns
+    ``(user_bounds, item_bounds, {name: value})``. :func:`_artifacts`
+    passes the refresh's exact counts this way: interactions
+    (``count(*)``), distinct users and items (``count_distinct``, which
+    adds the pass's only shuffle) and held-out pairs."""
     spark = df.sparkSession
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     qs = [i / n for i in range(1, n)]
-    if not qs:
-        return [], []
-    qarr = F.array(*[F.lit(q) for q in qs])
-    row = df.agg(
-        F.percentile_approx(user_c, qarr, F.lit(10000)).alias("ub"),
-        F.percentile_approx(item_c, qarr, F.lit(10000)).alias("ib"),
-    ).first()
-    return list(row["ub"] or []), list(row["ib"] or [])
+    aggs = [c.alias(name) for name, c in counts.items()]
+    if qs:
+        qarr = F.array(*[F.lit(q) for q in qs])
+        aggs += [
+            F.percentile_approx(user_c, qarr, F.lit(10000)).alias("_ub"),
+            F.percentile_approx(item_c, qarr, F.lit(10000)).alias("_ib"),
+        ]
+    if not aggs:
+        return [], [], {}
+    row = df.agg(*aggs).first().asDict()
+    return list(row.pop("_ub", None) or []), list(row.pop("_ib", None) or []), row
 
 
 def _split_bucket(user_c: str, item_c: str) -> F.Column:
@@ -188,13 +200,23 @@ def _artifacts(spark: SparkSession, sf_dir: str) -> dict:
         del _CACHE[stale]
     from pyspark.ml.recommendation import ALS
 
-    # cache: the interaction join feeds the two dictionary builds (whose
-    # two-phase surrogate key runs an eager approxQuantile action each) and
-    # the encoded train/test materialization — without it orders ⋈ lineitem
-    # re-executes per consumer
+    # cache: the interaction join feeds the bounds-and-counts pass, the two
+    # dictionary builds and the encoded train/test materialization — without
+    # it orders ⋈ lineitem re-executes per consumer
     inter = interactions(spark).cache()
-    # one quantile pass for both dictionaries (r15 opt; see _encode_bounds_pair)
-    ub, ib = _encode_bounds_pair(inter, "user_id", "item_id")
+    # one pass for both dictionaries' bounds (r15 opt; see
+    # _encode_bounds_pair) that also takes the refresh's exact counts
+    ub, ib, counts = _encode_bounds_pair(
+        inter,
+        "user_id",
+        "item_id",
+        n_interactions=F.count(F.lit(1)),
+        n_users=F.count_distinct("user_id"),
+        n_items=F.count_distinct("item_id"),
+        n_test=F.count(
+            F.when(_split_bucket("user_id", "item_id").isin(*_TEST_DIGITS), 1)
+        ),
+    )
     users = _encode(inter, "user_id", "user_idx", bounds=ub)
     items = _encode(inter, "item_id", "item_idx", bounds=ib)
     encoded = (
@@ -218,7 +240,14 @@ def _artifacts(spark: SparkSession, sf_dir: str) -> dict:
         coldStartStrategy="drop",
     )
     model = als.fit(train)
-    art = {"model": model, "train": train, "test": test, "users": users, "items": items}
+    art = {
+        "model": model,
+        "train": train,
+        "test": test,
+        "users": users,
+        "items": items,
+        "counts": counts,
+    }
     _CACHE[cache_key] = art
     return art
 
@@ -485,7 +514,7 @@ def rec_als_fit_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     inter = interactions(spark).cache()
     # one quantile pass for both dictionaries (r15 opt; see _encode_bounds_pair)
-    ub, ib = _encode_bounds_pair(inter, "user_id", "item_id")
+    ub, ib, _ = _encode_bounds_pair(inter, "user_id", "item_id")
     users = _encode(inter, "user_id", "user_idx", bounds=ub)
     items = _encode(inter, "item_id", "item_idx", bounds=ib)
     train = (
@@ -554,7 +583,7 @@ def rec_label_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per consumer (same reasoning as _artifacts)
     inter = interactions(spark).cache()
     # one quantile pass for both dictionaries (r15 opt; see _encode_bounds_pair)
-    ub, ib = _encode_bounds_pair(inter, "user_id", "item_id")
+    ub, ib, _ = _encode_bounds_pair(inter, "user_id", "item_id")
     u = _encode(inter, "user_id", "idx", bounds=ub).select(
         F.lit("user").alias("entity"), F.col("user_id").alias("original_id"), "idx"
     )
@@ -730,7 +759,7 @@ def rec_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     art = _artifacts(spark, sf_dir)
     recs = _topk_recs(spark, sf_dir)
     n_rec_items = recs.select("item_id").distinct().count()
-    n_catalog = art["items"].count()
+    n_catalog = art["counts"]["n_items"]
     return spark.createDataFrame(
         [(n_rec_items, n_catalog, float(n_rec_items) / float(n_catalog))],
         schema="n_recommended_items bigint, n_catalog_items bigint, coverage double",
@@ -2872,6 +2901,8 @@ def rec_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     from concurrent.futures import ThreadPoolExecutor
 
+    import pyarrow as pa
+
     prepare(spark, sf_dir)
     art = _artifacts(spark, sf_dir)
     model = art["model"]
@@ -2879,22 +2910,17 @@ def rec_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # not a concurrency primitive), then fan the independent stage actions
     # out over a small driver thread pool (guide §2.6: actions are only
     # sequential because the driver calls them sequentially — each of
-    # these jobs underfills 32 cores at bench scale, and none depends on
-    # another's result except where the future graph below says so). Every
-    # emitted count/flag is computed from the same frames as the serial
-    # form, so the digest rows are bit-identical.
+    # these jobs underfills the session's cores at bench scale, and none
+    # depends on another's result except where the future graph below
+    # says so). Every emitted count/flag is computed from the same frames
+    # as the serial form, so the digest rows are bit-identical.
     recs = _topk_recs(spark, sf_dir, TOP_K)
     pool = _topk_recs(spark, sf_dir, k=MMR_POOL)
-
-    def stage_counts():
-        return (
-            art["train"].count(),
-            art["test"].count(),
-            art["users"].count(),
-            art["items"].count(),
-            model.userFactors.count(),
-            model.itemFactors.count(),
-        )
+    # stages 1-4 cost no job of their own: the exact counts came with the
+    # dictionary-bounds pass, and the factor counts are the row counts of
+    # the driver-resident serving state the serving frames were built from
+    counts = art["counts"]
+    st = _serving_state(art)
 
     def stage_srv():
         # stage 5: serving contract from the real rec rows (memoized frame)
@@ -2922,7 +2948,6 @@ def rec_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         # then stage 8: publish + read-back checksum (both consume the
         # checkpointed MMR frame, so they live on one future)
         mmr = mmr_rerank(spark, sf_dir).localCheckpoint(eager=True)
-        n_mmr = mmr.count()
         off_pool = mmr.join(
             pool.select("user_id", "item_id"), ["user_id", "item_id"], "left_anti"
         ).count()
@@ -2943,17 +2968,15 @@ def rec_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).collect()[0]
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
-        return n_mmr, off_pool, want, got
+        return off_pool, want, got
 
-    with ThreadPoolExecutor(max_workers=4) as ex:
-        f_counts = ex.submit(stage_counts)
+    with ThreadPoolExecutor(max_workers=3) as ex:
         f_srv = ex.submit(stage_srv)
         f_eval = ex.submit(stage_eval)
         f_mmr = ex.submit(stage_mmr_publish)
-        n_train, n_test, n_users, n_items, n_uf, n_if = f_counts.result()
         srv = f_srv.result()
         m = f_eval.result()
-        n_mmr, off_pool, want, got = f_mmr.result()
+        off_pool, want, got = f_mmr.result()
 
     metrics_ok = (
         0.0 <= m.p_at_k <= 1.0 and 0.0 <= m.r_at_k <= 1.0 and 0.0 <= m.f1 <= 1.0
@@ -2961,25 +2984,36 @@ def rec_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     publish_ok = (got.n, got.ck) == (want.n, want.ck)
 
     rows = [
-        (1, "extract", "n_interactions", float(n_train + n_test)),
-        (2, "encode", "n_users", float(n_users)),
-        (2, "encode", "n_items", float(n_items)),
-        (3, "split", "n_train", float(n_train)),
-        (3, "split", "n_test", float(n_test)),
+        (1, "extract", "n_interactions", float(counts["n_interactions"])),
+        (2, "encode", "n_users", float(counts["n_users"])),
+        (2, "encode", "n_items", float(counts["n_items"])),
+        (3, "split", "n_train", float(counts["n_interactions"] - counts["n_test"])),
+        (3, "split", "n_test", float(counts["n_test"])),
         (4, "fit", "rank", float(model.rank)),
-        (4, "fit", "n_user_factors", float(n_uf)),
-        (4, "fit", "n_item_factors", float(n_if)),
+        (4, "fit", "n_user_factors", float(len(st["U"]))),
+        (4, "fit", "n_item_factors", float(len(st["V"]))),
         (5, "serve", "n_rec_rows", float(srv.n_rows)),
         (5, "serve", "rank_contract_ok", 1.0 if srv.contract_ok else 0.0),
-        (6, "diversify", "n_mmr_rows", float(n_mmr)),
+        (6, "diversify", "n_mmr_rows", float(want.n)),
         (6, "diversify", "picks_from_pool_ok", 1.0 if off_pool == 0 else 0.0),
         (7, "evaluate", "n_eval_users", float(m.n_eval_users)),
         (7, "evaluate", "metrics_in_01_ok", 1.0 if metrics_ok else 0.0),
         (8, "publish", "n_published", float(got.n)),
         (8, "publish", "roundtrip_checksum_ok", 1.0 if publish_ok else 0.0),
     ]
+    # over a pyarrow Table the frame plans as a LocalTableScan: building
+    # and collecting it submit no job (a Python list would cost one)
+    ords, stages, metrics, values = zip(*rows)
+    table = pa.table(
+        {
+            "stage_ord": pa.array(ords, type=pa.int64()),
+            "stage": pa.array(stages, type=pa.string()),
+            "metric": pa.array(metrics, type=pa.string()),
+            "value_num": pa.array(values, type=pa.float64()),
+        }
+    )
     return spark.createDataFrame(
-        rows, schema="stage_ord bigint, stage string, metric string, value_num double"
+        table, schema="stage_ord bigint, stage string, metric string, value_num double"
     )
 
 
@@ -3462,7 +3496,7 @@ def _backtest_als_artifacts(spark: SparkSession, sf_dir: str) -> dict:
     pre, post = _backtest_pre_post(spark)
     pre = pre.cache()  # feeds encode x2, train, novelty anti-join, sizing
     # one quantile pass for both dictionaries (r15 opt; see _encode_bounds_pair)
-    ub, ib = _encode_bounds_pair(pre, "u", "i")
+    ub, ib, _ = _encode_bounds_pair(pre, "u", "i")
     users = _encode(pre, "u", "user_idx", bounds=ub)
     items = _encode(pre, "i", "item_idx", bounds=ib)
     train = (

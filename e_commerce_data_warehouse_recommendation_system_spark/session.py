@@ -6,10 +6,11 @@ single-threaded pandas tasks against MySQL + PostgreSQL
 single Spark driver whose planner (Catalyst + AQE) subsumes both RDBMS
 optimizers and the reference's hand-coded batching (SURVEY.md SS4.1).
 
-Scale posture: these settings target local[32] testing, but every knob is
-chosen to generalize to a real cluster — AQE for runtime re-planning and skew
-joins, shuffle partitions sized to parallelism (overridable via env), Arrow
-for any Python-boundary crossing.
+Scale posture: every setting is chosen to generalize from local mode to a
+real cluster — AQE for runtime re-planning, partition coalescing and skew
+joins, shuffle partitions set to the session's ``defaultParallelism`` (its
+cores: N for ``local[N]``, the executor cores on a cluster), Arrow for any
+Python-boundary crossing.
 """
 
 from __future__ import annotations
@@ -17,8 +18,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
 
 #: Runtime-settable confs we want regardless of who built the session.
 #: spark.sql.session.timeZone=UTC is load-bearing for oracle parity: parquet
@@ -29,7 +28,6 @@ RUNTIME_CONF = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.shuffle.partitions": str(DEFAULT_SHUFFLE_PARTITIONS),
     # LEGACY-LAYOUT GUARD ONLY: older testdata generations stored events.ts as
     # TIMESTAMP(NANOS), which Spark 4 refuses (PARQUET_TYPE_ILLEGAL) unless
     # read as raw longs; readers.normalize_event_ts then rebuilds the
@@ -102,10 +100,24 @@ def _silence_bounded_window_warnings(spark: SparkSession) -> None:
         pass  # non-log4j2 host JVM: warnings stay, everything else works
 
 
+def _size_shuffle_partitions(spark: SparkSession) -> None:
+    """Set ``spark.sql.shuffle.partitions`` to the session's
+    ``defaultParallelism``: one shuffle partition per core. At the
+    engine's table sizes each task's fixed scheduling cost outweighs its
+    work, so a wider fan-out only adds tasks; AQE still coalesces small
+    partitions and splits skewed ones at run time. The one place the
+    value is set: ``get_spark`` and ``tune`` both call it."""
+    try:
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+        )
+    except Exception:
+        pass  # conf locked by the host session; results do not depend on it
+
+
 def get_spark(
     app_name: str = "ecomdw-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
@@ -123,14 +135,13 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     conf = dict(RUNTIME_CONF)
-    if shuffle_partitions is not None:
-        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _size_shuffle_partitions(spark)
     _silence_bounded_window_warnings(spark)
     return spark
 
@@ -140,13 +151,15 @@ def tune(spark: SparkSession) -> SparkSession:
 
     The verify driver constructs its own SparkSession and hands it to
     ``__spark_entry__``; this makes query results independent of that
-    session's defaults (timezone above all).
+    session's defaults (timezone above all), and sizes its shuffle
+    partitions to its cores whatever the session had set.
     """
     for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:
             pass  # conf locked by the host session; results only need the TZ ones
+    _size_shuffle_partitions(spark)
     ship_package(spark)
     _silence_bounded_window_warnings(spark)
     return spark

@@ -48,7 +48,7 @@ def main() -> None:
     from e_commerce_data_warehouse_recommendation_system_spark import registry
     from e_commerce_data_warehouse_recommendation_system_spark.session import get_spark
 
-    spark = get_spark(master="local[4]", shuffle_partitions=4)
+    spark = get_spark(master="local[4]")
     qs = registry.queries()
     out = [
         "# Physical plans (generated by scripts/dump_plans.py at sf0.001)",

@@ -12,9 +12,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 def spark():
     from e_commerce_data_warehouse_recommendation_system_spark.session import get_spark
 
-    # Small local session: parity tests run on tiny frames; 4 shuffle
-    # partitions keeps per-test latency down.
-    return get_spark(app_name="ecomdw-tests", master="local[4]", shuffle_partitions=4)
+    # Small local session: parity tests run on tiny frames; local[4] also
+    # sizes shuffles to 4 partitions, which keeps per-test latency down.
+    return get_spark(app_name="ecomdw-tests", master="local[4]")
 
 
 SF0001 = "/root/testdata/sf0.001"
