@@ -571,7 +571,6 @@ def etl_pipeline_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    prepare(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="ecomdw_etl_")
     try:
         counts = run_pipeline(spark, sf_dir, tmp)
@@ -582,28 +581,57 @@ def etl_pipeline_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, int]:
-    """Extract -> transform -> load, end to end (reference DAG
-    e_commerce_dw_dag.py:38-94). Dims first, then the fact — mirroring the
-    reference's task-group ordering; each write is an independent Spark job
-    so the scheduler overlaps them like Airflow's parallel dim tasks (H7).
-    The fact is partitioned by order year: downstream time-sliced queries
-    get partition pruning, the 100 TB must-have the reference lacks.
-    Returns row counts per table (the reference's post-load smoke check,
-    README.md:54-57)."""
-    counts: dict[str, int] = {}
-    for name, builder in DIM_BUILDERS.items():
-        df = builder(spark, sf_dir)
-        write_table(df, f"{out_dir}/{name}")
-        counts[name] = spark.read.parquet(f"{out_dir}/{name}").count()
+def _fact_for_load(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``fact_sales`` as loaded: plus its ``order_year`` partition column."""
     fact = fact_sales(spark, sf_dir).withColumn("order_year", F.year("order_date_key"))
     # sort within partitions by date so parquet row-group min/max stats make
     # day-level predicates skip row groups inside each year partition — the
     # second pruning tier after directory-level partition pruning
-    fact = fact.sortWithinPartitions("order_date_key")
-    write_table(fact, f"{out_dir}/fact_sales", partition_by=["order_year"])
-    counts["fact_sales"] = spark.read.parquet(f"{out_dir}/fact_sales").count()
-    return counts
+    return fact.sortWithinPartitions("order_date_key")
+
+
+def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, int]:
+    """Extract -> transform -> load, end to end (reference DAG
+    e_commerce_dw_dag.py:38-94).
+
+    Every dim and the fact is one task: build, write, read back and count
+    (the reference's post-load smoke check, README.md:54-57). The tasks
+    are independent, so they run at once on a driver thread pool,
+    one thread per table, like Airflow's parallel dim tasks (H7): at
+    warehouse sizes each table's jobs are mostly fixed per-job latency,
+    and the scheduler fills the cores one table leaves idle with another
+    table's tasks. Each task inherits the caller's job group and local
+    properties (``inheritable_thread_target``), so its jobs can be traced
+    and cancelled with the caller's.
+
+    The fact is partitioned by order year: downstream time-sliced queries
+    get partition pruning, the 100 TB must-have the reference lacks.
+    Returns row counts per table, dims in ``DIM_BUILDERS`` order, then
+    ``fact_sales``; a table that fails raises here."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    # settle the view memo and the package shipping on this thread, before
+    # the builders (which call prepare again) run concurrently
+    prepare(spark, sf_dir)
+    tables = [(name, builder, None) for name, builder in DIM_BUILDERS.items()]
+    tables.append(("fact_sales", _fact_for_load, ["order_year"]))
+
+    def load(builder, path: str, partition_by: list[str] | None) -> int:
+        write_table(builder(spark, sf_dir), path, partition_by=partition_by)
+        return spark.read.parquet(path).count()
+
+    with ThreadPoolExecutor(max_workers=len(tables)) as pool:
+        # one wrapper per task: each clones the caller's local properties,
+        # so a job group one task sets never leaks into another
+        futures = {
+            name: pool.submit(
+                inheritable_thread_target(spark)(load), builder, f"{out_dir}/{name}", part
+            )
+            for name, builder, part in tables
+        }
+        return {name: f.result() for name, f in futures.items()}
 
 
 # --------------------------------------------------------------------------

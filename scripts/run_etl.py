@@ -5,10 +5,11 @@ scheduled invocation to:
 
     python scripts/run_etl.py --out /path/to/warehouse [--sf-dir ...]
 
-One process, one Spark job graph: dims build first, then the partitioned
-fact (mirroring the reference's task-group ordering), each materialized
-to parquet under --out; the post-load row-count smoke check (the
-reference's README.md:54-57 verification step) prints as the result.
+One process: the four dims and the order-year-partitioned fact build
+concurrently, one driver thread per table (like the reference's parallel
+dim tasks), each materialized to parquet under --out and read back for
+the post-load row-count smoke check (the reference's README.md:54-57
+verification step), which prints as the result.
 Scheduling is the orchestrator's job (cron/Airflow/dbt — this script IS
 the task body); incremental loads run through the streaming ingest and
 partition-scoped upsert instead of rebuilding (streaming/queries.py).

@@ -100,6 +100,30 @@ def test_upsert_path_parquet_fallback(spark, tmp_path):
     assert got == {(1, "a"), (2, "B"), (3, "c")}
 
 
+def test_upsert_path_keeps_partitioned_layout(spark, tmp_path):
+    """An upsert into a ``partitionBy`` target rewrites it partitioned the
+    same way, so partition pruning still works after the merge."""
+    import os
+
+    from e_commerce_data_warehouse_recommendation_system_spark.sources.writers import (
+        upsert_path,
+    )
+
+    target = str(tmp_path / "tgt")
+    schema = "k int, v string, p int"
+    old = spark.createDataFrame([(1, "a", 10), (2, "b", 10), (3, "c", 20)], schema)
+    old.write.partitionBy("p").parquet(target)
+    new = spark.createDataFrame([(2, "B", 10), (4, "d", 30)], schema)
+    upsert_path(spark, target, new, ["k"])
+
+    dirs = sorted(d for d in os.listdir(target) if not d.startswith(("_", ".")))
+    assert dirs == ["p=10", "p=20", "p=30"]
+    got = {tuple(r) for r in spark.read.parquet(target).collect()}
+    assert got == {(1, "a", 10), (2, "B", 10), (3, "c", 20), (4, "d", 30)}
+    pruned = spark.read.parquet(target).filter("p = 20").collect()
+    assert [tuple(r) for r in pruned] == [(3, "c", 20)]
+
+
 def test_avro_roundtrip_when_available(spark, tmp_path):
     """Avro interchange seam: spark-avro is an EXTERNAL module (not bundled
     with pip pyspark), so this round-trips only when the jar is deployed —
