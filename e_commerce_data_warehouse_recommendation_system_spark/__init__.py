@@ -19,7 +19,8 @@ semantics Spark-first:
 - ``streaming``  — Structured Streaming incremental ingest of ``events``
 
 Every user-visible query is registered in ``registry`` so the driver contract
-(``__spark_entry__.py``) and the benchmark (``bench.py``) share one inventory.
+(``__spark_entry__.py``) and the benchmark's oracles (``perfbench/``) share one
+inventory.
 """
 
 from e_commerce_data_warehouse_recommendation_system_spark.session import get_spark, tune

@@ -89,10 +89,7 @@ from e_commerce_data_warehouse_recommendation_system_spark.operators.text import
     two_phase_md5_rank,
     two_phase_tape_offsets,
 )
-from e_commerce_data_warehouse_recommendation_system_spark.registry import (
-    bench_workload,
-    component,
-)
+from e_commerce_data_warehouse_recommendation_system_spark.registry import component
 from e_commerce_data_warehouse_recommendation_system_spark.sources.readers import prepare
 
 _STAGES = [
@@ -334,28 +331,14 @@ def _doc_stats(df: DataFrame, prefix: str) -> DataFrame:
         ("docs_checksum", "num"),
     ],
 )
-def text_curation_pipeline(
-    spark: SparkSession, sf_dir: str, stage_times: dict | None = None
-) -> DataFrame:
+def text_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """See the module docstring: the 7-stage chained curation pipeline with
     per-stage conservation columns. Each stage frame is localCheckpointed
     so span mining, the funnel, and the BPE fold each run exactly once even
-    though both the next stage and the summary aggregates consume them.
+    though both the next stage and the summary aggregates consume them."""
 
-    ``stage_times`` (r13 verdict #3 — the slot's three-round bench rise
-    needed per-stage attribution): pass a dict and each stage's eager
-    materialization wall-seconds are recorded into it (the stage's upstream
-    compute executes AT its checkpoint, so the timing attributes correctly);
-    stage 7 + the summary land in the caller's final action and are the
-    remainder vs total. Driven by scripts/probe_slot.py."""
-    import time as _time
-
-    def _stage(df: DataFrame, name: str) -> DataFrame:
-        t0 = _time.perf_counter()
-        out = df.localCheckpoint(eager=True)
-        if stage_times is not None:
-            stage_times[name] = round(_time.perf_counter() - t0, 3)
-        return out
+    def _stage(df: DataFrame) -> DataFrame:
+        return df.localCheckpoint(eager=True)
 
     prepare(spark, sf_dir)
     k = SPAN_SHINGLE_K
@@ -378,8 +361,7 @@ def text_curation_pipeline(
             & (L.cast("double") / T).between(*FUNNEL_MEAN_TOKLEN)
             & ((SW.cast("double") / T) >= FUNNEL_MIN_STOPWORD_FRAC)
             & (F.col("lang") == FUNNEL_LANG)
-        ),
-        "s1_funnel",
+        )
     )
 
     # -- stage 2: exact dedup, keep-first by content hash
@@ -388,7 +370,7 @@ def text_curation_pipeline(
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    s2 = _stage(s1.join(keepers2, "doc_id", "left_semi"), "s2_exact_dedup")
+    s2 = _stage(s1.join(keepers2, "doc_id", "left_semi"))
 
     # -- stage 3: shared-span excision among survivors (keep-first: the
     # LATER doc of each colliding pair loses the duplicated range)
@@ -455,7 +437,7 @@ def text_curation_pipeline(
         )
         .filter(F.size("t") > 0)
     )
-    s3 = _stage(s3, "s3_span_excision")
+    s3 = _stage(s3)
 
     # -- stage 4: 13-gram decontamination on the POST-EXCISION sequences
     sh4 = s3.select(
@@ -482,7 +464,7 @@ def text_curation_pipeline(
     contaminated = (
         spans4.filter(F.col("span") >= DECONTAM_SPAN_TOKENS).select("doc_id").distinct()
     )
-    s4 = _stage(s3.join(contaminated, "doc_id", "left_anti"), "s4_decontaminate")
+    s4 = _stage(s3.join(contaminated, "doc_id", "left_anti"))
 
     # -- stage 5: temperature-mixture downsample (alpha = 0.5, exact
     # integer micro-units; deterministic md5-rank selection within source)
@@ -517,7 +499,7 @@ def text_curation_pipeline(
         .filter(F.col("rk") <= F.least("n_docs", "target_docs"))
         .select("doc_id", "lang", "source", "t")
     )
-    s5 = _stage(s5, "s5_mixture_downsample")
+    s5 = _stage(s5)
 
     # -- stage 6: BPE encode (fold on the survivor corpus's DISTINCT words)
     tw = s5.select("doc_id", F.explode("t").alias("w")).filter(F.col("w") != "")
@@ -532,7 +514,7 @@ def text_curation_pipeline(
         .agg(F.sum("n_tokens").cast("long").alias("n_bpe_tokens"))
         .join(s5.select("doc_id", "lang"), "doc_id")
     )
-    s6 = _stage(s6, "s6_bpe_encode")
+    s6 = _stage(s6)
 
     # -- stage 7: fixed-budget per-language packing on the real BPE lengths
     # (two-phase tape prefix sum + integer-div seq_id, same plan as
@@ -778,47 +760,3 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema="rank bigint, left_sym string, right_sym string, "
         "merged string, support bigint",
     )
-
-
-# --------------------------------------------------------------------------
-# Bench slots (round 11): the capstone measured 16 s at sf0.1 during the
-# round-10 oracle sweeps — heavier than every then-current bench slot — and
-# the streaming ingest was likewise unbenched, so a regression in either
-# was invisible to BENCH_rN. Warmups pay the documents scan / streaming
-# bootstrap off the clock (the warmed-slot protocol).
-# --------------------------------------------------------------------------
-
-
-def _warm_curation(spark: SparkSession, sf_dir: str) -> None:
-    prepare(spark, sf_dir)
-    spark.table("documents").count()
-
-
-@bench_workload("text_curation_pipeline", warmup=_warm_curation)
-def _bench_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench the 7-stage curation capstone end to end (funnel -> dedup ->
-    span excision -> decontamination -> two-phase mixture downsample ->
-    BPE encode -> two-phase packing)."""
-    return text_curation_pipeline(spark, sf_dir)
-
-
-def _warm_stream_curation(spark: SparkSession, sf_dir: str) -> None:
-    """Pay the per-session streaming engine init + shard-file staging off
-    the clock at the smallest SF (bench.py's global streaming warm covers
-    the engine; this covers this query's own fixture staging)."""
-    from e_commerce_data_warehouse_recommendation_system_spark.streaming.queries import (
-        stream_curation_ingest,
-    )
-
-    stream_curation_ingest(spark, "/root/testdata/sf0.001").count()
-
-
-@bench_workload("stream_curation_ingest", warmup=_warm_stream_curation)
-def _bench_stream_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench the streaming curation ingest (3 micro-batches through the C4
-    funnel into the min-wins content-hash dedup upsert + per-shard audits)."""
-    from e_commerce_data_warehouse_recommendation_system_spark.streaming.queries import (
-        stream_curation_ingest,
-    )
-
-    return stream_curation_ingest(spark, sf_dir)

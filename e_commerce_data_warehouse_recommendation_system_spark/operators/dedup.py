@@ -32,7 +32,6 @@ from e_commerce_data_warehouse_recommendation_system_spark.operators.similarity 
 )
 from e_commerce_data_warehouse_recommendation_system_spark.operators.text import tokens
 from e_commerce_data_warehouse_recommendation_system_spark.registry import (
-    bench_workload,
     component,
     register,
 )
@@ -101,7 +100,6 @@ _SQL_SHINGLES = """
     SELECT md5(text) AS text_hash, MIN(doc_id) AS keeper_doc_id, COUNT(*) AS n_copies
     FROM documents GROUP BY md5(text)
     """,
-    bench=True,
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: group by content hash, keep the smallest doc_id
@@ -226,7 +224,7 @@ def _sql_minhash_lsh() -> str:
     """
 
 
-@register("dedup_minhash_lsh", oracle=_sql_minhash_lsh(), bench=True)
+@register("dedup_minhash_lsh", oracle=_sql_minhash_lsh())
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + banded LSH near-dup detection, fully deterministic and
     oracle-checkable (md5-based permutations).
@@ -2039,23 +2037,6 @@ def text_span_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("max_span_tokens", F.lit(0)) >= DECONTAM_SPAN_TOKENS
         ).alias("contaminated"),
     )
-
-
-def _warm_shared_spans(spark: SparkSession, sf_dir: str) -> None:
-    """Off-clock warmup: one full span-mining run pays the documents scan,
-    shingle codegen, and shuffle-file creation — the warmed-slot protocol
-    (r9: unwarmed iterative slots measured the cache build, not the plan)."""
-    prepare(spark, sf_dir)
-    dedup_shared_spans(spark, sf_dir).count()
-
-
-@bench_workload("dedup_shared_spans", warmup=_warm_shared_spans)
-def _bench_shared_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench exact-substring shared-span mining (positional shingles ->
-    DF-capped index -> pair join -> diagonal islands) — the heaviest
-    previously-unbenched dedup operator (VERDICT r9 item 3); tracks the
-    pair-join fan-out posture."""
-    return dedup_shared_spans(spark, sf_dir)
 
 
 # --------------------------------------------------------------------------

@@ -287,7 +287,7 @@ def digest_sql(op: str, inner_sql: str, cols: tuple[tuple[str, str], ...]) -> st
 # --------------------------------------------------------------------------
 
 
-def register_suite(name: str, comps: dict[str, Component], bench: bool = False) -> None:
+def register_suite(name: str, comps: dict[str, Component]) -> None:
     """Register ONE driver-visible query + oracle covering every component.
 
     Components run sequentially inside the suite (they are independent
@@ -312,4 +312,4 @@ def register_suite(name: str, comps: dict[str, Component], bench: bool = False) 
     oracle = "\nUNION ALL\n".join(
         digest_sql(cname, comp.oracle, comp.cols) for cname, comp in items
     )
-    register(name, oracle=oracle, bench=bench)(fn)
+    register(name, oracle=oracle)(fn)

@@ -473,7 +473,6 @@ def asof_join(
 
 @register(
     "j_asof_event_order",
-    bench=True,
     # the ASOF inequality runs on epoch_us of both clocks: Spark compares
     # ns->us-truncated timestamps, so the oracle must too (a TIMESTAMP_NS-
     # reading DuckDB build would otherwise resolve sub-microsecond

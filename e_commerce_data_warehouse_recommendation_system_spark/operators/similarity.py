@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from e_commerce_data_warehouse_recommendation_system_spark.registry import (
-    bench_workload,
     component,
     register,
 )
@@ -167,7 +166,6 @@ def cosine_pairs(spark: SparkSession, threshold: float) -> DataFrame:
     SELECT query_id, neighbor_id, cosine, CAST(rnk AS INT) AS rnk
     FROM scored WHERE rnk <= {TOPK}
     """,
-    bench=True,
 )
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k: deterministic query subset x full corpus,
@@ -273,9 +271,8 @@ def sim_l2_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Session-memoized ANN indexes, keyed (kind, SparkContext id, sf_dir).
 #: Index CONSTRUCTION (KMeans training / bucket membership) is the
 #: amortized-offline step of any ANN system — at 100 TB the index is built
-#: at ingest and re-used by every query batch, so the bench times the query
-#: path against a built index (warmup builds it off the clock), exactly
-#: like rec_als_fit vs rec_als_serve_*.
+#: at ingest and re-used by every query batch, so each query runs against
+#: a built index, exactly like the ALS model memo vs its serving paths.
 _ANN_INDEX_CACHE: dict = {}
 
 
@@ -317,12 +314,6 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> dict:
     return _ANN_INDEX_CACHE[key]
 
 
-def _warm_ivf(spark: SparkSession, sf_dir: str) -> None:
-    prepare(spark, sf_dir)
-    _ivf_index(spark, sf_dir)
-
-
-@bench_workload("sim_ann_ivf", warmup=_warm_ivf)
 def sim_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via IVF (inverted-file) cells — the trained-partitioning scale
     path next to the LSH variant: KMeans(seed=42) centroids, every vector
@@ -580,12 +571,6 @@ def _lsh_index(spark: SparkSession, sf_dir: str) -> dict:
     return _ANN_INDEX_CACHE[key]
 
 
-def _warm_lsh(spark: SparkSession, sf_dir: str) -> None:
-    prepare(spark, sf_dir)
-    _lsh_index(spark, sf_dir)
-
-
-@bench_workload("sim_ann_lsh", warmup=_warm_lsh)
 def sim_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via MULTI-TABLE sign-random-projection LSH — the scale path.
 
@@ -604,8 +589,8 @@ def sim_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the candidate join shuffles on (table, bucket), never the O(n^2) pair
     space; recall tunes via tables x planes. The membership table is the
     INDEX — built once per (session, data) and memoized; the query path
-    below (bucket-collision candidates + exact re-rank) is what the bench
-    times.
+    below (bucket-collision candidates + exact re-rank) is the serving
+    cost.
     """
     prepare(spark, sf_dir)
     idx = _lsh_index(spark, sf_dir)
@@ -1297,19 +1282,6 @@ def sim_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(rows, schema="metric string, value_num double")
 
 
-def _warm_pq(spark: SparkSession, sf_dir: str) -> None:
-    """Fit/memoize the PQ codebooks OFF the clock, so the bench slot times
-    the encode path (the per-ingest recurring cost), not the one-time fit."""
-    _pq_codebooks(spark, sf_dir)
-
-
-@bench_workload("sim_pq_encode", warmup=_warm_pq)
-def _bench_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench the shuffle-free PQ encode over the full embedding corpus."""
-    prepare(spark, sf_dir)
-    return pq_encode(spark, sf_dir)
-
-
 # --------------------------------------------------------------------------
 # PQ-ADC search: asymmetric-distance shortlist + exact rerank (IVF-PQ serving)
 # --------------------------------------------------------------------------
@@ -1772,21 +1744,6 @@ def sim_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mean_cand",
         F.abs(F.col("mean_ref") - F.col("mean_cand")).alias("abs_shift"),
     )
-
-
-def _warm_semdedup(spark: SparkSession, sf_dir: str) -> None:
-    """Fit/memoize the shared k-means model OFF the clock so the SemDeDup
-    slot times the prune (pair generation + cosine + purity recheck), not
-    the clustering it shares with two other components."""
-    _kmeans_model(spark, sf_dir)
-
-
-@bench_workload("sim_semdedup_prune", warmup=_warm_semdedup)
-def bench_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Times the SemDeDup prune at the bench SF on the warmed fit — the
-    cell-bounded pair space is the algorithm's scale claim, so its cost
-    curve is worth a standing number next to the MinHash-LSH slot."""
-    return sim_semantic_dedup(spark, sf_dir)
 
 
 # --------------------------------------------------------------------------

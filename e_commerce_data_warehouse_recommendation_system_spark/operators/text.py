@@ -2224,25 +2224,6 @@ def text_group_holdout_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Bench workload: BM25 retrieval (query path timed; shared corpus scan)
-# --------------------------------------------------------------------------
-
-from e_commerce_data_warehouse_recommendation_system_spark.registry import (  # noqa: E402
-    bench_workload,
-)
-
-
-@bench_workload("text_bm25_topk")
-def bench_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Times the full BM25 retrieval (postings build + scoring + top-k) at
-    the bench SF — the ranked-search cost a curation/search layer pays per
-    query batch. No warmup stage: unlike the ANN paths there is no
-    memoized index here by design (the component documents the
-    materialized-postings posture for repeated querying at 100 TB)."""
-    return text_search_bm25(spark, sf_dir)
-
-
-# --------------------------------------------------------------------------
 # Content-safety blocklist filter (C4's "bad words" rule, the mechanism)
 # --------------------------------------------------------------------------
 

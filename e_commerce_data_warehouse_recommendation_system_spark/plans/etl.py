@@ -339,7 +339,6 @@ def dim_date(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     LEFT JOIN lineitem ON o_orderkey = l_orderkey
     """,
-    bench=True,
 )
 def fact_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     """fact_orders analog (reference: dags/transform_fact_orders.py:15-56).
@@ -469,7 +468,6 @@ DIM_BUILDERS = {
 
 @register(
     "etl_scd2_customer_priority",
-    bench=True,
     oracle="""
     WITH feed AS (
       SELECT o_custkey, o_orderdate,

@@ -82,7 +82,6 @@ def _davg_exact(expr: str) -> str:
     WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
     GROUP BY l_returnflag, l_linestatus
     """,
-    bench=True,
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare(spark, sf_dir)
@@ -121,7 +120,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN region   ON n_regionkey = r_regionkey
     GROUP BY r_name
     """,
-    bench=True,
 )
 def q3_revenue_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare(spark, sf_dir)
@@ -162,7 +160,6 @@ def q3_revenue_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY rev DESC, c_custkey
     LIMIT 10
     """,
-    bench=True,
 )
 def q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare(spark, sf_dir)
@@ -199,7 +196,6 @@ def q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN region   ON n_regionkey = r_regionkey
     GROUP BY ROLLUP(r_name, n_name)
     """,
-    bench=True,
 )
 def q_revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare(spark, sf_dir)
@@ -498,7 +494,6 @@ _SESSIONIZE_ORACLE = f"""
 
 @register(
     "q_sessionize",
-    bench=True,
     oracle=_SESSIONIZE_ORACLE,
 )
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -608,7 +603,6 @@ def session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY 1, 2
     """,
-    bench=True,
 )
 def q_event_daily_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare(spark, sf_dir)

@@ -4,8 +4,8 @@ Five graph operators grew inside the recommender module by accretion
 (connected components lives with the dedup family in operators/dedup.py);
 this module holds the other four — PageRank, bounded-BFS reachability,
 triangle counting, and k-core decomposition — pure move from
-recommend/queries.py in round 10, registry names unchanged (queries.py
-re-exports every public symbol, so existing imports keep working).
+recommend/queries.py in round 10, registry names unchanged (``registry``
+imports this module right after ``recommend.queries``).
 
 All four share the same co-purchase edge construction (distinct
 (l_orderkey, l_partkey) baskets self-joined per order — the reference's
@@ -22,10 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from e_commerce_data_warehouse_recommendation_system_spark.registry import (
-    bench_workload,
-    component,
-)
+from e_commerce_data_warehouse_recommendation_system_spark.registry import component
 from e_commerce_data_warehouse_recommendation_system_spark.sources.readers import prepare
 
 # --------------------------------------------------------------------------
@@ -284,25 +281,6 @@ def graph_reach_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _warm_bfs(spark: SparkSession, sf_dir: str) -> None:
-    """Off-clock warmup: one full BFS run populates the repartitioned edge
-    cache (Spark's CacheManager matches the identical logical plan on the
-    timed runs) and triggers the per-level codegen — without it the first
-    timed iteration measured the cache build, not the workload (r8 spread
-    14.9: 5.69 s cold vs 0.38 s warm on identical plans)."""
-    prepare(spark, sf_dir)
-    graph_reach_bfs(spark, sf_dir).count()
-
-
-@bench_workload("graph_reach_bfs", warmup=_warm_bfs)
-def _bench_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench the 3-level BFS (per-level expand/dedup/prune joins) over the
-    warmed edge-cache layout — the iterative-join pattern's serving cost,
-    with the one-time edge build + repartition off the clock (the same
-    index-off-clock contract as the ANN and ALS-serving slots)."""
-    return graph_reach_bfs(spark, sf_dir)
-
-
 # --------------------------------------------------------------------------
 # Triangle counting / local clustering over the co-purchase graph
 # --------------------------------------------------------------------------
@@ -482,27 +460,6 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top.withColumn("rnk", F.row_number().over(w).cast("int")).select(
         "part", "degree", "n_triangles", "clustering_micro", "rnk"
     )
-
-
-def _warm_triangles(spark: SparkSession, sf_dir: str) -> None:
-    """Off-clock warmup: one full run populates the canonical-edge /
-    degree / oriented-edge caches (CacheManager matches the identical
-    logical plans on the timed runs), so the slot times the steady-state
-    counting work — the same index-off-clock contract as the BFS slot
-    (without it the first timed iteration paid the cache builds: r9 idle
-    spread 2.28 on identical plans)."""
-    prepare(spark, sf_dir)
-    graph_triangle_count(spark, sf_dir).count()
-
-
-@bench_workload("graph_triangle_count", warmup=_warm_triangles)
-def _bench_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench the degree-oriented triangle count (adjacency build + the
-    two edge joins + apex intersection + corner rollup) over the warmed
-    edge/degree caches — the heaviest graph slot; the closure-strategy
-    rework (wedge join → array intersection) is what this slot's
-    trendline tracks."""
-    return graph_triangle_count(spark, sf_dir)
 
 
 # --------------------------------------------------------------------------
@@ -765,22 +722,3 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(converged).alias("converged"),
         )
     )
-
-
-def _warm_kcore(spark: SparkSession, sf_dir: str) -> None:
-    """Off-clock warmup: one full peel run pays the parquet scan, the edge
-    materialization, and the per-round codegen (the kcore loop rebuilds its
-    localCheckpoints per call, so the warm run buys page cache + codegen,
-    not cached frames) — the warmed-slot protocol every r9 bench slot
-    follows."""
-    prepare(spark, sf_dir)
-    graph_kcore(spark, sf_dir).count()
-
-
-@bench_workload("graph_kcore", warmup=_warm_kcore)
-def _bench_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench the level-synchronous k-core peel (per-round semi-join edge
-    reductions + degree rollups + localCheckpoint truncation, data-derived
-    p5 threshold) — the heaviest previously-unbenched operator (VERDICT
-    r9 item 3); a regression in the peel-loop plan shape lands here."""
-    return graph_kcore(spark, sf_dir)

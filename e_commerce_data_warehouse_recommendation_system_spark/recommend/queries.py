@@ -62,7 +62,6 @@ from e_commerce_data_warehouse_recommendation_system_spark.operators.relational 
     surrogate_key,
 )
 from e_commerce_data_warehouse_recommendation_system_spark.registry import (
-    bench_workload,
     component,
     register,
 )
@@ -490,71 +489,6 @@ def _topk_recs(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Bench workloads: the r3 rec_als_topk bench slot timed fit + both serving
-# paths + contract aggregations in one number. These split it so BENCH
-# measures one workload each; the correctness digest (rec_als_topk) stays a
-# driver slot but is no longer what the benchmark times.
-# --------------------------------------------------------------------------
-
-
-def _warm_model(spark: SparkSession, sf_dir: str) -> None:
-    """Off-the-clock warmup: make sure the fitted model + dictionaries are
-    in the artifact cache so serving benchmarks time serving only."""
-    prepare(spark, sf_dir)
-    _artifacts(spark, sf_dir)
-
-
-@bench_workload("rec_als_fit", warmup=lambda spark, sf_dir: prepare(spark, sf_dir))
-def rec_als_fit_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M3 alone: encode interactions + fit implicit ALS, cold (deliberately
-    bypasses the artifact cache so the number is a real fit regardless of
-    what ran earlier in the bench session). Returns the item-factor frame —
-    counting it is O(n_items) and adds nothing to the fit cost."""
-    from pyspark.ml.recommendation import ALS
-
-    inter = interactions(spark).cache()
-    # one quantile pass for both dictionaries (r15 opt; see _encode_bounds_pair)
-    ub, ib, _ = _encode_bounds_pair(inter, "user_id", "item_id")
-    users = _encode(inter, "user_id", "user_idx", bounds=ub)
-    items = _encode(inter, "item_id", "item_idx", bounds=ib)
-    train = (
-        inter.join(users, "user_id")
-        .join(items, "item_id")
-        .withColumn("rating", F.lit(1.0))
-        .withColumn("bucket", _split_bucket("user_id", "item_id"))
-        .filter(~F.col("bucket").isin(*_TEST_DIGITS))
-    )
-    als = ALS(
-        rank=RANK,
-        maxIter=MAX_ITER,
-        regParam=REG,
-        alpha=ALPHA,
-        implicitPrefs=True,
-        seed=SEED,
-        userCol="user_idx",
-        itemCol="item_idx",
-        ratingCol="rating",
-        coldStartStrategy="drop",
-    )
-    model = als.fit(train)
-    return model.itemFactors.select("id")
-
-
-@bench_workload("rec_als_serve_all", warmup=_warm_model)
-def rec_als_serve_all_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M4 alone: batch top-k serving for every trained user on an
-    already-fitted model (fit happens in the off-clock warmup)."""
-    return _serve_all(spark, sf_dir)
-
-
-@bench_workload("rec_als_serve_subset", warmup=_warm_model)
-def rec_als_serve_subset_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M5 alone: ``recommendForUserSubset`` for the deterministic every-50th
-    user subset, on an already-fitted model."""
-    return rec_user_topk(spark, sf_dir)
-
-
-# --------------------------------------------------------------------------
 # Registered queries
 # --------------------------------------------------------------------------
 
@@ -674,9 +608,8 @@ def rec_als_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks 1..k, every recommended item inside the catalog dictionary, and
     the subset path covering exactly the trained subset users. Scores are
     algorithm-specific (never hashed); every flag is computed from the real
-    recommendations, so a serving bug flips this row red. Benchmarked via
-    the split rec_als_fit / rec_als_serve_all / rec_als_serve_subset
-    workloads — this digest verifies, it is not what the clock measures."""
+    recommendations, so a serving bug flips this row red. This digest
+    verifies; perfbench's ``recommend`` workload measures the refresh."""
     prepare(spark, sf_dir)
     art = _artifacts(spark, sf_dir)
     recs = _topk_recs(spark, sf_dir)  # memoized + cached in the artifact store
@@ -2010,13 +1943,6 @@ def rec_itemcf_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@bench_workload("rec_itemcf_neighbors")
-def _bench_itemcf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench the itemCF neighbor build end-to-end (pair self-join + window
-    top-K) — the heaviest non-MLlib join the recommender family runs."""
-    return rec_itemcf_neighbors(spark, sf_dir)
-
-
 # --------------------------------------------------------------------------
 # Time-decayed popularity (recency-weighted trending items)
 # --------------------------------------------------------------------------
@@ -2685,14 +2611,6 @@ def rec_useruser_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@bench_workload("rec_useruser_recs", warmup=lambda spark, sf_dir: prepare(spark, sf_dir))
-def _bench_useruser(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench the user-user CF pipeline end-to-end (blockbuster-capped pair
-    self-join + neighbor window + vote join) — the widest non-MLlib join
-    chain the recommender family runs."""
-    return rec_useruser_recs(spark, sf_dir)
-
-
 # --------------------------------------------------------------------------
 # Ranking AUC of the popularity scorer (Mann-Whitney rank-sum, tie-exact)
 # --------------------------------------------------------------------------
@@ -3015,15 +2933,6 @@ def rec_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(
         table, schema="stage_ord bigint, stage string, metric string, value_num double"
     )
-
-
-@bench_workload("rec_pipeline_e2e", warmup=_warm_model)
-def _bench_rec_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench the serving capstone with the ALS fit hoisted off-clock
-    (the warmed-slot protocol): times the chained serve + MMR + eval +
-    publish lineage — the daily DAG's recurring cost once the model
-    exists."""
-    return rec_pipeline_e2e(spark, sf_dir)
 
 
 #: temporal-backtest cutoff: ~2/3 of the order span trains, the rest tests
@@ -3949,8 +3858,7 @@ def rec_backtest_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: reg 0.01 peaks at 1.30 at sf0.1) — the rank-16 model was
 #: capacity-starved as the catalog grew. Rank 16 stays the shipped
 #: default (~10x fewer factor parameters; the serving-cost half is now
-#: MEASURED, not asserted — see the RANK constant's note and the
-#: rec_als_serve_eval_rank16/150 bench pair, round 14);
+#: MEASURED, not asserted — see the RANK constant's note, round 14);
 #: this grid is the recorded evidence for that trade. reg is carried as
 #: integer milli-units (0.01 -> 10) so every emitted column stays
 #: hash-exact.
@@ -4259,8 +4167,8 @@ def _backtest_rank150_artifacts(spark: SparkSession, sf_dir: str) -> dict:
     pre-cutoff training frame, same dictionaries, same pool tail — only
     the factor rank (and the grid-winning reg) differ, so every number
     derived from it is attributable to capacity alone. Shared by the
-    rank-150 leaderboard row, the blend sensitivity grid's 150 arm, and
-    the serving-cost bench workload (ONE extra fit per session/sf)."""
+    rank-150 leaderboard row and the blend sensitivity grid's 150 arm
+    (ONE extra fit per session/sf)."""
     cache_key = (spark.sparkContext.applicationId, sf_dir, "backtest_rank150")
     if cache_key in _CACHE:
         return _CACHE[cache_key]
@@ -4322,7 +4230,7 @@ def rec_backtest_rank150(spark: SparkSession, sf_dir: str) -> DataFrame:
     row, so the rate difference is pure model capacity. The measured rate
     and its warm-popularity lift are recorded in COVERAGE.md and floored
     in pytest (tests/test_round14_ops.py); the serving-cost half of the
-    trade is the rec_als_serve_eval_rank16/rank150 bench pair.
+    trade is recorded at the RANK constant.
 
     Census shape and oracle are the ALS census's verbatim (n_pred == k
     stays structural: the pool tail guarantees >= k unseen candidates).
@@ -4494,60 +4402,3 @@ def rec_backtest_blend_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema="als_rank bigint, rrf_c bigint, n_users bigint, "
         "n_truth bigint, rate_bounded_ok boolean, hits_bounded_ok boolean",
     )
-
-
-def _warm_backtest_rank16(spark: SparkSession, sf_dir: str) -> None:
-    """Off-the-clock warmup: the rank-16 backtest model + dictionaries."""
-    prepare(spark, sf_dir)
-    _backtest_als_artifacts(spark, sf_dir)
-
-
-def _warm_backtest_rank150(spark: SparkSession, sf_dir: str) -> None:
-    """Off-the-clock warmup: the rank-150 twin (fit + dictionaries)."""
-    prepare(spark, sf_dir)
-    _backtest_rank150_artifacts(spark, sf_dir)
-
-
-@bench_workload("rec_als_serve_eval_rank16", warmup=_warm_backtest_rank16)
-def rec_als_serve_eval_rank16_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serving cost of the SHIPPED rank on the warmed backtest model: a
-    fresh ``recommendForUserSubset`` pool build over the eval users (the
-    memoized pool is deliberately bypassed — this times serving, not a
-    cache read). Pairs with rec_als_serve_eval_rank150 so the rank
-    quality/cost trade is two recorded numbers (r13 verdict #4)."""
-    art = _backtest_als_artifacts(spark, sf_dir)
-    return _unseen_ranked_pool(
-        art["model"], art["users"], art["items"], art["pre"], art["subset"], art["k_pool"]
-    ).filter(F.col("rnk") <= TOP_K)
-
-
-@bench_workload("rec_als_serve_eval_rank150", warmup=_warm_backtest_rank150)
-def rec_als_serve_eval_rank150_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serving cost of the grid-winning rank 150 — identical eval users,
-    pool width, and tail as the rank-16 twin; only the factor rank
-    differs, so the seconds delta IS the serving cost of capacity."""
-    art = _backtest_als_artifacts(spark, sf_dir)
-    model150 = _backtest_rank150_artifacts(spark, sf_dir)["model"]
-    return _unseen_ranked_pool(
-        model150, art["users"], art["items"], art["pre"], art["subset"], art["k_pool"]
-    ).filter(F.col("rnk") <= TOP_K)
-
-
-# --------------------------------------------------------------------------
-# Graph analytics moved to recommend/graph.py (round 10); re-exported here
-# so existing imports (tests, scripts, scale probes) keep working.
-# --------------------------------------------------------------------------
-
-from e_commerce_data_warehouse_recommendation_system_spark.recommend.graph import (  # noqa: E402,F401
-    BFS_MAX_HOPS,
-    BFS_SEED_MODULUS,
-    KCORE_ROUNDS,
-    PAGERANK_DAMPING,
-    PAGERANK_ITERS,
-    PAGERANK_TOP_K,
-    graph_kcore,
-    graph_reach_bfs,
-    graph_triangle_count,
-    pagerank,
-    rec_pagerank_items,
-)

@@ -2,8 +2,8 @@
 
 Each operator/query from SURVEY.md SS2 registers itself here with an optional
 DuckDB oracle SQL string. ``__spark_entry__.queries()`` / ``oracle_sql()``
-and ``bench.py`` all read from this registry, so coverage is declared in
-exactly one place.
+and ``perfbench``'s oracles read from this registry, so coverage is declared
+in exactly one place.
 
 Contract notes (see /root/repo/__spark_entry__.py docstring):
 - query callables take ``(spark, sf_dir)`` and return a DataFrame;
@@ -31,43 +31,6 @@ DRIVER_QUERY_BUDGET = 50
 
 _QUERIES: dict[str, QueryFn] = {}
 _ORACLES: dict[str, str] = {}
-_BENCH: list[str] = []
-
-
-@dataclass(frozen=True)
-class BenchWorkload:
-    """A bench-only timed workload (NOT a driver correctness slot).
-
-    ``warmup`` runs OFF the clock before timing — it hoists shared fixed
-    costs (e.g. an ALS fit feeding a serving benchmark) out of the timed
-    region so BENCH_r{N} numbers measure one workload each, not a composite
-    of training + serving + contract verification."""
-
-    fn: QueryFn
-    warmup: Callable[[SparkSession, str], None] | None = None
-
-
-_BENCH_WORKLOADS: dict[str, BenchWorkload] = {}
-
-
-def bench_workload(name: str, warmup: Callable[[SparkSession, str], None] | None = None):
-    """Decorator: register a bench-only workload timed by bench.py.
-
-    Unlike ``register(bench=True)`` these never consume a driver
-    correctness slot — they exist so composite correctness digests (which
-    verify several paths in one query) don't force the benchmark to time
-    verification work alongside the workload it reports on."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        _BENCH_WORKLOADS[name] = BenchWorkload(fn, warmup)
-        return fn
-
-    return deco
-
-
-def bench_workloads() -> dict[str, BenchWorkload]:
-    _load_all()
-    return dict(_BENCH_WORKLOADS)
 
 
 @dataclass(frozen=True)
@@ -84,16 +47,13 @@ class Component:
 _COMPONENTS: dict[str, Component] = {}
 
 
-def register(name: str, oracle: str | None = None, bench: bool = False):
-    """Decorator: register a query, optionally its DuckDB oracle SQL, and
-    whether it is a headline benchmark query."""
+def register(name: str, oracle: str | None = None):
+    """Decorator: register a query and, optionally, its DuckDB oracle SQL."""
 
     def deco(fn: QueryFn) -> QueryFn:
         _QUERIES[name] = fn
         if oracle is not None:
             _ORACLES[name] = oracle
-        if bench:
-            _BENCH.append(name)
         return fn
 
     return deco
@@ -130,11 +90,6 @@ def oracles() -> dict[str, str]:
     return dict(_ORACLES)
 
 
-def bench_queries() -> list[str]:
-    _load_all()
-    return list(_BENCH)
-
-
 _LOADED = False
 
 
@@ -163,6 +118,7 @@ def _load_all() -> None:
     import e_commerce_data_warehouse_recommendation_system_spark.operators.multimodal  # noqa: F401
     import e_commerce_data_warehouse_recommendation_system_spark.operators.quality  # noqa: F401
     import e_commerce_data_warehouse_recommendation_system_spark.recommend.queries  # noqa: F401
+    import e_commerce_data_warehouse_recommendation_system_spark.recommend.graph  # noqa: F401
     import e_commerce_data_warehouse_recommendation_system_spark.streaming.queries  # noqa: F401
     import e_commerce_data_warehouse_recommendation_system_spark.sources.writer_queries  # noqa: F401
     import e_commerce_data_warehouse_recommendation_system_spark.suites  # noqa: F401

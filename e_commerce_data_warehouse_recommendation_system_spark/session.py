@@ -85,11 +85,11 @@ def _silence_bounded_window_warnings(spark: SparkSession) -> None:
     surrogate keys, plans/etl.py dimension builds); each site carries a
     bounded-domain comment. Spark still logs
     ``WindowExec: No Partition Defined`` per plan execution, hundreds of
-    times per bench run, burying real regressions. Filtering the logger (not
+    times per benchmark run, burying real regressions. Filtering the logger (not
     rewriting tiny windows into fake constant partitions) keeps the plans
     honest and the logs readable; a NEW unbounded global window would still
-    be caught by the plan tests and bench timings, which is where a real one
-    shows up anyway."""
+    be caught by the plan tests and perfbench's timings, which is where a
+    real one shows up anyway."""
     try:
         jvm = spark.sparkContext._jvm
         jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
@@ -132,7 +132,6 @@ def get_spark(
         .appName(app_name)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     conf = dict(RUNTIME_CONF)
     if extra_conf:

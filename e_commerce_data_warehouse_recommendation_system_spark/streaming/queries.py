@@ -256,7 +256,6 @@ def _run_foreach_batch_upsert(
     FROM events
     GROUP BY 1, 2
     """,
-    bench=True,
 )
 def stream_event_daily_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.12 headline: watermarked 1-day tumbling-window aggregation,
@@ -2106,41 +2105,6 @@ def stream_fold_in_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(rows, schema="label string, value_num bigint")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _warm_fold_in(spark: SparkSession, sf_dir: str) -> None:
-    """Off-clock warmup: the ALS artifacts (model + dictionaries + cached
-    splits) so the slot times the streaming drain + parity + serve, not
-    the shared training cost."""
-    from e_commerce_data_warehouse_recommendation_system_spark.recommend.queries import (
-        _artifacts,
-    )
-
-    prepare(spark, sf_dir)
-    _artifacts(spark, sf_dir)
-
-
-from e_commerce_data_warehouse_recommendation_system_spark.registry import (  # noqa: E402
-    bench_workload,
-)
-
-
-@bench_workload("rec_fold_in_batch", warmup=_warm_fold_in)
-def _bench_fold_in_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench ONE fold-in pass over the held-out feed on a warmed model —
-    the dominant primitive of the online-serving loop (stream_fold_in_serve
-    runs ~4 of these per drain plus state writes; timing the drain itself
-    would mostly measure that known multiple, so the slot tracks the
-    primitive where a plan regression would actually land)."""
-    from e_commerce_data_warehouse_recommendation_system_spark.recommend.queries import (
-        _artifacts,
-        rec_fold_in_user_factors,
-    )
-
-    art = _artifacts(spark, sf_dir)
-    return rec_fold_in_user_factors(
-        spark, sf_dir, interactions_df=art["test"].select("user_idx", "item_idx")
-    )
 
 
 # --------------------------------------------------------------------------

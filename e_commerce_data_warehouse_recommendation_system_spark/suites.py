@@ -29,6 +29,7 @@ import e_commerce_data_warehouse_recommendation_system_spark.operators.curation 
 import e_commerce_data_warehouse_recommendation_system_spark.operators.multimodal  # noqa: F401
 import e_commerce_data_warehouse_recommendation_system_spark.operators.quality  # noqa: F401
 import e_commerce_data_warehouse_recommendation_system_spark.recommend.queries  # noqa: F401
+import e_commerce_data_warehouse_recommendation_system_spark.recommend.graph  # noqa: F401
 import e_commerce_data_warehouse_recommendation_system_spark.sources.writer_queries  # noqa: F401
 import e_commerce_data_warehouse_recommendation_system_spark.streaming.queries  # noqa: F401
 

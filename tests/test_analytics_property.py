@@ -240,7 +240,7 @@ edge_lists = st.lists(
 
 
 def _duck_pagerank(edges: list, iters: int, damping: float) -> dict:
-    """DuckDB replica of recommend.queries.pagerank: the identical
+    """DuckDB replica of recommend.graph.pagerank: the identical
     iteration telescope as the registered oracle, over an arbitrary edge
     list — nodes = distinct sources, decimal-exact contribution sums."""
     import duckdb
@@ -286,9 +286,7 @@ def test_pagerank_matches_duckdb_on_random_graphs(spark, edges):
     rounding can differ by one last ulp — so pico units compare within
     ±1 (the registered component uses nano resolution, which buries this
     boundary class for real-data ranks)."""
-    from e_commerce_data_warehouse_recommendation_system_spark.recommend.queries import (
-        pagerank,
-    )
+    from e_commerce_data_warehouse_recommendation_system_spark.recommend.graph import pagerank
 
     df = spark.createDataFrame(sorted(set(edges)), "src int, dst int")
     got = {

@@ -107,12 +107,6 @@ def test_suite_digest_rows_match_member_specs():
             )
 
 
-def test_bench_queries_are_registered():
-    qs = registry.queries()
-    missing = [n for n in registry.bench_queries() if n not in qs]
-    assert not missing, f"bench names not in the registry: {missing}"
-
-
 def test_components_have_full_oracles_and_cols():
     bad = [
         n

@@ -4,11 +4,10 @@ Round 14 closed the r13 ADVICE items: versioned foreachBatch replay
 guards now gate on the _SUCCESS marker (a bare directory is a crash
 leftover, not a commit), the staged=True contract inspects the plan ROOT
 (substring matching passed plans built on top of any cached subtree),
-the bench calibration floor is self-maintaining with slowdown clamped
->= 1 (normalized can never exceed raw), the ANN index memo keys on
-applicationId (id() recycling could serve a dead session's frames), and
-the backtest pool-width invariant is verified fit-free at every shipped
-SF so its deliberate hard-raise can only fire on novel data.
+the ANN index memo keys on applicationId (id() recycling could serve a
+dead session's frames), and the backtest pool-width invariant is
+verified fit-free at every shipped SF so its deliberate hard-raise can
+only fire on novel data.
 """
 
 from __future__ import annotations
@@ -102,87 +101,6 @@ def test_staged_assert_rejects_plan_over_cached_subtree(spark):
             two_phase_tape_offsets(on_top, "lang", "n_tokens", staged=True)
     finally:
         cached.unpersist()
-
-
-# --------------------------------------------------------------------------
-# bench calibration: self-maintaining floor, slowdown clamped >= 1 (r13 #1)
-# --------------------------------------------------------------------------
-
-
-def test_bench_floor_and_slowdown_semantics():
-    """The r13 artifact refuted its own reference: a loaded sweep beat the
-    pinned idle floor, slowdown went sub-1, and value_normalized INFLATED
-    raw. The floor must absorb any faster observation and the slowdown can
-    never drop below 1 — normalized <= raw structurally."""
-    import bench
-
-    floor0 = {"single_sec": 0.17, "multi32_sec": 0.71}
-    # the r13 scenario: probes FASTER than the pinned floor
-    fast = {"single_sec": 0.15, "multi32_sec": 0.600}
-    fast2 = {"single_sec": 0.16, "multi32_sec": 0.607}
-    floor, slowdown = bench._floor_and_slowdown(floor0, fast, fast2)
-    assert floor["multi32_sec"] == 0.600  # floor self-maintains downward
-    assert floor["single_sec"] == 0.15
-    assert slowdown >= 1.0  # can never inflate: normalized <= raw
-    # a genuinely loaded sweep still normalizes down
-    slow = {"single_sec": 0.4, "multi32_sec": 1.42}
-    floor2, slowdown2 = bench._floor_and_slowdown(floor, slow, slow)
-    assert floor2 == floor  # slow probes never raise the floor
-    assert slowdown2 == pytest.approx(1.42 / 0.600, rel=0.01)
-    # one anomalous probe cannot over-excuse the sweep: slowdown is the
-    # BEST probe vs floor (r14: cold start read 1.398 while the end probe
-    # read 0.535 — mean semantics would have normalized 1.8x)
-    anomalous = {"single_sec": 0.2, "multi32_sec": 1.398}
-    good = {"single_sec": 0.17, "multi32_sec": 0.535}
-    floor3, slowdown3 = bench._floor_and_slowdown(floor, anomalous, good)
-    assert floor3["multi32_sec"] == 0.535
-    assert slowdown3 == 1.0  # best probe == floor => raw stands
-
-
-def test_bench_load_floor_falls_back_to_pinned(tmp_path):
-    """A fresh checkout (no sidecar) starts from the pinned round-13
-    constants; a sidecar with a persisted floor block wins over them."""
-    import json
-
-    import bench
-
-    assert bench._load_floor(str(tmp_path / "nope.json")) == {
-        "single_sec": bench.CALIB_REF_SINGLE_SEC,
-        "multi32_sec": bench.CALIB_REF_MULTI_SEC,
-    }
-    p = tmp_path / "BENCH_stats.json"
-    p.write_text(
-        json.dumps(
-            {"calibration": {"floor": {"single_sec": 0.15, "multi32_sec": 0.6}}}
-        )
-    )
-    assert bench._load_floor(str(p)) == {"single_sec": 0.15, "multi32_sec": 0.6}
-    # a zero/negative floor (truncated or badly merged sidecar) must fall
-    # back to the pinned constants, not divide-by-zero at sweep end
-    p.write_text(
-        json.dumps({"calibration": {"floor": {"single_sec": 0.15, "multi32_sec": 0}}})
-    )
-    assert bench._load_floor(str(p))["multi32_sec"] == bench.CALIB_REF_MULTI_SEC
-
-
-def _drifted_probe(_=None) -> int:
-    """Stand-in for _calib_work on a numpy whose Generator stream moved —
-    module-level so multiprocessing.Pool can pickle it by reference."""
-    return 123
-
-
-def test_calibrate_flags_probe_value_instead_of_crashing(monkeypatch):
-    """A numpy upgrade that shifts the Generator stream must FLAG the
-    artifact (probe_value_ok=false), never crash the sweep (r13 ADVICE)."""
-    import bench
-
-    monkeypatch.setattr(bench, "_calib_work", _drifted_probe)
-    monkeypatch.setattr(bench, "CALIB_PROCS", 2)  # keep the probe pools tiny
-    c = bench.calibrate()
-    assert c["probe_value_ok"] is False
-    # timing fields still produced (the fake probe rounds to 0.0s — the
-    # point is calibrate() RETURNED instead of raising)
-    assert c["single_sec"] >= 0 and c["multi32_sec"] >= 0
 
 
 # --------------------------------------------------------------------------
@@ -408,66 +326,3 @@ def test_rebalance_chain_preserves_probe_fraction_and_ids(spark):
             if int(r["cell"]) > max1
         ]
         assert len(new2) == 2 * len(r2["hot"])
-
-
-# --------------------------------------------------------------------------
-# bench JVM-side probe: engine-era drift evidence (COVERAGE r14 limitation)
-# --------------------------------------------------------------------------
-
-
-def test_bench_jvm_floor_and_slowdown_semantics():
-    """The Spark probe's floor/slowdown must carry the exact semantics the
-    CPU probe's do: floor absorbs any faster observation, slowdown is the
-    sweep's BEST probe vs the floor clamped >= 1 (dismiss-only — the
-    era-aware normalized value can never exceed raw)."""
-    import bench
-
-    # faster-than-floor observation lowers the floor, slowdown clamps to 1
-    floor, slowdown = bench._jvm_floor_and_slowdown(
-        0.85, {"jvm_sec": 0.62}, {"jvm_sec": 0.70}
-    )
-    assert floor == 0.62
-    assert slowdown == 1.0
-    # a genuinely slower era normalizes down, floor never rises
-    floor2, slowdown2 = bench._jvm_floor_and_slowdown(
-        floor, {"jvm_sec": 1.24}, {"jvm_sec": 1.40}
-    )
-    assert floor2 == floor
-    assert slowdown2 == pytest.approx(1.24 / 0.62, rel=0.01)
-    # one anomalous probe cannot over-excuse the sweep (min semantics)
-    floor3, slowdown3 = bench._jvm_floor_and_slowdown(
-        floor, {"jvm_sec": 10.9}, {"jvm_sec": 0.62}
-    )
-    assert floor3 == floor
-    assert slowdown3 == 1.0
-
-
-def test_bench_load_jvm_floor_falls_back_to_pinned(tmp_path):
-    """Fresh checkout or pre-r14 sidecar (no jvm block) -> pinned initial
-    era; a persisted jvm floor wins; a non-positive floor falls back
-    instead of dividing by zero at sweep end."""
-    import json
-
-    import bench
-
-    assert bench._load_jvm_floor(str(tmp_path / "nope.json")) == bench.CALIB_REF_JVM_SEC
-    p = tmp_path / "BENCH_stats.json"
-    # a pre-r14 sidecar has a calibration block but no jvm key
-    p.write_text(json.dumps({"calibration": {"floor": {"multi32_sec": 0.6}}}))
-    assert bench._load_jvm_floor(str(p)) == bench.CALIB_REF_JVM_SEC
-    p.write_text(json.dumps({"calibration": {"jvm": {"floor_sec": 0.62}}}))
-    assert bench._load_jvm_floor(str(p)) == 0.62
-    p.write_text(json.dumps({"calibration": {"jvm": {"floor_sec": 0}}}))
-    assert bench._load_jvm_floor(str(p)) == bench.CALIB_REF_JVM_SEC
-
-
-def test_bench_jvm_probe_checksum_and_shuffle(spark):
-    """The probe's work is pinned: deterministic checksum (it can neither
-    vary by input nor be optimized away) and a genuine Exchange in the
-    executed plan (it probes the shuffle path, not just codegen)."""
-    import bench
-
-    df = bench._jvm_probe_frame(spark)
-    assert df.collect()[0]["chk"] == bench._JVM_PROBE_CHECKSUM
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" in plan

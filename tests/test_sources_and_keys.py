@@ -1,5 +1,5 @@
 """read_jdbc option plumbing, column guard, the two-phase surrogate key,
-and the session's shuffle-partition sizing."""
+and the session's confs and shuffle-partition sizing."""
 
 from __future__ import annotations
 
@@ -11,7 +11,10 @@ from e_commerce_data_warehouse_recommendation_system_spark.operators.relational 
     select_or_default,
     surrogate_key,
 )
-from e_commerce_data_warehouse_recommendation_system_spark.session import get_spark
+from e_commerce_data_warehouse_recommendation_system_spark.session import (
+    RUNTIME_CONF,
+    get_spark,
+)
 from e_commerce_data_warehouse_recommendation_system_spark.sources.readers import (
     prepare,
     read_jdbc,
@@ -35,6 +38,15 @@ def test_shuffle_partitions_follow_session_cores(spark):
     spark.conf.set("spark.sql.shuffle.partitions", "32")
     assert get_spark(app_name="ecomdw-tests", master="local[4]") is spark
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) == cores
+
+
+def test_get_spark_builds_with_every_runtime_conf(spark):
+    """``get_spark`` hands each ``RUNTIME_CONF`` entry to the builder, so
+    the session starts with all of them. Read from the SparkConf: other
+    tests set and restore runtime confs on ``spark.conf``."""
+    conf = dict(spark.sparkContext.getConf().getAll())
+    wrong = {k: (v, conf.get(k)) for k, v in RUNTIME_CONF.items() if conf.get(k) != v}
+    assert not wrong, f"SparkConf differs from RUNTIME_CONF (want, got): {wrong}"
 
 
 def test_select_or_default_existing_and_missing(spark):
