@@ -12,7 +12,7 @@ semantics Spark-first:
                    origin, fractional-day durations)
 - ``operators``  — relational ops (joins/aggs/dedup/windows/set-ops) plus the
                    large-scale data-pipeline extensions (MinHash/SimHash dedup,
-                   ANN similarity, text analysis, multimodal plumbing)
+                   ANN similarity, text analysis)
 - ``plans``      — the warehouse ETL (staging -> dims -> fact) and the headline
                    analytical queries
 - ``recommend``  — ALS recommender + MMR diversification + ranking eval (MLlib)

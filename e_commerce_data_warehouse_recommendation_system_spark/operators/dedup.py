@@ -1673,7 +1673,7 @@ def shingle_windows_expr(k: int) -> str:
     short-doc guard: two-arg sequence(1, 0) DESCENDS on Spark (yielding
     [1, 0], and slice(t, 0, k) then throws), so out-of-range starts are
     filtered instead of relying on the sequence bound. Shared by the span
-    statistic, excision, decontamination, and the curation pipeline."""
+    statistic, excision and decontamination."""
     return (
         f"transform(filter(sequence(1, greatest(size(t) - {k - 1}, 1)),"
         f"                 i -> i <= size(t) - {k - 1}),"

@@ -2194,7 +2194,7 @@ def a17_gini_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     account's spend come from one whale order or spread evenly?" — through
     a GROUPED-AGGREGATE pandas UDF, the §2.11 shape the engine had not yet
     exercised (scalar pandas UDF: functions/scalar.pandas_title; grouped
-    map: MMR; mapInPandas: multimodal; UDTF: text_rle_udtf; this is the
+    map: MMR; mapInPandas: the ALS Gram partials; UDTF: text_rle_udtf; this is the
     UDAF). Gini has no pyspark builtin, and the sorted-rank formula
     G = 2·Σ(i·xᵢ)/(n·Σx) − (n+1)/n needs the group's values ordered
     together — exactly the series-to-scalar shape a grouped-agg pandas

@@ -294,11 +294,10 @@ def two_phase_tape_offsets(
     what the caller passes, and the blocks are ContextCleaner-reclaimed
     when the result frame drops (unlike a cache, nothing accumulates).
     Callers no longer pre-cache the per-doc length table. A caller whose
-    input is ALREADY materialized (the capstone passes a localCheckpointed
-    stage frame) opts out with ``staged=True`` — re-checkpointing a
-    checkpointed frame copies its rows for nothing (not measurable at the
-    capstone's post-curation frame size locally, but a pure waste that
-    grows with the survivor count at 100 TB); the default stays the safe
+    input is ALREADY materialized (a localCheckpointed stage frame) opts
+    out with ``staged=True`` — re-checkpointing a checkpointed frame
+    copies its rows for nothing (a waste that grows with the input's row
+    count at 100 TB); the default stays the safe
     self-staging path. ``staged=True`` is ASSERTED, not trusted (r13):
     the opt-out branch verifies the optimized plan is a materialized
     scan / cached relation and raises otherwise."""
@@ -854,13 +853,14 @@ def two_phase_md5_rank(df: DataFrame, group_col: str = "source") -> DataFrame:
 
     Returns the input frame + an ``rk`` column identical to
     ``ROW_NUMBER() OVER (PARTITION BY group ORDER BY md5(doc_id), doc_id)``
-    (oracle-checked via the curation capstone; plan-pinned in
-    tests/test_plans.py). Phase 1 is the bucket HISTOGRAM — it reads only
-    (group, doc_id), partial-counts map-side, and shuffles bucket-count
+    (pinned against the single window in tests/test_round11_ops.py;
+    plan-pinned in tests/test_plans.py). Phase 1 is the bucket
+    HISTOGRAM — it reads only (group, doc_id), partial-counts map-side,
+    and shuffles bucket-count
     rows; phase 2's (group, bucket) clustering is the one corpus-sized
     shuffle, on well-spread keys. The input is scanned by both phases
     (phase 1 column-pruned to the two key columns) — expensive inputs are
-    staged by the caller (the capstone's frames are localCheckpointed)."""
+    staged by the caller."""
     keyed = df.withColumn(
         "_k", F.md5(F.col("doc_id").cast("string"))
     ).withColumn(
@@ -2008,7 +2008,7 @@ def text_rle_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run-length encoding of each doc's token stream through a PYTHON
     UDTF (lateral table function) — completing the §2.11 surface: scalar
     pandas UDF (functions/scalar.pandas_title), grouped applyInPandas
-    (MMR), mapInPandas (multimodal), and now a UDTF for the
+    (MMR), mapInPandas (the ALS Gram partials), and now a UDTF for the
     sequential-scan, variable-arity shape (the repetition profile
     text_repetition summarizes; this emits the actual runs). The oracle
     reproduces RLE relationally — the DuckDB gaps-islands idiom over
@@ -2607,9 +2607,8 @@ def bpe_merge_rule(a: str, b: str):
     """One BPE merge rule as a fold step for ``F.aggregate`` over a
     separator-joined token string: merge iff the accumulated string's LAST
     token is exactly ``a`` and the incoming token is ``b`` (the canonical
-    greedy non-overlapping left-fold). Shared by the pretrained encoder
-    (:func:`bpe_segments`) and the trainer (curation.text_bpe_train),
-    which applies it with DATA-DERIVED symbols."""
+    greedy non-overlapping left-fold). Used by the pretrained encoder
+    (:func:`bpe_segments`)."""
 
     # bind the rule's symbols in a closure: PySpark introspects the
     # lambda arity, so extra default args are not an option here
@@ -2633,8 +2632,8 @@ def bpe_segments(col: Column | str) -> Column:
     rule's left symbol and the incoming token equals its right symbol — the
     canonical greedy non-overlapping semantics), applied rule-by-rule in
     rank order. Pure Column expressions, zero Python; meant to run on the
-    Zipf-bounded DISTINCT word table. Shared by text_bpe_encode and the
-    curation pipeline."""
+    Zipf-bounded DISTINCT word table. Shared by text_bpe_encode and
+    text_bpe_roundtrip."""
     enc = F.array_join(F.split(col, ""), _BPE_SEP)
     for a, b in BPE_MERGES:
         enc = F.aggregate(F.split(enc, _BPE_SEP), F.lit(""), bpe_merge_rule(a, b))
@@ -3452,7 +3451,7 @@ def text_unicode_nfc(spark: SparkSession, sf_dir: str) -> DataFrame:
     class (detect_ok) and map both classes to identical suffix bytes.
 
     Scale: one Arrow-batched map stage pipelined over the scan — zero
-    shuffles, state-free, the same posture as every mm_* decode; at
+    shuffles, state-free, the posture of any Arrow-batched decode; at
     100 TB normalization runs exactly here, fused into ingest."""
     prepare(spark, sf_dir)
     import pandas as pd  # noqa: F401  (pandas ships with pyspark's Arrow path)

@@ -2792,8 +2792,7 @@ def rec_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dags/e_commerce_dw_dag.py: extract -> train MF -> recommend -> store,
     with mf_knn_recommender.py supplying train/serve/diversify/eval)
     replayed as ONE chained Spark lineage with per-stage conservation
-    rows — the serving-side twin of text_curation_pipeline's curation
-    capstone. Stages: (1) extract implicit interactions, (2) dictionary
+    rows. Stages: (1) extract implicit interactions, (2) dictionary
     encode, (3) leakage-safe md5 split, (4) seeded ALS fit, (5) batch
     top-k serving for every trained user, (6) MMR diversification over a
     3k pool, (7) P@k/R@k/F1 evaluation on the held-out split, (8) publish
@@ -3303,8 +3302,7 @@ def rec_backtest_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: 112.9/103.2/104.9 % (MMR) at sf0.001/0.01/0.1 — recorded in
 #: COVERAGE.md and pinned by tests/test_round12_ops.py. A broken serve
 #: path (random shelf) measures ~5 % of popularity at sf0.1, far under
-#: this floor. The rate VALUES are model-specific (never hashed) — the
-#: mm_clip_retrieval_ann convention.
+#: this floor. The rate VALUES are model-specific (never hashed).
 BACKTEST_ALS_LIFT_FLOOR_PCT = 50
 
 

@@ -114,8 +114,6 @@ def _load_all() -> None:
     import e_commerce_data_warehouse_recommendation_system_spark.operators.dedup  # noqa: F401
     import e_commerce_data_warehouse_recommendation_system_spark.operators.similarity  # noqa: F401
     import e_commerce_data_warehouse_recommendation_system_spark.operators.text  # noqa: F401
-    import e_commerce_data_warehouse_recommendation_system_spark.operators.curation  # noqa: F401
-    import e_commerce_data_warehouse_recommendation_system_spark.operators.multimodal  # noqa: F401
     import e_commerce_data_warehouse_recommendation_system_spark.operators.quality  # noqa: F401
     import e_commerce_data_warehouse_recommendation_system_spark.recommend.queries  # noqa: F401
     import e_commerce_data_warehouse_recommendation_system_spark.recommend.graph  # noqa: F401

@@ -1371,8 +1371,8 @@ BINARYFILE_MODULUS = 25
 def s23_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``binaryFile`` source ingest — the landing hop of a media lake:
     opaque blobs on disk (images, audio, documents) read as
-    (path, length, content) rows without any parsing, the upstream of the
-    multimodal probe/decode family (mm_*). The fixture exports a
+    (path, length, content) rows without any parsing, the upstream of any
+    probe/decode step. The fixture exports a
     deterministic 1-in-{BINARYFILE_MODULUS} document subset as standalone
     ``doc_<id>.bin`` files (driver-side write of a modulus-bounded list —
     the write is fixture setup; the READ is the operator), then the

@@ -1319,195 +1319,6 @@ def stream_sliding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Streaming curation ingest: the continuous-crawl half of the curation story
-# --------------------------------------------------------------------------
-
-
-def _curation_funnel_sql() -> str:
-    """The C4 funnel conjunction as a DuckDB predicate over ``d`` (shared
-    with the oracle below; constants imported from the batch funnel so the
-    two surfaces cannot drift)."""
-    from e_commerce_data_warehouse_recommendation_system_spark.operators.text import (
-        _SQL_TOKENS,
-        FUNNEL_LANG,
-        FUNNEL_MEAN_TOKLEN,
-        FUNNEL_MIN_CHARS,
-        FUNNEL_MIN_STOPWORD_FRAC,
-        FUNNEL_TOKENS,
-        STOPWORDS,
-    )
-
-    sw = ", ".join(f"'{w}'" for w in STOPWORDS)
-    return f"""
-          length(text) >= {FUNNEL_MIN_CHARS}
-      AND len({_SQL_TOKENS}) BETWEEN {FUNNEL_TOKENS[0]} AND {FUNNEL_TOKENS[1]}
-      AND CAST(length(text) AS DOUBLE) / len({_SQL_TOKENS})
-            BETWEEN {FUNNEL_MEAN_TOKLEN[0]} AND {FUNNEL_MEAN_TOKLEN[1]}
-      AND CAST(len(list_filter({_SQL_TOKENS}, x -> x IN ({sw}))) AS DOUBLE)
-            / len({_SQL_TOKENS}) >= {FUNNEL_MIN_STOPWORD_FRAC}
-      AND lang = '{FUNNEL_LANG}'
-    """
-
-
-def _sql_stream_curation() -> str:
-    parts = []
-    for s in range(3):
-        parts.append(
-            # COALESCE here too: an EMPTY shard (degenerate corpus) must
-            # checksum 0, not NULL — the Spark audit reports 0 for it
-            f"SELECT 'in_shard_{s}' AS label,"
-            f" CAST(COUNT(*) AS BIGINT) AS n_docs,"
-            f" CAST(COALESCE(SUM(doc_id), 0) AS BIGINT) AS checksum"
-            f" FROM documents WHERE doc_id % 3 = {s}"
-        )
-        parts.append(
-            # COALESCE: a shard with zero funnel survivors must read 0, not
-            # NULL — the Spark side's audit accumulator starts at 0
-            f"SELECT 'funnel_kept_{s}', COUNT(*),"
-            f" CAST(COALESCE(SUM(doc_id), 0) AS BIGINT)"
-            f" FROM documents WHERE doc_id % 3 = {s} AND ({_curation_funnel_sql()})"
-        )
-    parts.append(f"""
-    SELECT 'published', COUNT(*), CAST(COALESCE(SUM(doc_id), 0) AS BIGINT) FROM (
-      SELECT doc_id FROM documents
-      WHERE ({_curation_funnel_sql()})
-        AND doc_id IN (
-          SELECT MIN(doc_id) FROM documents
-          WHERE ({_curation_funnel_sql()})
-          GROUP BY md5(text))
-    )""")
-    return " UNION ALL ".join(parts)
-
-
-@component(
-    "stream_curation_ingest",
-    cols=[("label", "str"), ("n_docs", "num"), ("checksum", "num")],
-    oracle=_sql_stream_curation(),
-)
-def stream_curation_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Continuous-crawl curation ingestion — the STREAMING half of the
-    batch curation pipeline's first two stages: documents land in
-    micro-batches (three deterministic doc_id % 3 shard files,
-    maxFilesPerTrigger=1), and each batch flows through the C4 funnel
-    (stateless, per batch) and into an exact-dedup UPSERT keyed by content
-    hash where the SMALLEST doc_id wins. Min-wins makes the terminal
-    published state ORDER-INDEPENDENT — whatever order the three batches
-    run in (the property that makes a streaming operator oracle-checkable,
-    the stream_wap_publish convention): the terminal corpus equals the
-    batch funnel + keep-first dedup over all documents, which is the
-    oracle. Per-shard audit counters accumulate by shard DERIVED FROM THE
-    ROWS (doc_id % 3), not by batch_id, so they too are batch-order-free.
-
-    Scale: the funnel is map-side per micro-batch; the dedup upsert
-    shuffles the batch + published state on the content hash (at 100 TB
-    the published side is a bucketed-by-hash table and the merge is a
-    co-located per-bucket min — O(batch + touched buckets), the
-    stream_event_daily_upsert posture); the snapshot-per-batch rewrite
-    here fits reference-scale corpora, with the partition-scoped sink as
-    the high-volume form."""
-    import os
-
-    from e_commerce_data_warehouse_recommendation_system_spark.operators.text import (
-        FUNNEL_LANG,
-        FUNNEL_MEAN_TOKLEN,
-        FUNNEL_MIN_CHARS,
-        FUNNEL_MIN_STOPWORD_FRAC,
-        FUNNEL_TOKENS,
-        STOPWORDS,
-        tokens,
-    )
-
-    prepare(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="ecomdw_curate_")
-    stage = f"{tmp}/landing"
-    os.makedirs(stage)
-    docs = spark.table("documents")
-    for b in range(3):
-        shard_dir = f"{tmp}/shard{b}"
-        docs.filter(F.col("doc_id") % 3 == b).coalesce(1).write.parquet(shard_dir)
-        part = [f for f in os.listdir(shard_dir) if f.endswith(".parquet")][0]
-        os.symlink(f"{shard_dir}/{part}", f"{stage}/shard{b}.parquet")
-
-    audit: dict[tuple[int, str], list[int]] = {}
-    state = {"dir": None}
-    root = f"{tmp}/published"
-    os.makedirs(root)
-
-    L = F.length("text")
-    TOK = F.size(tokens("text"))
-    SW = F.size(F.filter(tokens("text"), lambda x: x.isin(*STOPWORDS)))
-    keep = (
-        (L >= FUNNEL_MIN_CHARS)
-        & TOK.between(*FUNNEL_TOKENS)
-        & (L.cast("double") / TOK).between(*FUNNEL_MEAN_TOKLEN)
-        & ((SW.cast("double") / TOK) >= FUNNEL_MIN_STOPWORD_FRAC)
-        & (F.col("lang") == FUNNEL_LANG)
-    )
-
-    def _acc(df: DataFrame, kind: str) -> None:
-        for r in (
-            df.groupBy((F.col("doc_id") % 3).alias("shard"))
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("doc_id").alias("ck"))
-            .collect()
-        ):  # <= 3 rows per batch: the bounded-collect audit class
-            key = (int(r["shard"]), kind)
-            cur = audit.setdefault(key, [0, 0])
-            cur[0] += int(r["n"])
-            cur[1] += int(r["ck"])
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        out = f"{root}/v{batch_id}"
-        if _fold_committed(out):
-            # foreachBatch is AT-LEAST-ONCE: a retried micro-batch must not
-            # re-fold (the md5-min merge is idempotent, but the versioned
-            # write is errorifexists) — the committed (_SUCCESS-marked)
-            # version IS the fold; a partial dir was rmtree'd by the guard
-            state["dir"] = out
-            return
-        _acc(batch_df, "in")
-        kept = batch_df.filter(keep)
-        _acc(kept, "funnel")
-        fresh = kept.select(F.md5("text").alias("h"), "doc_id")
-        # base = highest committed version from the store (not the
-        # in-memory pointer): correct across restart AND skips partials
-        base = _latest_committed_version(root, batch_id)
-        if base is not None:
-            fresh = fresh.unionByName(sp.read.parquet(base))
-        merged = fresh.groupBy("h").agg(F.min("doc_id").alias("doc_id"))
-        merged.write.parquet(out)
-        state["dir"] = out
-
-    schema = spark.read.parquet(stage).schema
-    try:
-        (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        pub = spark.read.parquet(state["dir"]).agg(
-            F.count(F.lit(1)).alias("n"), F.sum("doc_id").alias("ck")
-        ).collect()[0]
-        rows = []
-        for s in range(3):
-            n, ck = audit.get((s, "in"), [0, 0])
-            rows.append((f"in_shard_{s}", n, ck))
-            n, ck = audit.get((s, "funnel"), [0, 0])
-            rows.append((f"funnel_kept_{s}", n, ck))
-        rows.append(("published", int(pub["n"]), int(pub["ck"] or 0)))
-        return spark.createDataFrame(
-            rows, schema="label string, n_docs bigint, checksum bigint"
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-# --------------------------------------------------------------------------
 # Streaming drift monitor: the online half of dq_corpus_drift
 # --------------------------------------------------------------------------
 
@@ -1550,7 +1361,7 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     state renders the drift table. Integer-sum merges are commutative
     and associative, so the terminal state is ORDER-INDEPENDENT — the
     property that lets the BATCH monitor's oracle check the stream
-    verbatim (the stream_curation_ingest convention). This is how a
+    verbatim (the stream_wap_publish convention). This is how a
     drift alert actually deploys: counters maintained continuously at
     ingest, the alert statistic read from state, never a corpus rescan.
     The fold is IDEMPOTENT per batch_id (r12 ADVICE): foreachBatch is

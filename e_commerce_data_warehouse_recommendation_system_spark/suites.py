@@ -3,7 +3,7 @@
 The verify driver checks only the first ``registry.DRIVER_QUERY_BUDGET`` (50)
 registered queries. Flagship queries keep their own slots; the ~60 micro
 operators from SURVEY.md §2 (projections, joins, aggregations, windows, set
-ops, scalar functions, catalog, ETL dims, text profile, media ops, sinks)
+ops, scalar functions, catalog, ETL dims, text profile, vector ops, sinks)
 register as *components* — full queries with full-result oracles, checked
 individually by ``scripts/check_correctness.py --components`` — and each
 family below collapses into ONE oracle-checked digest query
@@ -25,8 +25,6 @@ import e_commerce_data_warehouse_recommendation_system_spark.plans.etl  # noqa: 
 import e_commerce_data_warehouse_recommendation_system_spark.plans.queries  # noqa: F401
 import e_commerce_data_warehouse_recommendation_system_spark.operators.similarity  # noqa: F401
 import e_commerce_data_warehouse_recommendation_system_spark.operators.text  # noqa: F401
-import e_commerce_data_warehouse_recommendation_system_spark.operators.curation  # noqa: F401
-import e_commerce_data_warehouse_recommendation_system_spark.operators.multimodal  # noqa: F401
 import e_commerce_data_warehouse_recommendation_system_spark.operators.quality  # noqa: F401
 import e_commerce_data_warehouse_recommendation_system_spark.recommend.queries  # noqa: F401
 import e_commerce_data_warehouse_recommendation_system_spark.recommend.graph  # noqa: F401
@@ -349,9 +347,6 @@ SUITE_SPECS: dict[str, list[str]] = {
         "text_ccnet_buckets",
         # BPE merge statistics (tokenizer-induction first-merge ranking)
         "text_bpe_pair_stats",
-        # BPE tokenizer TRAINING: the iterative Sennrich merge-induction
-        # loop (bounded rounds, data-derived rules, unrolled oracle)
-        "text_bpe_train",
         # BPE ENCODE: pretrained merge-list application -> token ids+lengths
         "text_bpe_encode",
         # decode(encode(x)) = x through the id space (per-doc md5 pin)
@@ -368,12 +363,6 @@ SUITE_SPECS: dict[str, list[str]] = {
         "text_bpe_fertility",
         # DSIR importance weights (target-vs-raw likelihood ratio)
         "text_dsir_weights",
-        # the CAPSTONE: funnel -> dedup -> excision -> decontam -> mixture
-        # -> BPE -> packing, chained with per-stage conservation columns
-        "text_curation_pipeline",
-        # the streaming half: micro-batch funnel + min-wins hash-dedup
-        # upsert (order-independent terminal corpus, per-shard audit)
-        "stream_curation_ingest",
         # online drift monitoring: keyed per-lang counter state folded
         # per micro-batch; terminal state == the batch monitor (round 12)
         "stream_drift_monitor",
@@ -385,22 +374,8 @@ SUITE_SPECS: dict[str, list[str]] = {
         # sums via the two-phase prefix machinery, crossing doc included
         "text_token_budget_sample",
     ],
-    # multimodal: frame sampling + decode->resize->sample chain + the
-    # embedding-representation compression step (int8 quantization)
-    "mm_media_suite": [
-        "mm_frame_sample",
-        "mm_resize_sample",
-        # audio leg of the binary plumbing (WAV probe; real RIFF parse gated)
-        "mm_audio_probe",
-        # video leg: AVI container probe (real header walk, same pattern)
-        "mm_video_probe",
-        # binary-payload exact dedup (content hash before any decode)
-        "mm_payload_dedup",
-        # REAL PPM decode -> per-channel pixel sums, value-checked in SQL
-        "mm_pixel_channel_stats",
-        # block-mean perceptual hash + perceptual dedup buckets
-        "mm_perceptual_hash",
-        # embedding-representation ops sharing the embeddings scan
+    # vector representation and indexing over the embeddings table
+    "sim_vector_suite": [
         "sim_l2_normalize",
         # chunk->doc mean-pooling (decimal-exact sum digest, round 11)
         "sim_chunk_pool_embeddings",
@@ -432,12 +407,6 @@ SUITE_SPECS: dict[str, list[str]] = {
         "stream_ivf_ingest",
         # per-dimension cohort mean-shift drift monitor (full oracle)
         "sim_embedding_drift",
-        # image-text pair curation: CLIP-score keep/drop + caption gate
-        "mm_clip_pair_curation",
-        # cross-tower retrieval: caption -> image exact top-k baseline
-        "mm_clip_retrieval_topk",
-        # its production ANN twin: image-tower sign-LSH, recall-floor gated
-        "mm_clip_retrieval_ann",
         # topic-balanced sampling over the trained cells (shares the fit)
         "sim_cluster_balanced_sample",
     ],

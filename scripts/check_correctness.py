@@ -34,6 +34,7 @@ from __future__ import annotations
 import decimal
 import json
 import math
+import os
 import struct
 import sys
 import time
@@ -41,8 +42,10 @@ import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+#: the testdata tables (sources.readers.TABLES, spelled out: this module is
+#: loaded before the engine is imported, so it imports no engine code)
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()

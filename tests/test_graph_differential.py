@@ -18,6 +18,7 @@ import duckdb
 import pytest
 
 from e_commerce_data_warehouse_recommendation_system_spark import registry
+from e_commerce_data_warehouse_recommendation_system_spark.sources.readers import TABLES
 
 # full-gate lane: multi-minute property/identity/streaming work (see pytest.ini)
 pytestmark = pytest.mark.slow
@@ -28,9 +29,9 @@ def graph_dir(spark, tmp_path_factory):
     base = tmp_path_factory.mktemp("graph_diff")
     out = str(base / "fixture")
     os.makedirs(out)
-    for t in (
-        "region nation customer supplier part orders events documents embeddings"
-    ).split():
+    for t in TABLES:
+        if t == "lineitem":  # replaced below by the constructed graph
+            continue
         os.symlink(f"/root/testdata/sf0.001/{t}.parquet", f"{out}/{t}.parquet")
     rows = []
     # K6 clique: one basket holding parts 1..6
@@ -50,10 +51,7 @@ def graph_dir(spark, tmp_path_factory):
 
 def _duck(graph_dir):
     con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
+    for t in TABLES:
         path = f"{graph_dir}/{t}.parquet"
         src = f"{path}/*.parquet" if os.path.isdir(path) else path
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")

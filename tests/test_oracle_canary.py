@@ -22,14 +22,11 @@ import duckdb
 import pytest
 
 from e_commerce_data_warehouse_recommendation_system_spark import registry
+from e_commerce_data_warehouse_recommendation_system_spark.sources.readers import TABLES
 from tests.conftest import SF0001
 
 # full-gate lane: multi-minute property/identity/streaming work (see pytest.ini)
 pytestmark = pytest.mark.slow
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 #: Result types the driver's comparator round-trips losslessly: exact ints
 #: that fit int64, IEEE floats, strings, booleans, dates, and µs

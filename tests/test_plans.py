@@ -510,7 +510,6 @@ COMPONENT_SHUFFLE_BUDGET = {
     "text_search_phrase": 1,
     "s17_analyze_stats": 2,
     "funnel_windowed": 8,
-    "mm_payload_dedup": 1,
     "text_rle_udtf": 0,
     "a17_gini_udaf": 2,
     # round 7: BM25 = postings agg + df agg + dl join + doc agg + the
@@ -583,10 +582,6 @@ COMPONENT_SHUFFLE_BUDGET = {
     # single-partition vocab id window + vocab-bounded word-stats groupBy
     # + the per-doc rollup (both joins broadcast — never a fact shuffle)
     "text_bpe_encode": 5,
-    # CLIP pair curation: the tower pairing and the caption join both
-    # broadcast at test scale (production: co-partitioned 1-1 equi-joins);
-    # dot/gate are map-side — zero exchanges end to end
-    "mm_clip_pair_curation": 0,
     # BPE packing composes the encode's 5 with the two-phase tape (round
     # 11): the cached per-doc length table is built once (its encode
     # exchanges counted once by _shuffle_count's InMemoryRelation dedup),
@@ -597,9 +592,6 @@ COMPONENT_SHUFFLE_BUDGET = {
     # temperature mixture: one source rollup + the 2-scalar aggregate +
     # its broadcast (integer math is map-side)
     "text_mixture_temperature": 3,
-    # cross-tower retrieval: queries broadcast into the tower scan; the
-    # only exchange is the per-query top-k window
-    "mm_clip_retrieval_topk": 1,
     # simhash banding: fingerprint build (explode+groupBy) + the banded
     # candidate self-join on (band, key) + pair distinct + the per-doc
     # verdict rollup — every exchange bucket- or corpus-sized, never pairs

@@ -22,7 +22,6 @@ FAMILIES = (
     "dedup_",  # text dedup ladder
     "sim_",  # similarity / ANN
     "text_",  # text analysis
-    "mm_",  # multimodal
     "dq_",  # data quality
     "rec_",  # recommender
     "stream_",  # structured streaming
@@ -150,7 +149,7 @@ def test_no_decimal_output_columns(spark):
     driver's oracle fetch collapses DECIMAL to float64, so a Spark Decimal
     can never value-hash-match — rows/schema green, hash red. Exact sums
     cross as scale-pinned strings (functions/scalar.dec_str / dec_sum_str;
-    the form 13 digest suites have crossed green for two rounds).
+    the form every digest suite already uses).
 
     Builds every registered query's DataFrame at sf0.001 and inspects the
     schema. Most queries are lazy (schema-only build); the stream_* entries

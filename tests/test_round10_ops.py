@@ -78,49 +78,6 @@ def test_span_family_survives_short_docs(spark, short_doc_dir):
     assert dec.count() > 0  # ran to completion on the short-doc corpus
 
 
-def test_curation_pipeline_conservation(spark):
-    """The capstone chain's conservation invariants: per-stage
-    kept + dropped = in (docs AND whitespace tokens), stage i+1 consumes
-    exactly stage i's survivors, BPE tokens are conserved through packing,
-    and no stage degenerates to an empty corpus."""
-    rows = sorted(
-        _comp("text_curation_pipeline")(spark, SF0001).collect(),
-        key=lambda r: r["stage_ord"],
-    )
-    assert [r["stage"] for r in rows] == [
-        "c4_funnel",
-        "exact_dedup",
-        "span_excision",
-        "decontamination",
-        "mixture_downsample",
-        "bpe_encode",
-        "pack_sequences",
-    ]
-    prev = None
-    for r in rows:
-        assert r["docs_in"] == r["docs_kept"] + r["docs_dropped"], r
-        assert r["docs_kept"] > 0, r
-        if prev is not None:
-            assert r["docs_in"] == prev["docs_kept"], (prev, r)
-        if r["ws_tokens_out"] is not None and prev is not None and prev[
-            "ws_tokens_out"
-        ] is not None:
-            assert (
-                prev["ws_tokens_out"]
-                == r["ws_tokens_out"] + r["ws_tokens_dropped"]
-            ), (prev, r)
-        prev = r
-    by = {r["stage"]: r for r in rows}
-    # token-level stages actually moved tokens on this corpus
-    assert by["span_excision"]["ws_tokens_dropped"] > 0
-    assert by["mixture_downsample"]["docs_dropped"] > 0
-    # BPE token totals conserved through packing; packing emitted sequences
-    assert by["bpe_encode"]["bpe_tokens_out"] == by["pack_sequences"]["bpe_tokens_out"]
-    assert by["pack_sequences"]["n_sequences"] > 0
-    # checksum only changes when docs drop
-    assert by["bpe_encode"]["docs_checksum"] == by["mixture_downsample"]["docs_checksum"]
-
-
 def test_bpe_roundtrip_holds(spark):
     """decode(encode(x)) = x for every document — the property that makes
     the tokenizer usable for training data. The oracle comparison pins the
@@ -135,67 +92,6 @@ def test_bpe_roundtrip_holds(spark):
         assert r["roundtrip_ok"], r
         assert r["original_md5"] == r["reconstructed_md5"]
         assert r["n_bpe_tokens"] >= r["n_words"] > 0
-
-
-def test_bpe_train_invariants(spark):
-    """The trainer's structural contract: one rule per bounded round,
-    merged = left||right, positive corpus-weighted supports, and —
-    the part that proves the ITERATION matters — at least one learned
-    rule consumes an earlier rule's output (a multi-char symbol)."""
-    from e_commerce_data_warehouse_recommendation_system_spark.operators.curation import (
-        BPE_TRAIN_MERGES,
-    )
-
-    rows = sorted(
-        _comp("text_bpe_train")(spark, SF0001).collect(), key=lambda r: r["rank"]
-    )
-    assert [r["rank"] for r in rows] == list(range(1, BPE_TRAIN_MERGES + 1))
-    for r in rows:
-        assert r["merged"] == r["left_sym"] + r["right_sym"]
-        assert r["support"] > 0
-    assert any(
-        len(r["left_sym"]) > 1 or len(r["right_sym"]) > 1 for r in rows
-    ), "no second-order merge learned — the loop degenerated to round 1"
-
-
-def test_stream_curation_ingest_conservation(spark):
-    """Order-independent streaming-curation contract: per-shard funnel
-    survivors bounded by shard inputs, the published corpus bounded by the
-    funnel total, and the published set exactly equal to the BATCH
-    funnel + keep-first dedup (recomputed here independently)."""
-    rows = {r["label"]: r for r in _comp("stream_curation_ingest")(spark, SF0001).collect()}
-    total_funnel = 0
-    for s in range(3):
-        i, f = rows[f"in_shard_{s}"], rows[f"funnel_kept_{s}"]
-        assert 0 < f["n_docs"] <= i["n_docs"]
-        assert f["checksum"] <= i["checksum"]
-        total_funnel += f["n_docs"]
-    pub = rows["published"]
-    assert 0 < pub["n_docs"] <= total_funnel
-    # independent batch replay of the terminal-state contract
-    from e_commerce_data_warehouse_recommendation_system_spark.operators.text import (
-        FUNNEL_LANG,
-        FUNNEL_MEAN_TOKLEN,
-        FUNNEL_MIN_CHARS,
-        FUNNEL_MIN_STOPWORD_FRAC,
-        FUNNEL_TOKENS,
-        STOPWORDS,
-        tokens,
-    )
-
-    d = spark.table("documents")
-    L, T = F.length("text"), F.size(tokens("text"))
-    SW = F.size(F.filter(tokens("text"), lambda x: x.isin(*STOPWORDS)))
-    f = d.filter(
-        (L >= FUNNEL_MIN_CHARS)
-        & T.between(*FUNNEL_TOKENS)
-        & (L.cast("double") / T).between(*FUNNEL_MEAN_TOKLEN)
-        & ((SW.cast("double") / T) >= FUNNEL_MIN_STOPWORD_FRAC)
-        & (F.col("lang") == FUNNEL_LANG)
-    )
-    want = f.groupBy(F.md5("text")).agg(F.min("doc_id").alias("doc_id"))
-    want_row = want.agg(F.count(F.lit(1)), F.sum("doc_id")).collect()[0]
-    assert (pub["n_docs"], pub["checksum"]) == (want_row[0], want_row[1])
 
 
 def test_short_doc_emits_no_windows(spark):

@@ -1,7 +1,7 @@
 """Round-11 regression and identity tests.
 
 Round 11 replaced the packing tape layout's per-language running-sum window
-and the curation capstone's per-source md5-rank window (both corpus-sized
+and the per-source md5-rank window (both corpus-sized
 single-task sorts on skewed low-cardinality keys at 100 TB) with the
 two-phase range-bucket plans. The oracles stay green because the rewrites
 are ROW-IDENTICAL — these tests pin that identity directly against the

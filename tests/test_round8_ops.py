@@ -195,25 +195,6 @@ def test_bitwise_flags_algebra(spark):
         assert 0 < r["priorities_seen"] < 32
 
 
-def test_perceptual_hash_bits_and_buckets(spark):
-    """At least one block beats-or-meets the mean (some bit is set), the
-    hash stays in 16 bits, every bucket has exactly one keeper, and
-    bucket sizes reconcile to the corpus size."""
-    rows = _comp("mm_perceptual_hash")(spark, SF0001).collect()
-    assert rows
-    buckets = {}
-    for r in rows:
-        assert 0 < r["phash"] < (1 << 16)
-        buckets.setdefault(r["phash"], []).append(r)
-    n_docs = sum(len(v) for v in buckets.values())
-    assert n_docs == spark.table("documents").count()
-    for members in buckets.values():
-        assert sum(1 for m in members if m["is_keeper"]) == 1
-        assert all(m["bucket_size"] == len(members) for m in members)
-        keeper = min(m["doc_id"] for m in members)
-        assert next(m for m in members if m["is_keeper"])["doc_id"] == keeper
-
-
 def test_auc_popularity_bounds(spark):
     """U is bounded by n_pos·n_neg, AUC lands in [0, 1e6], and the two
     classes partition the item universe."""

@@ -1,12 +1,11 @@
 """Invariant tests for the round-9 operators.
 
-Both operators have full-result DuckDB oracles (checked via
+The BPE operators have full-result DuckDB oracles (checked via
 scripts/check_correctness.py --components); these pin what the oracle
 can't: the BPE merge fold is compared against an independent PYTHON
 reference implementation of greedy non-overlapping merge application on
 constructed words (so both engines being consistently wrong still fails
-here), and the curation verdicts are checked for internal consistency
-(keep implies caption_ok, cosine bounded, pairing exhaustive).
+here).
 """
 
 from __future__ import annotations
@@ -106,21 +105,3 @@ def test_bpe_encode_doc_invariants(spark):
     for r in rows:
         assert r["n_words"] <= r["n_bpe_tokens"] <= r["n_chars"]
         assert r["ids_checksum"] >= r["n_bpe_tokens"]  # ids are >= 1
-
-
-def test_clip_pair_curation_invariants(spark):
-    """keep implies caption_ok; cosine in [-1, 1]; one row per even/odd
-    embedding pair that has a caption doc; ids consistent."""
-    df = _comp("mm_clip_pair_curation")(spark, SF0001).cache()
-    rows = df.collect()
-    n_vecs = spark.table("embeddings").count()
-    n_docs = spark.table("documents").count()
-    assert len(rows) == min(n_vecs // 2, n_docs)
-    for r in rows:
-        assert r["img_id"] % 2 == 0 and r["txt_id"] == r["img_id"] + 1
-        assert r["pair_id"] == r["img_id"] // 2
-        assert -1.0 - 1e-9 <= r["clip_cosine"] <= 1.0 + 1e-9
-        if r["keep"]:
-            assert r["caption_ok"]
-        if not r["caption_ok"]:
-            assert not r["keep"]

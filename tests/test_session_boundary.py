@@ -103,11 +103,10 @@ def tie_sf_dir(spark):
 
 def _oracle_rows(name: str, sf_dir: str):
     from e_commerce_data_warehouse_recommendation_system_spark import registry
+    from e_commerce_data_warehouse_recommendation_system_spark.sources.readers import TABLES
 
     con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
+    for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     comp = registry.components().get(name)
     oracle = comp.oracle if comp is not None else registry.oracles()[name]
