@@ -1,9 +1,9 @@
-"""Deduplication operators over ``documents`` (+ embedding near-dup).
+"""Deduplication operators over ``documents``.
 
 Beyond-reference extension (task brief): the dedup ladder a training-data
-pipeline needs — exact hash dedup, n-gram Jaccard, MinHash+LSH, SimHash,
-embedding-cosine near-dup. The reference only has relational
-``drop_duplicates`` (SURVEY.md SS2.5); these generalize D1-D3 to fuzzy text.
+pipeline needs — exact hash dedup, n-gram Jaccard, MinHash+LSH, SimHash.
+The reference only has relational ``drop_duplicates`` (SURVEY.md SS2.5);
+these generalize D1-D3 to fuzzy text.
 
 Portability convention: every hash is ``md5`` (identical in Spark and
 DuckDB), so even the MinHash/LSH pipeline is fully oracle-checkable —
@@ -24,12 +24,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from e_commerce_data_warehouse_recommendation_system_spark.operators.similarity import (
-    cosine_pairs,
-    cosine_pairs_lsh,
-    cosine_pairs_lsh_sql,
-    cosine_pairs_sql,
-)
 from e_commerce_data_warehouse_recommendation_system_spark.operators.text import tokens
 from e_commerce_data_warehouse_recommendation_system_spark.registry import (
     component,
@@ -344,55 +338,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Embedding-cosine near-dup
-# --------------------------------------------------------------------------
-
-COSINE_DUP_THRESHOLD = 0.35  # synthetic embeddings have no planted dups; this
-# threshold exercises the operator on the densest tail (max cosine ~0.51)
-
-# OR-amplified multi-table banding for the registered near-dup miner. More
-# tables -> higher recall vs the exact twin; more planes/table -> smaller
-# buckets (at real corpus scale planes_per_table grows with log(n) so bucket
-# occupancy stays bounded).
-DUP_LSH_TABLES = 8
-DUP_LSH_PLANES_PER_TABLE = 4
-
-
-@register(
-    "dedup_embedding_cosine",
-    oracle=cosine_pairs_lsh_sql(
-        COSINE_DUP_THRESHOLD, DUP_LSH_TABLES, DUP_LSH_PLANES_PER_TABLE
-    ),
-)
-def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup, BUCKETED (the 100 TB shape): sign-LSH candidates
-    (same bucket in ANY of the DUP_LSH_TABLES tables, OR-amplified) are
-    exact-verified with the decimal cosine — the candidate join shuffles on
-    (table, bucket), never the O(n^2) pair space. Deterministic end-to-end
-    (data-derived hyperplanes), so the oracle replicates the banding and the
-    check is full-fidelity. The exact all-pairs twin stays oracle-checked as
-    the dedup_embedding_exact component (reference analog: the similarity
-    machinery of mf_knn_recommender.py:507-508)."""
-    prepare(spark, sf_dir)
-    return cosine_pairs_lsh(
-        spark, COSINE_DUP_THRESHOLD, DUP_LSH_TABLES, DUP_LSH_PLANES_PER_TABLE
-    )
-
-
-@component(
-    "dedup_embedding_exact",
-    oracle=cosine_pairs_sql(COSINE_DUP_THRESHOLD),
-    cols=[("id_a", "num"), ("id_b", "num"), ("cosine", "dbl")],
-)
-def dedup_embedding_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact all-pairs twin of dedup_embedding_cosine: every pair with
-    cosine >= threshold via the O(n^2) self-join — verification scale only
-    (the registered operator mines the same pairs through LSH buckets)."""
-    prepare(spark, sf_dir)
-    return cosine_pairs(spark, COSINE_DUP_THRESHOLD)
-
-
-# --------------------------------------------------------------------------
 # Duplicate-cluster assignment (connected components over the near-dup graph)
 # --------------------------------------------------------------------------
 
@@ -684,350 +629,6 @@ def text_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_gopher_pass"),
         )
-    )
-
-
-# --------------------------------------------------------------------------
-# Hybrid retrieval: lexical (shingle-Jaccard) + vector (cosine) RRF fusion
-# --------------------------------------------------------------------------
-
-#: RRF rank constant (Cormack et al. 2009's k=60 — the de-facto default)
-RRF_FUSION_K = 60
-
-
-def _sql_hybrid_ctes() -> str:
-    """The WITH-clause body shared by the hybrid component and its quality
-    digest: vector top-k (vec_topk), lexical top-k (lex_topk), and the
-    RRF-fused candidate set (fused) — one definition, two oracles."""
-    from e_commerce_data_warehouse_recommendation_system_spark.operators.similarity import (
-        _SQL_ELEMS,
-        _SQL_NORMS,
-        QUERY_MODULUS,
-        TOPK,
-    )
-
-    return f"""elems AS ({_SQL_ELEMS}),
-    norms AS ({_SQL_NORMS}),
-    queries AS (SELECT vec_id FROM embeddings WHERE vec_id % {QUERY_MODULUS} = 0),
-    dots AS (
-      SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-             CAST(SUM(CAST(qe.x * e.x AS DECIMAL(30,12))) AS DOUBLE) AS dot
-      FROM queries q
-      JOIN elems qe ON qe.vec_id = q.vec_id
-      JOIN elems e ON e.i = qe.i AND e.vec_id <> q.vec_id
-      GROUP BY 1, 2
-    ),
-    vec_ranked AS (
-      SELECT query_id, neighbor_id,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY dot / (na.nrm * nb.nrm) DESC,
-                                         neighbor_id) AS rnk
-      FROM dots
-      JOIN norms na ON query_id = na.vec_id
-      JOIN norms nb ON neighbor_id = nb.vec_id
-    ),
-    vec_topk AS (SELECT * FROM vec_ranked WHERE rnk <= {TOPK}),
-    sh AS ({_SQL_SHINGLES}),
-    qsh AS (SELECT doc_id, s FROM sh WHERE doc_id % {QUERY_MODULUS} = 0),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    shared AS (
-      SELECT q.doc_id AS query_id, d.doc_id AS neighbor_id, COUNT(*) AS i
-      FROM qsh q JOIN sh d ON q.s = d.s AND d.doc_id <> q.doc_id
-      GROUP BY 1, 2
-    ),
-    lex_ranked AS (
-      SELECT sh.query_id, sh.neighbor_id,
-             ROW_NUMBER() OVER (
-               PARTITION BY sh.query_id
-               ORDER BY CAST(sh.i AS DOUBLE) / (sa.n + sb.n - sh.i) DESC,
-                        sh.neighbor_id) AS rnk
-      FROM shared sh
-      JOIN sizes sa ON sh.query_id = sa.doc_id
-      JOIN sizes sb ON sh.neighbor_id = sb.doc_id
-    ),
-    lex_topk AS (SELECT * FROM lex_ranked WHERE rnk <= {TOPK}),
-    fused AS (
-      SELECT COALESCE(v.query_id, l.query_id) AS query_id,
-             COALESCE(v.neighbor_id, l.neighbor_id) AS neighbor_id,
-             COALESCE(1000000 // ({RRF_FUSION_K} + v.rnk), 0)
-               + COALESCE(1000000 // ({RRF_FUSION_K} + l.rnk), 0) AS rrf_micro,
-             v.rnk IS NOT NULL AS from_vector,
-             l.rnk IS NOT NULL AS from_lexical
-      FROM vec_topk v
-      FULL OUTER JOIN lex_topk l
-        ON v.query_id = l.query_id AND v.neighbor_id = l.neighbor_id
-    ),
-    fused_topk AS (
-      SELECT * FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY rrf_micro DESC, neighbor_id)
-                    AS fused_rank
-        FROM fused
-      ) WHERE fused_rank <= {TOPK}
-    )"""
-
-
-def _sql_hybrid_rrf() -> str:
-    return f"""
-    WITH {_sql_hybrid_ctes()}
-    SELECT query_id, neighbor_id, CAST(rrf_micro AS BIGINT) AS rrf_micro,
-           CAST(fused_rank AS INT) AS fused_rank, from_vector, from_lexical
-    FROM fused_topk
-    """
-
-
-@component(
-    "sim_hybrid_rrf",
-    oracle=_sql_hybrid_rrf(),
-    cols=[
-        ("query_id", "num"),
-        ("neighbor_id", "num"),
-        ("rrf_micro", "num"),
-        ("fused_rank", "num"),
-        ("from_vector", "bool"),
-        ("from_lexical", "bool"),
-    ],
-)
-def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HYBRID RETRIEVAL with reciprocal-rank fusion: for each query
-    document, the vector top-k (decimal-exact cosine, the sim_cosine_topk
-    rung) and the lexical top-k (exact shingle Jaccard over the
-    shared-shingle join) fuse by sum(1e6 // (K + rank)), K=RRF_FUSION_K —
-    rank fusion, never raw-score mixing (cosines and Jaccards are not
-    calibrated against each other; the rec_rrf_hybrid lesson applied to
-    retrieval). The two query subsets deliberately differ where coverage
-    differs: vector queries are embedded docs on the residue, lexical
-    queries are ALL docs on the residue — so at sf0.1, where 60 % of
-    documents have no embedding (dq_embeddings_checks' census),
-    vector-less queries still get lexical answers and lexical-only
-    neighbors surface for embedded queries: covering what one modality
-    misses is the point of hybrid search. Integer RRF scores and the
-    both-engines-identical double tiebreaks make the whole fused table
-    hash-exact; the membership flags record which modality contributed
-    each hit.
-
-    Scale: queries are the deterministic ~1 % residue subset (broadcast);
-    the vector side is the verification rung whose production swap is the
-    shared ANN ladder (LSH/IVF-PQ, recall-floored); the lexical side's
-    candidates come from the shared-shingle equi-join (bounded by posting
-    fan-out — production swaps in the BM25 index, text_search_bm25's
-    posture, or caps shingle doc-frequency as dedup_shared_spans does);
-    fusion itself is a k-bounded-per-query full-outer join + window."""
-    prepare(spark, sf_dir)
-    _, _, fused_topk = _hybrid_parts(spark, sf_dir)
-    return fused_topk
-
-
-#: memoized hybrid-retrieval builds, keyed (applicationId, sf_dir) — the
-#: _backtest_als_artifacts convention (recommend/queries.py): the shared
-#: build behind sim_hybrid_rrf and sim_hybrid_quality runs ONCE per
-#: session+SF, so a component sweep that checks both never rebuilds (or
-#: re-stages) the corpus-scale shingle frame twice (r12 verdict #1).
-_HYBRID_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame, DataFrame]] = {}
-
-
-def _hybrid_parts(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(vec_topk, lex_topk, fused_topk) — the shared build behind
-    sim_hybrid_rrf and sim_hybrid_quality: ONE Spark build, two consumers
-    (memoized per session+sf_dir; mirrors the shared SQL CTE body in
-    :func:`_sql_hybrid_ctes`). The three returned frames are eagerly
-    localCheckpointed — queries × k rows each, so the staged blocks are
-    bounded regardless of corpus size and ContextCleaner-reclaimed when
-    the memo entry drops; the corpus-scale shingle frame is a local
-    variable that is never persisted (its two consumers — the query
-    subset and the sizes rollup — execute within the one eager build)."""
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    if cache_key in _HYBRID_CACHE:
-        return _HYBRID_CACHE[cache_key]
-    for stale in [k for k in _HYBRID_CACHE if k[0] != cache_key[0]]:
-        del _HYBRID_CACHE[stale]  # dead session: its frames are unusable
-
-    from e_commerce_data_warehouse_recommendation_system_spark.operators.similarity import (
-        QUERY_MODULUS,
-        TOPK,
-        sim_cosine_topk,
-    )
-
-    vec_topk = sim_cosine_topk(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.col("rnk").alias("v_rnk")
-    )
-    # corpus-scale; staged ONCE for its in-build consumers (queries,
-    # corpus side of the join, sizes) then dropped — an eager
-    # localCheckpoint is ContextCleaner-reclaimed when `sh` goes out of
-    # scope, unlike the never-unpersisted .cache() this replaces
-    sh = shingle_rows(spark).localCheckpoint(eager=True)
-    qsh = sh.filter(F.col("doc_id") % QUERY_MODULUS == 0).select(
-        F.col("doc_id").alias("query_id"), "s"
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    shared = (
-        qsh.join(sh, "s")
-        .filter(F.col("doc_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("doc_id").alias("neighbor_id"))
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    jac = F.col("i").cast("double") / (F.col("na") + F.col("nb") - F.col("i"))
-    w_lex = Window.partitionBy("query_id").orderBy(
-        jac.desc(), F.asc("neighbor_id")
-    )
-    lex_topk = (
-        shared.join(
-            sizes.select(F.col("doc_id").alias("query_id"), F.col("n").alias("na")),
-            "query_id",
-        )
-        .join(
-            sizes.select(
-                F.col("doc_id").alias("neighbor_id"), F.col("n").alias("nb")
-            ),
-            "neighbor_id",
-        )
-        .withColumn("l_rnk", F.row_number().over(w_lex))
-        .filter(F.col("l_rnk") <= TOPK)
-        .select("query_id", "neighbor_id", "l_rnk")
-    )
-    fused = vec_topk.join(lex_topk, ["query_id", "neighbor_id"], "full_outer")
-    rrf = F.coalesce(
-        F.expr(f"div(1000000, {RRF_FUSION_K} + v_rnk)"), F.lit(0)
-    ) + F.coalesce(F.expr(f"div(1000000, {RRF_FUSION_K} + l_rnk)"), F.lit(0))
-    w_fused = Window.partitionBy("query_id").orderBy(
-        F.desc("rrf_micro"), F.asc("neighbor_id")
-    )
-    fused_topk = (
-        fused.withColumn("rrf_micro", rrf.cast("bigint"))
-        .withColumn("fused_rank", F.row_number().over(w_fused).cast("int"))
-        .filter(F.col("fused_rank") <= TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rrf_micro",
-            "fused_rank",
-            F.col("v_rnk").isNotNull().alias("from_vector"),
-            F.col("l_rnk").isNotNull().alias("from_lexical"),
-        )
-    )
-    parts = (
-        vec_topk.select("query_id", "neighbor_id").localCheckpoint(eager=True),
-        lex_topk.select("query_id", "neighbor_id").localCheckpoint(eager=True),
-        fused_topk.localCheckpoint(eager=True),
-    )
-    _HYBRID_CACHE[cache_key] = parts
-    return parts
-
-
-def _sql_hybrid_quality() -> str:
-    return f"""
-    WITH {_sql_hybrid_ctes()}
-    SELECT
-      CAST((SELECT COUNT(DISTINCT query_id) FROM vec_topk) AS BIGINT)
-        AS n_vec_queries,
-      CAST((SELECT COUNT(DISTINCT query_id) FROM lex_topk) AS BIGINT)
-        AS n_lex_queries,
-      CAST((SELECT COUNT(DISTINCT query_id) FROM fused_topk) AS BIGINT)
-        AS n_fused_queries,
-      CAST((SELECT COUNT(*) FROM vec_topk) AS BIGINT) AS n_vec_pairs,
-      CAST((SELECT COUNT(*) FROM lex_topk) AS BIGINT) AS n_lex_pairs,
-      CAST((SELECT COUNT(*) FROM fused_topk) AS BIGINT) AS n_fused_pairs,
-      CAST((SELECT COUNT(*) FROM fused_topk f
-            WHERE EXISTS (SELECT 1 FROM vec_topk v
-                          WHERE v.query_id = f.query_id
-                            AND v.neighbor_id = f.neighbor_id)) AS BIGINT)
-        AS n_vec_kept,
-      CAST((SELECT COUNT(*) FROM fused_topk f
-            WHERE EXISTS (SELECT 1 FROM lex_topk l
-                          WHERE l.query_id = f.query_id
-                            AND l.neighbor_id = f.neighbor_id)) AS BIGINT)
-        AS n_lex_kept,
-      CAST((SELECT COUNT(*) FROM fused_topk
-            WHERE from_vector AND from_lexical) AS BIGINT) AS n_dual,
-      CAST(1000000 * (SELECT COUNT(*) FROM fused_topk f
-            WHERE EXISTS (SELECT 1 FROM vec_topk v
-                          WHERE v.query_id = f.query_id
-                            AND v.neighbor_id = f.neighbor_id))
-           // GREATEST((SELECT COUNT(*) FROM vec_topk), 1) AS BIGINT)
-        AS vec_keep_micro,
-      CAST(1000000 * (SELECT COUNT(*) FROM fused_topk f
-            WHERE EXISTS (SELECT 1 FROM lex_topk l
-                          WHERE l.query_id = f.query_id
-                            AND l.neighbor_id = f.neighbor_id))
-           // GREATEST((SELECT COUNT(*) FROM lex_topk), 1) AS BIGINT)
-        AS lex_keep_micro
-    """
-
-
-@component(
-    "sim_hybrid_quality",
-    oracle=_sql_hybrid_quality(),
-    cols=[
-        ("n_vec_queries", "num"),
-        ("n_lex_queries", "num"),
-        ("n_fused_queries", "num"),
-        ("n_vec_pairs", "num"),
-        ("n_lex_pairs", "num"),
-        ("n_fused_pairs", "num"),
-        ("n_vec_kept", "num"),
-        ("n_lex_kept", "num"),
-        ("n_dual", "num"),
-        ("vec_keep_micro", "num"),
-        ("lex_keep_micro", "num"),
-    ],
-)
-def sim_hybrid_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FUSION QUALITY DIGEST for the hybrid retriever — the
-    dedup_lsh_quality discipline applied to rank fusion: since BOTH input
-    rankings are exactly computable here (decimal cosine; integer-count
-    Jaccard), the fused list's composition is fully hash-exact
-    cross-engine, and this one-row census quantifies the trade RRF makes:
-    per-modality query coverage (lexical covers MORE queries than vector
-    wherever embeddings lag ingestion — the sf0.1 fixture), how many of
-    each modality's top-k pairs SURVIVE into the fused top-k (keep-rate
-    in integer micro, floor-divided), and the dual-hit count (pairs both
-    modalities agree on — RRF ranks these first by construction). A
-    fusion bug that silently drops a modality reads as a zeroed keep
-    rate; rank-K inflation reads in the pair counts.
-
-    Scale: everything here is arithmetic over the k-bounded-per-query
-    top-k frames — the census costs two semi-joins and counts on frames
-    whose size is queries × k, regardless of corpus size."""
-    prepare(spark, sf_dir)
-    # the parts arrive already localCheckpointed (memoized shared build)
-    vec_topk, lex_topk, fused_topk = _hybrid_parts(spark, sf_dir)
-    n_vec_q = vec_topk.select("query_id").distinct().count()
-    n_lex_q = lex_topk.select("query_id").distinct().count()
-    n_fused_q = fused_topk.select("query_id").distinct().count()
-    n_vec = vec_topk.count()
-    n_lex = lex_topk.count()
-    n_fused = fused_topk.count()
-    n_vec_kept = fused_topk.join(
-        vec_topk, ["query_id", "neighbor_id"], "left_semi"
-    ).count()
-    n_lex_kept = fused_topk.join(
-        lex_topk, ["query_id", "neighbor_id"], "left_semi"
-    ).count()
-    n_dual = fused_topk.filter(
-        F.col("from_vector") & F.col("from_lexical")
-    ).count()
-    return spark.createDataFrame(
-        [
-            (
-                n_vec_q,
-                n_lex_q,
-                n_fused_q,
-                n_vec,
-                n_lex,
-                n_fused,
-                n_vec_kept,
-                n_lex_kept,
-                n_dual,
-                1000000 * n_vec_kept // max(n_vec, 1),
-                1000000 * n_lex_kept // max(n_lex, 1),
-            )
-        ],
-        schema="n_vec_queries bigint, n_lex_queries bigint, "
-        "n_fused_queries bigint, n_vec_pairs bigint, n_lex_pairs bigint, "
-        "n_fused_pairs bigint, n_vec_kept bigint, n_lex_kept bigint, "
-        "n_dual bigint, vec_keep_micro bigint, lex_keep_micro bigint",
     )
 
 

@@ -572,158 +572,3 @@ def dq_corpus_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("mean_chars_cur_micro"),
     )
-
-
-#: label domain of the embeddings table (topic/cluster ids in the fixture)
-EMB_LABEL_MAX = 9
-
-
-@component(
-    "dq_embeddings_checks",
-    cols=[("rule", "str"), ("violations", "num")],
-    oracle=f"""
-    WITH agg AS (
-      SELECT CAST(SUM(CASE WHEN vec_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS r0,
-             COUNT(vec_id) - COUNT(DISTINCT vec_id) AS r1,
-             CAST(COUNT(DISTINCT len(embedding)) - 1 AS BIGINT) AS r2,
-             CAST(SUM(CASE WHEN len(list_filter(embedding,
-                      x -> isnan(x) OR isinf(x))) > 0
-                      THEN 1 ELSE 0 END) AS BIGINT) AS r3,
-             CAST(SUM(CASE WHEN len(list_filter(embedding, x -> x <> 0)) = 0
-                      THEN 1 ELSE 0 END) AS BIGINT) AS r4,
-             CAST(SUM(CASE WHEN label IS NULL
-                      OR label < 0 OR label > {EMB_LABEL_MAX}
-                      THEN 1 ELSE 0 END) AS BIGINT) AS r5,
-             CAST(MIN(CAST(FLOOR(1000000 * (
-                 SELECT SUM(CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-                            AS DECIMAL(30,12)))
-                 FROM UNNEST(embedding) AS t(x))) AS BIGINT)) AS BIGINT) AS d0,
-             CAST(MAX(CAST(FLOOR(1000000 * (
-                 SELECT SUM(CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-                            AS DECIMAL(30,12)))
-                 FROM UNNEST(embedding) AS t(x))) AS BIGINT)) AS BIGINT) AS d1,
-             CAST(SUM(CAST(FLOOR(1000000 * (
-                 SELECT SUM(CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-                            AS DECIMAL(30,12)))
-                 FROM UNNEST(embedding) AS t(x))) AS BIGINT)) AS BIGINT) AS d2
-      FROM embeddings
-    ),
-    cov AS (
-      SELECT CAST((SELECT COUNT(*) FROM embeddings
-                   WHERE vec_id NOT IN (SELECT doc_id FROM documents))
-                  AS BIGINT) AS c0,
-             CAST((SELECT COUNT(*) FROM documents
-                   WHERE doc_id NOT IN (SELECT vec_id FROM embeddings))
-                  AS BIGINT) AS c1
-    )
-    SELECT 'not_null(vec_id)' AS rule, r0 AS violations FROM agg
-    UNION ALL SELECT 'unique(vec_id)', r1 FROM agg
-    UNION ALL SELECT 'dim_consistent(embedding)', r2 FROM agg
-    UNION ALL SELECT 'finite(embedding)', r3 FROM agg
-    UNION ALL SELECT 'nonzero_norm(embedding)', r4 FROM agg
-    UNION ALL SELECT 'accepted_range(label)', r5 FROM agg
-    UNION ALL SELECT 'fk_orphan_vectors(documents)', c0 FROM cov
-    UNION ALL SELECT 'census:docs_without_vector', c1 FROM cov
-    UNION ALL SELECT 'digest:min_sqnorm_micro', d0 FROM agg
-    UNION ALL SELECT 'digest:max_sqnorm_micro', d1 FROM agg
-    UNION ALL SELECT 'digest:sum_sqnorm_micro', d2 FROM agg
-    """,
-)
-def dq_embeddings_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The embeddings-table INGESTION CONTRACT (r11 verdict #5) — the table
-    feeds the entire similarity/ANN/semdedup/pooling ladder and previously
-    had no gate. Eleven rows: PK not-null + unique; DIMENSION consistency
-    (count of distinct vector lengths minus one — a single ragged vector
-    breaks every zip_with dot product downstream); FINITENESS (any
-    NaN/±Inf component — one poisons every cosine it touches); ZERO-NORM
-    vectors (integer-exact as "no non-zero element", no float accumulation
-    crosses engines — a zero vector makes cosine undefined); the label
-    domain; referential integrity vs documents BOTH ways (orphan vectors
-    are violations; docs without a vector are an exact CENSUS row — the
-    embedding-backlog number, legitimately non-zero in the sf0.1 fixture);
-    and the NORM-DISTRIBUTION digest (min/max/sum of per-row squared norms
-    in floor-micro integers, decimal-accumulated per the _dot convention so
-    the distribution pins bit-exactly cross-engine — a silently rescaled
-    embedding export shifts all three).
-
-    Scale: the nine table-local rules and digests compile into ONE
-    aggregation pass (the validate() shape); the two coverage rows are
-    anti-join counts on the id columns. One corpus scan + one slim join
-    however many rules run."""
-    prepare(spark, sf_dir)
-    e = spark.table("embeddings")
-    inf = float("inf")
-    sq_micro = F.floor(
-        F.lit(1000000)
-        * F.aggregate(
-            F.transform(
-                "embedding",
-                lambda x: (x.cast("double") * x.cast("double")).cast(
-                    "decimal(30,12)"
-                ),
-            ),
-            F.lit(0).cast("decimal(30,12)"),
-            lambda acc, x: (acc + x).cast("decimal(30,12)"),
-        )
-    ).cast("long")
-    rules = [
-        not_null("vec_id"),
-        unique("vec_id"),
-        (
-            "dim_consistent(embedding)",
-            (F.countDistinct(F.size("embedding")) - F.lit(1)).cast("long"),
-        ),
-        (
-            "finite(embedding)",
-            F.coalesce(
-                F.sum(
-                    F.exists(
-                        "embedding",
-                        lambda x: F.isnan(x) | (F.abs(x) == F.lit(inf)),
-                    ).cast("long")
-                ),
-                F.lit(0),
-            ),
-        ),
-        (
-            "nonzero_norm(embedding)",
-            F.coalesce(
-                F.sum(
-                    (~F.exists("embedding", lambda x: x != F.lit(0.0))).cast("long")
-                ),
-                F.lit(0),
-            ),
-        ),
-        (
-            "accepted_range(label)",
-            F.coalesce(
-                F.sum(
-                    (
-                        F.col("label").isNull()
-                        | (F.col("label") < 0)
-                        | (F.col("label") > EMB_LABEL_MAX)
-                    ).cast("long")
-                ),
-                F.lit(0),
-            ),
-        ),
-        ("digest:min_sqnorm_micro", F.min(sq_micro)),
-        ("digest:max_sqnorm_micro", F.max(sq_micro)),
-        ("digest:sum_sqnorm_micro", F.sum(sq_micro).cast("long")),
-    ]
-    table_rows = validate(e, rules)
-    d_ids = spark.table("documents").select("doc_id")
-    orphans = e.select(F.col("vec_id").alias("doc_id")).join(
-        d_ids, "doc_id", "left_anti"
-    )
-    missing = d_ids.join(
-        e.select(F.col("vec_id").alias("doc_id")), "doc_id", "left_anti"
-    )
-    cov = orphans.agg(F.count(F.lit(1)).alias("c0")).crossJoin(
-        missing.agg(F.count(F.lit(1)).alias("c1"))
-    )
-    cov_rows = cov.selectExpr(
-        "stack(2, 'fk_orphan_vectors(documents)', c0,"
-        " 'census:docs_without_vector', c1) AS (rule, violations)"
-    )
-    return table_rows.unionByName(cov_rows)

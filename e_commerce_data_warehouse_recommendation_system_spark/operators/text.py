@@ -259,7 +259,6 @@ def two_phase_tape_offsets(
     counted: DataFrame,
     shard_col: str = "lang",
     count_col: str = "n_tokens",
-    staged: bool = False,
 ) -> DataFrame:
     """Per-shard running start offsets (tape layout) WITHOUT a corpus-sized
     single-partition sort.
@@ -293,39 +292,8 @@ def two_phase_tape_offsets(
     localCheckpoint — the input lineage executes exactly once no matter
     what the caller passes, and the blocks are ContextCleaner-reclaimed
     when the result frame drops (unlike a cache, nothing accumulates).
-    Callers no longer pre-cache the per-doc length table. A caller whose
-    input is ALREADY materialized (a localCheckpointed stage frame) opts
-    out with ``staged=True`` — re-checkpointing a checkpointed frame
-    copies its rows for nothing (a waste that grows with the input's row
-    count at 100 TB); the default stays the safe
-    self-staging path. ``staged=True`` is ASSERTED, not trusted (r13):
-    the opt-out branch verifies the optimized plan is a materialized
-    scan / cached relation and raises otherwise."""
-    if not staged:
-        counted = counted.localCheckpoint(eager=True)
-    else:
-        # staged=True is a CONTRACT, not a hint (r12 verdict nit #3): both
-        # phases consume the input, so an unmaterialized frame would
-        # execute its lineage twice — the exact double-scan the two-phase
-        # design exists to avoid. Mechanical check: the optimized plan
-        # must be a materialized scan (LogicalRDD after a localCheckpoint
-        # / explicit checkpoint) or a cached relation — fail loudly
-        # otherwise instead of silently re-running the upstream DAG.
-        # Inspect the plan ROOT node class (r13 ADVICE): substring-matching
-        # the whole tree passed any plan built ON TOP OF a cached subtree
-        # (e.g. a join over a cached frame) — a false negative in a guard
-        # whose whole purpose is to fail loudly, since the outer lineage
-        # above the cache point still re-executes twice.
-        root = counted._jdf.queryExecution().optimizedPlan()
-        root_cls = root.getClass().getSimpleName()
-        if root_cls not in ("LogicalRDD", "InMemoryRelation"):
-            first_line = root.toString().splitlines()[0][:120]
-            raise AssertionError(
-                "two_phase_tape_offsets(staged=True) requires a "
-                "MATERIALIZED input (localCheckpoint/checkpoint/cached); "
-                f"got plan root {root_cls}: {first_line} "
-                "— drop staged=True to let the helper self-stage"
-            )
+    Callers no longer pre-cache the per-doc length table."""
+    counted = counted.localCheckpoint(eager=True)
     bucketed = counted.withColumn(
         "_tb", F.expr(f"doc_id div {PACK_TAPE_BUCKET_DOCS}")
     )

@@ -1011,44 +1011,30 @@ def rec_pca_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _factor_serve_parity(spark: SparkSession, sf_dir: str) -> tuple[int, int, bool]:
-    """Factor-export serving parity, distributed: compare
-    ``rec_factor_serve_topk`` (dot products over exported factor tables)
-    against MLlib's ``recommendForUserSubset`` on the same subset. The
-    contract (tests/test_rec_serving_parity.py, now also driver-visible):
+    """Serving parity on the every-50th-user subset: the production path
+    (:func:`_topk_kernel` over :func:`_serving_state`) against MLlib's
+    ``recommendForUserSubset`` (:func:`rec_user_topk`). The contract:
     identical (user, rank) key sets, identical served ITEM SET per user
-    (anti-joins both ways — order-free, so float32-vs-float64 accumulation
-    ties can't flip it), and per-rank score agreement within 1e-4.
-    Returns (n_subset_users, n_rows, matches)."""
-    mllib = rec_user_topk(spark, sf_dir).cache()
-    manual = rec_factor_serve_topk(spark, sf_dir).cache()
-    extra = manual.join(
-        mllib.select("user_id", "item_id"), ["user_id", "item_id"], "left_anti"
-    ).count()
-    missing = mllib.join(
-        manual.select("user_id", "item_id"), ["user_id", "item_id"], "left_anti"
-    ).count()
-    n_rows = mllib.count()
-    n_users = mllib.select("user_id").distinct().count()
-    sc = (
-        mllib.select("user_id", "rnk", F.col("score").alias("s_mllib"))
-        .join(
-            manual.select("user_id", "rnk", F.col("score").alias("s_manual")),
-            ["user_id", "rnk"],
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_joined"),
-            F.max(F.abs(F.col("s_mllib") - F.col("s_manual"))).alias("max_diff"),
-        )
-        .collect()[0]
+    (order-free, so exactly tied scores can't flip it), and per-rank score
+    agreement within 1e-4. Returns (n_subset_users, n_rows, matches)."""
+    import numpy as np
+
+    st = _serving_state(_artifacts(spark, sf_dir))
+    # subset x TOP_K rows: bounded by the user dictionary
+    ref: dict[int, list] = {}
+    for r in rec_user_topk(spark, sf_dir).collect():
+        ref.setdefault(r.user_id, []).append((r.rnk, r.item_id, r.score))
+    users = sorted(u for u in st["user_row"] if u % 50 == 0)
+    rows = np.array([st["user_row"][u] for u in users], dtype=np.int64)
+    pos, score = _topk_kernel(st["U"][rows], st["V"], TOP_K)
+    ranks = list(range(1, pos.shape[1] + 1))
+    matches = sorted(ref) == users and all(
+        [rnk for rnk, _, _ in got] == ranks
+        and {it for _, it, _ in got} == set(st["item_ids"][pos[i]].tolist())
+        and np.abs(np.array([s for _, _, s in got]) - score[i]).max() < 1e-4
+        for i, got in enumerate(sorted(ref[u]) for u in users)
     )
-    matches = (
-        extra == 0
-        and missing == 0
-        and manual.count() == n_rows
-        and sc.n_joined == n_rows
-        and float(sc.max_diff or 0.0) < 1e-4
-    )
-    return n_users, n_rows, matches
+    return len(ref), sum(map(len, ref.values())), bool(matches)
 
 
 #: synthetic fold-in user index, far outside any trained index space
@@ -1170,7 +1156,7 @@ def rec_eval_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     full evaluation stack — P@k/R@k/F1 (``rec_eval_metrics``), catalog
     coverage (``rec_coverage``), held-out squared error (``rec_sq_error``),
     the 2-D PCA projection (``rec_pca_items``) — plus the two production
-    serving paths: factor-export serving parity vs ``recommendForUserSubset``
+    serving paths: the serving kernel's parity vs ``recommendForUserSubset``
     (``_factor_serve_parity``) and the fold-in trained-vs-solved cosine
     floor + unseen-user contract (``_fold_in_parity``). Each sub-op emits
     an oracle-checkable digest: counts that are SQL-derivable from the
@@ -1273,59 +1259,6 @@ def rec_model_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 COPURCHASE_TOP_K = 20
-
-
-def rec_factor_serve_topk(
-    spark: SparkSession, sf_dir: str, k: int = TOP_K
-) -> DataFrame:
-    """Serving from EXPORTED factors: top-k via explicit dot products over
-    the factor tables, bypassing the ALSModel object entirely — the
-    feature-store pattern (factors land in a serving store; rankers score
-    with plain linear algebra, no MLlib at inference time). Must reproduce
-    ``recommendForUserSubset`` exactly (same factors, same argmax):
-    asserted in tests/test_rec_serving_parity.py.
-
-    Plan shape: item factors are catalog-sized -> broadcast; each subset
-    user scores all items map-side (``zip_with``/``aggregate`` — JVM
-    higher-order fns, no Python), then the per-user top-k window. At 100 TB
-    the user side partitions freely; the item side stays the bounded
-    catalog — the same asymmetry recommendForAllUsers' blocked cross
-    product exploits.
-
-    Accumulation-precision caveat (part of the parity contract): this path
-    accumulates the dot product in float64 and casts the result to float32,
-    while MLlib's ``recommendForUserSubset`` accumulates in float32
-    (BLAS sdot). Scores can differ by ~1 ulp of float32, so near-tie
-    candidates may RANK differently at larger scale factors; the contract
-    therefore compares served item SETS per user plus score agreement
-    (1e-4), and only pins order where scores strictly descend — see
-    tests/test_rec_serving_parity.py and the factor_serve rows of
-    ``rec_eval_suite``."""
-    prepare(spark, sf_dir)
-    art = _artifacts(spark, sf_dir)
-    uf = art["model"].userFactors.select(
-        F.col("id").alias("user_idx"), F.col("features").alias("ufeat")
-    )
-    itf = art["model"].itemFactors.select(
-        F.col("id").alias("item_idx"), F.col("features").alias("ifeat")
-    )
-    subset = art["users"].filter(F.col("user_id") % 50 == 0)
-    users = subset.join(uf, "user_idx")
-    dot = F.aggregate(
-        F.zip_with(F.col("ufeat"), F.col("ifeat"), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    scored = users.join(F.broadcast(itf)).select(
-        "user_idx", "user_id", "item_idx", dot.cast("float").alias("score")
-    )
-    w = Window.partitionBy("user_idx").orderBy(F.desc("score"), F.asc("item_idx"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= k)
-        .join(F.broadcast(art["items"]), "item_idx")
-        .select("user_id", "item_id", "rnk", "score")
-    )
 
 
 def _gram_matrix(factors: DataFrame, rank: int) -> "list[list[float]]":
@@ -4102,7 +4035,7 @@ def rec_backtest_blend(spark: SparkSession, sf_dir: str) -> DataFrame:
     popularity prior on the temporal split: per warm eval user, the ALS
     unseen pool and the (seen-filtered) train-period popularity shelf
     fuse by reciprocal rank (RRF_C = 60, rank fusion never score mixing —
-    the rec_rrf_hybrid / sim_hybrid_rrf discipline), and the fused
+    the rec_rrf_hybrid discipline), and the fused
     top-{TOP_K} is scored against the SAME novel truth as every other
     row. This is how the serving capstone's fallback question resolves in
     production: blend, don't switch. Census shape and oracle are the ALS

@@ -94,11 +94,6 @@ SCHEMAS: dict[str, T.StructType] = {
         ("source", T.StringType()),
         ("n_chars", T.LongType()),
     ),
-    "embeddings": _struct(
-        ("vec_id", T.LongType()),
-        ("embedding", T.ArrayType(T.FloatType())),
-        ("label", T.IntegerType()),
-    ),
 }
 
 TABLES: tuple[str, ...] = tuple(SCHEMAS)
@@ -152,7 +147,7 @@ def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TA
     """Register the testdata tables as temp views for the SQL entry point
     (S4: the reference's ``pd.read_sql`` path -> ``spark.sql`` over views).
 
-    Memoized per (session, sf_dir): re-registering all 10 views costs ~1 s
+    Memoized per (session, sf_dir): re-registering all 9 views costs ~1 s
     of parquet footer reads, and the driver calls ``prepare`` once per
     query — ~90 queries would spend more time on registration than on
     work. Switching sf_dir (entry at sf0.001, oracle runs at sf0.01)

@@ -1727,7 +1727,7 @@ def stream_fold_in_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     users (join-pruned), the solve is rank^2 per user inside Arrow batches,
     and the factor-state upsert is the keyed-merge posture of
     stream_event_daily_upsert; serving broadcasts the bounded catalog
-    factors (rec_factor_serve_topk's asymmetry). Total fold work across a
+    factors while the user side partitions freely. Total fold work across a
     drain is <= n_batches x one full fold."""
     import os
 
@@ -1858,7 +1858,7 @@ def stream_fold_in_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
         # exported-factor serving for the audit subset — every
-        # FOLD_IN_AUDIT_MOD-th user, the rec_factor_serve_topk subset
+        # FOLD_IN_AUDIT_MOD-th user, rec_user_topk's subset
         # convention: the serve cross product is subset x catalog, so the
         # modulus directly sets the timed slot's dominant cost
         itf = art["model"].itemFactors.select(
@@ -2096,154 +2096,5 @@ def stream_serving_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-# --------------------------------------------------------------------------
-# Streaming ANN index ingestion (round 14): the continuous-arrival half of
-# the IVF lifecycle (sim_ivf_incremental_add proves ONE frozen-centroid
-# batch add; production arrivals are a stream of them)
-# --------------------------------------------------------------------------
-
-
-def _sql_stream_ivf_ingest() -> str:
-    return """
-    SELECT label, CAST(value_num AS BIGINT) AS value_num FROM (
-      SELECT 'n_vectors' AS label,
-             (SELECT COUNT(*) FROM embeddings) AS value_num
-      UNION ALL SELECT 'n_batches', 3
-      UNION ALL SELECT 'terminal_equals_oneshot_ok', 1
-      UNION ALL SELECT 'census_additive_ok', 1
-      UNION ALL SELECT 'replay_noop_ok', 1
-    )
-    """
-
-
-@component(
-    "stream_ivf_ingest",
-    cols=[("label", "str"), ("value_num", "num")],
-    oracle=_sql_stream_ivf_ingest(),
-)
-def stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING VECTOR-STORE INGESTION — the §2.12 twin of the ANN
-    lifecycle: embedding arrivals land as micro-batches (3 vec_id-sharded
-    files, maxFilesPerTrigger=1), each batch is assigned to the FROZEN
-    base-fitted centroids inside ``foreachBatch`` with the IDENTICAL
-    nearest-cell expression the batch index build uses
-    (similarity._nearest_cell over similarity.frame_with_norms), and each
-    batch's assignments commit as an append-only _SUCCESS-gated version
-    (the r14 _fold_committed guard — a crash mid-write replays cleanly).
-    This is how a production vector store actually fills: continuous
-    assignment against the deployed centroids, with the skew that
-    accumulates handled by the scheduled maintenance pass
-    (sim_ivf_rebalance / sim_ivf_lifecycle).
-
-    Contract flags, computed from genuine frame comparisons after the
-    AvailableNow drain:
-    ``terminal_equals_oneshot_ok`` — the union of all committed versions'
-    (vec_id, cell) pairs equals a one-shot assignment of the full corpus
-    against the same centroids (both-ways exceptAll, counts equal);
-    ``census_additive_ok`` — per-cell counts accumulated batch-by-batch
-    (<= IVF_CELLS rows per batch, the bounded-collect census class) sum
-    to the terminal census; ``replay_noop_ok`` — re-invoking the fold
-    with an already-committed batch_id leaves the version store
-    byte-identical (the at-least-once guard verified at runtime, not
-    assumed).
-
-    Scale: per-batch assignment is a map-side broadcast-centroid argmin
-    (the batch never shuffles against the corpus); the store is
-    append-only versions (no rewrite-the-world merge); the terminal
-    comparison is the test harness, not the serving path. At 100 TB the
-    file source swaps for Kafka and the version store for the index's
-    posting-list partitions — nothing in the fold changes."""
-    from e_commerce_data_warehouse_recommendation_system_spark.operators.similarity import (
-        _incremental_fixtures,
-        _nearest_cell,
-        frame_with_norms,
-    )
-
-    prepare(spark, sf_dir)
-    fix = _incremental_fixtures(spark, sf_dir)
-    centroids = fix["centroids"]
-
-    tmp = tempfile.mkdtemp(prefix="ecomdw_ivfstream_")
-    stage = f"{tmp}/landing"
-    os.makedirs(stage)
-    emb = spark.table("embeddings")
-    for b in range(3):
-        shard_dir = f"{tmp}/shard{b}"
-        emb.filter(F.col("vec_id") % 3 == b).coalesce(1).write.parquet(shard_dir)
-        part = [f for f in os.listdir(shard_dir) if f.endswith(".parquet")][0]
-        os.symlink(f"{shard_dir}/{part}", f"{stage}/shard{b}.parquet")
-
-    root = f"{tmp}/index"
-    os.makedirs(root)
-    census: dict[int, int] = {}
-    folded: list[int] = []
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        out = f"{root}/v{batch_id}"
-        if _fold_committed(out):
-            return  # at-least-once replay: this batch's version is committed
-        assigned = _nearest_cell(frame_with_norms(batch_df), centroids)
-        assigned.select("vec_id", "cell").write.parquet(out)
-        sp = batch_df.sparkSession
-        for r in (
-            sp.read.parquet(out)
-            .groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        ):  # <= IVF_CELLS rows: the bounded-collect census class
-            census[int(r["cell"])] = census.get(int(r["cell"]), 0) + int(r["n"])
-        folded.append(batch_id)
-
-    schema = spark.read.parquet(stage).schema
-    try:
-        (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        versions = sorted(d for d in os.listdir(root) if d.startswith("v"))
-        terminal = spark.read.parquet(*(f"{root}/{d}" for d in versions))
-        oneshot = _nearest_cell(fix["vecs"], centroids).select("vec_id", "cell")
-        n_terminal = terminal.count()
-        identical = (
-            n_terminal == oneshot.count()
-            and terminal.exceptAll(oneshot).count() == 0
-            and oneshot.exceptAll(terminal).count() == 0
-        )
-        term_census = {
-            int(r["cell"]): int(r["n"])
-            for r in terminal.groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()  # <= IVF_CELLS rows
-        }
-        additive = term_census == census
-        # runtime replay check: re-fold a committed batch — the guard must
-        # no-op (no new/changed versions, no census drift)
-        before = {d: os.path.getmtime(f"{root}/{d}") for d in versions}
-        census_before = dict(census)
-        fold(spark.read.parquet(f"{stage}/shard0.parquet"), folded[0])
-        after = {
-            d: os.path.getmtime(f"{root}/{d}")
-            for d in sorted(os.listdir(root))
-            if d.startswith("v")
-        }
-        replay_noop = after == before and census == census_before
-        rows = [
-            ("n_vectors", n_terminal),
-            ("n_batches", len(versions)),
-            ("terminal_equals_oneshot_ok", 1 if identical else 0),
-            ("census_additive_ok", 1 if additive else 0),
-            ("replay_noop_ok", 1 if replay_noop else 0),
-        ]
-        return spark.createDataFrame(rows, schema="label string, value_num bigint")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

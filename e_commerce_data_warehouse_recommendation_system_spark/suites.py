@@ -3,7 +3,7 @@
 The verify driver checks only the first ``registry.DRIVER_QUERY_BUDGET`` (50)
 registered queries. Flagship queries keep their own slots; the ~60 micro
 operators from SURVEY.md §2 (projections, joins, aggregations, windows, set
-ops, scalar functions, catalog, ETL dims, text profile, vector ops, sinks)
+ops, scalar functions, catalog, ETL dims, text profile, sinks)
 register as *components* — full queries with full-result oracles, checked
 individually by ``scripts/check_correctness.py --components`` — and each
 family below collapses into ONE oracle-checked digest query
@@ -23,7 +23,6 @@ import e_commerce_data_warehouse_recommendation_system_spark.operators.dedup  # 
 import e_commerce_data_warehouse_recommendation_system_spark.operators.relational  # noqa: F401
 import e_commerce_data_warehouse_recommendation_system_spark.plans.etl  # noqa: F401
 import e_commerce_data_warehouse_recommendation_system_spark.plans.queries  # noqa: F401
-import e_commerce_data_warehouse_recommendation_system_spark.operators.similarity  # noqa: F401
 import e_commerce_data_warehouse_recommendation_system_spark.operators.text  # noqa: F401
 import e_commerce_data_warehouse_recommendation_system_spark.operators.quality  # noqa: F401
 import e_commerce_data_warehouse_recommendation_system_spark.recommend.queries  # noqa: F401
@@ -99,9 +98,6 @@ SUITE_SPECS: dict[str, list[str]] = {
         # DQ: the documents-table ingestion contract incl. the derived
         # n_chars==length(text) integrity rule (round 11)
         "dq_documents_checks",
-        # DQ: the embeddings-table ingestion contract — dim/finiteness/
-        # zero-norm/label/coverage + decimal-exact norm digest (round 12)
-        "dq_embeddings_checks",
         # DQ: snapshot-over-snapshot corpus drift monitor — per-lang share
         # and length profile deltas in exact integer micro (round 12)
         "dq_corpus_drift",
@@ -153,7 +149,6 @@ SUITE_SPECS: dict[str, list[str]] = {
         "d2_dedup_pair_subset",
         "d3_distinct",
         "dedup_clusters",
-        "dedup_embedding_exact",
         # short-string entity resolution: blocked edit-distance join
         "dedup_fuzzy_names",
         # ER end-to-end: match edges -> transitive clusters -> golden
@@ -177,11 +172,6 @@ SUITE_SPECS: dict[str, list[str]] = {
         # near-dup-aware sampling weights: 1e6 // cluster size per doc,
         # the soft alternative to hard removal (round 12)
         "dedup_cluster_weights",
-        # hybrid lexical+vector retrieval fused by reciprocal rank (round 12)
-        "sim_hybrid_rrf",
-        # fusion quality census: per-modality coverage + keep rates +
-        # dual-hit count, exact on both sides (round 12)
-        "sim_hybrid_quality",
         # regular-grid resampling: gap fill + forward fill per user
         "ts_resample_ffill",
         # Holt level+trend smoothing: per-series sequential state via
@@ -373,42 +363,6 @@ SUITE_SPECS: dict[str, list[str]] = {
         # token-budget sampling per source: md5-order cumulative token
         # sums via the two-phase prefix machinery, crossing doc included
         "text_token_budget_sample",
-    ],
-    # vector representation and indexing over the embeddings table
-    "sim_vector_suite": [
-        "sim_l2_normalize",
-        # chunk->doc mean-pooling (decimal-exact sum digest, round 11)
-        "sim_chunk_pool_embeddings",
-        "sim_quantize_int8",
-        # trained-centroid clustering (contract digest, ALS-factor class)
-        "sim_kmeans_clusters",
-        # SemDeDup: cell-bounded cosine prune over the shared fit
-        "sim_semantic_dedup",
-        # product-quantization codebooks (IVF-PQ memory layout)
-        "sim_pq_codes",
-        # ADC search + exact rerank over the PQ codes (IVF-PQ serving path)
-        "sim_pq_adc_search",
-        # combined IVF probe -> ADC -> rerank (full FAISS-IVFPQ pipeline)
-        "sim_ivf_pq_search",
-        # IVF index persist + reload -> identical served top-k (round 11)
-        "sim_ivf_index_persist",
-        # incremental ingestion: frozen-centroid batch add, additivity +
-        # serve parity vs the one-shot index (round 12)
-        "sim_ivf_incremental_add",
-        # index maintenance: cell-balance census + seeded 2-means split of
-        # hot cells, conservation/locality/shape flags (round 13)
-        "sim_ivf_rebalance",
-        # the full lifecycle rung: incremental add -> rebalance the GROWN
-        # index -> serve, recall floor held end-to-end (round 14)
-        "sim_ivf_lifecycle",
-        # streaming vector-store ingestion: frozen-centroid assignment per
-        # micro-batch, _SUCCESS-gated append-only versions, terminal ==
-        # one-shot + runtime replay no-op (round 14)
-        "stream_ivf_ingest",
-        # per-dimension cohort mean-shift drift monitor (full oracle)
-        "sim_embedding_drift",
-        # topic-balanced sampling over the trained cells (shares the fit)
-        "sim_cluster_balanced_sample",
     ],
     # recommender prep: label encode / interactions / hash split
     "rec_prep_suite": [

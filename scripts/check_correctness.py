@@ -47,7 +47,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 #: the testdata tables (sources.readers.TABLES, spelled out: this module is
 #: loaded before the engine is imported, so it imports no engine code)
 TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
+    "region nation customer supplier part orders lineitem events documents"
 ).split()
 
 

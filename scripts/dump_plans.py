@@ -35,7 +35,6 @@ LAZY = [
     "etl_fact_double_fanout",
     "etl_star_revenue_by_date",
     "etl_scd2_customer_priority",
-    "sim_cosine_topk",
     "text_lang_id",
     "text_pack_sequences",
     "dedup_exact",

@@ -20,6 +20,7 @@ import duckdb
 import pytest
 
 from e_commerce_data_warehouse_recommendation_system_spark import registry
+from e_commerce_data_warehouse_recommendation_system_spark.sources.readers import TABLES
 
 # full-gate lane: multi-minute property/identity/streaming work (see pytest.ini)
 pytestmark = pytest.mark.slow
@@ -35,7 +36,7 @@ def dedup_dir(spark, tmp_path_factory):
     out = str(base / "fixture")
     os.makedirs(out)
     for t in (
-        "region nation customer supplier part orders lineitem events embeddings"
+        "region nation customer supplier part orders lineitem events"
     ).split():
         os.symlink(f"/root/testdata/sf0.001/{t}.parquet", f"{out}/{t}.parquet")
     T = _toks("t", 22)  # t00..t21
@@ -65,10 +66,7 @@ def dedup_dir(spark, tmp_path_factory):
 
 def _duck(dedup_dir):
     con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
+    for t in TABLES:
         path = f"{dedup_dir}/{t}.parquet"
         src = f"{path}/*.parquet" if os.path.isdir(path) else path
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
@@ -149,8 +147,7 @@ def er_dir(spark, tmp_path_factory):
     out = str(base / "fixture")
     os.makedirs(out)
     for t in (
-        "region nation customer supplier orders lineitem events "
-        "documents embeddings"
+        "region nation customer supplier orders lineitem events documents"
     ).split():
         os.symlink(f"/root/testdata/sf0.001/{t}.parquet", f"{out}/{t}.parquet")
     names = (

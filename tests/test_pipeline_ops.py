@@ -1,8 +1,8 @@
 """Invariant tests for the round-4 pipeline operators: vocabulary build,
-OOV-rate scoring, market-basket co-purchase lift, and int8 embedding
-quantization. Cross-engine value equality is covered by the DuckDB oracles
-(scripts/check_correctness.py); these pin the semantic contracts that an
-oracle rewrite could silently relax."""
+OOV-rate scoring and market-basket co-purchase lift. Cross-engine value
+equality is covered by the DuckDB oracles (scripts/check_correctness.py);
+these pin the semantic contracts that an oracle rewrite could silently
+relax."""
 
 from __future__ import annotations
 
@@ -62,36 +62,6 @@ def test_copurchase_pairs_contract(spark):
         assert r.part_a < r.part_b  # unordered pair, canonical orientation
         assert 1 <= r.pair_count <= min(r.cnt_a, r.cnt_b)
         assert r.lift > 0
-
-
-def test_quantize_int8_codes(spark):
-    from pyspark.sql import functions as F
-
-    from e_commerce_data_warehouse_recommendation_system_spark.operators.similarity import (
-        QUANT_LEVELS,
-        sim_quantize_int8,
-    )
-
-    q = sim_quantize_int8(spark, SF0001).cache()
-    n_vec = spark.read.parquet(f"{SF0001}/embeddings.parquet").count()
-    dim = len(
-        spark.read.parquet(f"{SF0001}/embeddings.parquet").first()["embedding"]
-    )
-    assert q.count() == n_vec * dim
-    assert (
-        q.filter((F.col("code") < 0) | (F.col("code") > QUANT_LEVELS)).count() == 0
-    )
-    # the min and max elements of every vector land on the end codes
-    # (max may floor to QUANT_LEVELS-1 by one ulp — both engines agree,
-    # but the contract here is the coarse one: ends are near the rails)
-    ends = (
-        q.groupBy("vec_id")
-        .agg(F.min("code").alias("lo"), F.max("code").alias("hi"))
-        .filter((F.col("lo") != 0) | (F.col("hi") < QUANT_LEVELS - 1))
-        .count()
-    )
-    assert ends == 0
-    q.unpersist()
 
 
 def test_domain_cap_two_phase_equals_windowed(spark):

@@ -204,27 +204,6 @@ def test_partitioned_fact_gets_partition_pruning(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_embedding_neardup_joins_on_buckets_not_pairs(spark):
-    """The registered embedding near-dup must generate candidates through
-    the LSH bucket join — a corpus x corpus nested-loop/cartesian pair space
-    is the scale-killer this operator exists to avoid. The only nested-loop
-    allowed is the deliberate planes broadcast (a bounded ~32-row side)."""
-    from e_commerce_data_warehouse_recommendation_system_spark.operators.dedup import (
-        dedup_embedding_cosine,
-    )
-
-    plan = _plan(dedup_embedding_cosine(spark, SF0001))
-    assert "CartesianProduct" not in plan
-    # candidate generation joins on the (tbl, bucket) keys
-    assert "tbl" in plan and "bucket" in plan
-    # every corpus-sized join is hash/sort-merge keyed, so the pair space is
-    # bucket-restricted; the nested-loop joins in the plan are the planes
-    # broadcast inside lsh_membership (BuildRight of a limit-32 side)
-    for line in plan.splitlines():
-        if "BroadcastNestedLoopJoin" in line:
-            assert "BuildRight" in line
-
-
 def test_heavy_hitters_topk_without_global_window(spark):
     """a14: top-K must compile to TakeOrderedAndProject (per-partition
     top-K, driver merge) — never a global sort or window — and the share
@@ -423,20 +402,6 @@ def test_itemcf_count_joins_broadcast(spark):
     assert "hashpartitioning(item_id" in plan
 
 
-def test_pq_encode_is_shuffle_free(spark):
-    """pq_encode: codebooks are literals, so encoding must be a pure
-    map-side projection over the embeddings scan — any Exchange means the
-    codebook entered as a join instead of a broadcastable constant."""
-    from e_commerce_data_warehouse_recommendation_system_spark.operators.similarity import (
-        pq_encode,
-    )
-    from e_commerce_data_warehouse_recommendation_system_spark.sources.readers import prepare
-
-    prepare(spark, SF0001)
-    plan = _plan(pq_encode(spark, SF0001))
-    assert "Exchange" not in plan, "PQ encoding must not shuffle"
-
-
 #: Shuffle budget per lazy headline query (Exchange hash/range/single
 #: counts in the executed plan at sf0.001, AQE on). These are CEILINGS
 #: pinning the current plan shapes: a refactor that silently adds an
@@ -462,13 +427,6 @@ SHUFFLE_BUDGET = {
     "etl_fact_double_fanout": 0,
     "etl_star_revenue_by_date": 1,
     "etl_scd2_customer_priority": 2,
-    # r14 opt: two-phase top-k — the decimal-exact fold now runs on the
-    # ~k-per-query candidates the cheap double prefilter keeps, not on
-    # every query x corpus pair (1.9x at sf0.1, result bit-identical).
-    # The two extra exchanges are the per-query threshold window over the
-    # narrow (ids + fast score) checkpoint and the candidate re-attach —
-    # tiny frames; the pair-wide decimal pass they replace dominated.
-    "sim_cosine_topk": 3,
     "text_lang_id": 3,
     # two-phase tape layout (round 11): bucket-sum rollup (map-side
     # partial, bucket rows only) + tiny bucket-prefix window + the ONE
@@ -521,12 +479,6 @@ COMPONENT_SHUFFLE_BUDGET = {
     "text_gopher_rules": 0,
     # round 11: six-rule documents contract = one agg (+ stack reshape)
     "dq_documents_checks": 2,
-    # round 12: embeddings contract = one table agg + the two coverage
-    # anti-join counts (id-column-pruned) + the 1-row assembly
-    "dq_embeddings_checks": 4,
-    # round 12: hybrid RRF = cosine rung (norm pass + per-query window) +
-    # shared-shingle join/sizes/rank + the k-bounded fusion join/window
-    "sim_hybrid_rrf": 9,
     # round 12: cold-start census = the popularity backtest's two pruned
     # fact scans + cold anti-join + shelf top-k + per-user rollup
     "rec_backtest_coldstart": 8,
@@ -657,7 +609,7 @@ def test_headline_queries_stay_inside_shuffle_budget(spark):
     plan fragments globally, so caches registered by whichever tests ran
     earlier in the session can splice their InMemoryRelation (and its
     build exchanges) into these plans and shift the counts — running the
-    registry-contract test first flipped sim_cosine_topk 1→2 this way.
+    registry-contract test first raised a pinned count by one this way.
     clearCache() makes the count a property of the query, not the test
     order."""
     from e_commerce_data_warehouse_recommendation_system_spark import registry

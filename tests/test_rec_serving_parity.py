@@ -1,69 +1,17 @@
-"""Factor-export serving parity: scoring with plain dot products over the
-exported factor tables must reproduce MLlib's ``recommendForUserSubset``
-argmax exactly — this is what licenses serving ALS factors from a feature
-store without the ALSModel object at inference time.
-
-Rank ties (two items with bit-identical float scores for a user) are broken
-by item id in the manual scorer but arbitrarily by MLlib, so the assertion
-compares the SET of served items per user plus score agreement, and only
-checks order where scores are strictly decreasing — the deterministic part
-of the contract.
+"""ALS fold-in: solving user factors against the trained item factors
+must reproduce the trained user factors, and must serve a user unseen in
+training. Serving parity of the top-k kernel against MLlib lives in
+tests/test_serve_user_parity.py.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from e_commerce_data_warehouse_recommendation_system_spark.recommend.queries import (
-    rec_factor_serve_topk,
-    rec_user_topk,
-)
 from tests.conftest import SF0001
 
 # full-gate lane: multi-minute property/identity/streaming work (see pytest.ini)
 pytestmark = pytest.mark.slow
-
-
-def test_factor_serving_matches_mllib_subset(spark):
-    mllib = {
-        (r.user_id, r.rnk): (r.item_id, r.score)
-        for r in rec_user_topk(spark, SF0001).collect()
-    }
-    manual = {
-        (r.user_id, r.rnk): (r.item_id, r.score)
-        for r in rec_factor_serve_topk(spark, SF0001).collect()
-    }
-    assert mllib.keys() == manual.keys()
-
-    by_user: dict = {}
-    for (uid, rnk), (item, score) in mllib.items():
-        by_user.setdefault(uid, {})[rnk] = (item, score)
-    for uid, rows in by_user.items():
-        m_items = {item for item, _ in rows.values()}
-        n_items = {manual[(uid, r)][0] for r in rows}
-        assert m_items == n_items, f"user {uid}: served item sets differ"
-        for r in rows:
-            assert abs(rows[r][1] - manual[(uid, r)][1]) < 1e-4, (
-                f"user {uid} rank {r}: score mismatch {rows[r][1]} vs "
-                f"{manual[(uid, r)][1]}"
-            )
-            # strict-descent positions must agree on the item too
-            if r + 1 in rows and rows[r][1] - rows[r + 1][1] > 1e-5:
-                assert rows[r][0] == manual[(uid, r)][0], (
-                    f"user {uid} rank {r}: item mismatch on non-tied score"
-                )
-
-
-def test_factor_serving_stays_jvm_side(spark):
-    """The scoring pass must be JVM higher-order functions, not Python UDFs:
-    no BatchEvalPython / ArrowEvalPython in the physical plan."""
-    plan = (
-        rec_factor_serve_topk(spark, SF0001)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "EvalPython" not in plan, f"Python UDF in the serving path:\n{plan}"
 
 
 def test_fold_in_reproduces_trained_factors(spark):

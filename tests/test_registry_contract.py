@@ -20,7 +20,6 @@ FAMILIES = (
     "j_asof",  # custom as-of join
     "etl_",  # warehouse ETL
     "dedup_",  # text dedup ladder
-    "sim_",  # similarity / ANN
     "text_",  # text analysis
     "dq_",  # data quality
     "rec_",  # recommender

@@ -37,7 +37,7 @@ def short_doc_dir(spark, tmp_path_factory):
     out = str(base / "fixture")
     os.makedirs(out)
     for t in (
-        "region nation customer supplier part orders lineitem events embeddings"
+        "region nation customer supplier part orders lineitem events"
     ).split():
         os.symlink(f"{SF0001}/{t}.parquet", f"{out}/{t}.parquet")
     ref = spark.read.parquet(f"{SF0001}/documents.parquet")

@@ -478,7 +478,7 @@ def leakage_dir(spark, tmp_path_factory):
     out = str(base / "fixture")
     os.makedirs(out)
     for t in (
-        "region nation customer supplier part orders lineitem events embeddings"
+        "region nation customer supplier part orders lineitem events"
     ).split():
         os.symlink(f"/root/testdata/sf0.001/{t}.parquet", f"{out}/{t}.parquet")
     p = " ".join(f"p{i:02d}" for i in range(10))

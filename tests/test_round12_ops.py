@@ -107,63 +107,6 @@ def test_backtest_als_lift_floors(spark):
     assert rates["rate_micro"] > pop_rate
 
 
-def test_dq_embeddings_contract_clean_and_catches_injection(spark, tmp_path_factory):
-    """The embeddings contract reports zero violations on the shipped
-    sf0.001 testdata (where coverage is exactly 1:1), and each rule fires
-    on an injected corrupted table — driven through the REAL component
-    over a constructed fixture dir, not a re-built rule list."""
-    import math
-    import os
-
-    from e_commerce_data_warehouse_recommendation_system_spark.registry import (
-        components,
-    )
-
-    fn = components()["dq_embeddings_checks"].fn
-    clean = {r.rule: r.violations for r in fn(spark, SF0001).collect()}
-    assert len(clean) == 11
-    for rule, v in clean.items():
-        if rule.startswith("digest:"):
-            continue
-        assert v == 0, (rule, v)
-    # norm digest sanity on the clean table: 64-dim unit-ish vectors
-    assert 0 < clean["digest:min_sqnorm_micro"] <= clean["digest:max_sqnorm_micro"]
-
-    base = tmp_path_factory.mktemp("emb_dq")
-    out = str(base / "fixture")
-    os.makedirs(out)
-    for t in (
-        "region nation customer supplier part orders lineitem events"
-    ).split():
-        os.symlink(f"/root/testdata/sf0.001/{t}.parquet", f"{out}/{t}.parquet")
-    docs = [(i, f"doc {i}", "en", "src1", 6 + len(str(i))) for i in range(1, 5)]
-    spark.createDataFrame(
-        docs, "doc_id long, text string, lang string, source string, n_chars long"
-    ).coalesce(1).write.parquet(f"{out}/documents.parquet")
-    vecs = [
-        (1, [1.0, 0.0], 3),  # ok (2-dim majority)
-        (2, [float("nan"), 1.0], 0),  # NaN component
-        (3, [0.0, 0.0], 0),  # zero norm
-        (99, [1.0, float("inf")], 11),  # orphan id + Inf + label out of range
-        (None, [0.5, 0.5, 0.5], None),  # null id + ragged dim + null label
-    ]
-    spark.createDataFrame(
-        vecs, "vec_id long, embedding array<float>, label int"
-    ).coalesce(1).write.parquet(f"{out}/embeddings.parquet")
-    got = {r.rule: r.violations for r in fn(spark, out).collect()}
-    assert got["not_null(vec_id)"] == 1
-    assert got["dim_consistent(embedding)"] == 1  # two distinct dims
-    assert got["finite(embedding)"] == 2  # NaN row + Inf row
-    assert got["nonzero_norm(embedding)"] == 1
-    assert got["accepted_range(label)"] == 2  # label 11 + null label
-    assert got["fk_orphan_vectors(documents)"] >= 1  # id 99 (null id joins nothing)
-    assert got["census:docs_without_vector"] == 1  # doc 4 has no vector
-    # NaN/Inf rows fall out of the decimal digest as NULLs (skipped by the
-    # aggregates); the clean rows still produce a well-defined integer sum
-    assert got["digest:sum_sqnorm_micro"] is not None
-    assert math.isfinite(float(got["digest:sum_sqnorm_micro"]))
-
-
 def test_cluster_weights_algebra(spark):
     """Weight algebra on the real component: every cluster's members share
     its root and size; exactly one keeper per cluster (the root itself);
@@ -193,44 +136,6 @@ def test_cluster_weights_algebra(spark):
     assert any(
         len(m) == 1 and m[0].weight_micro == 1000000 for m in by_root.values()
     )
-
-
-def test_hybrid_rrf_fusion_properties(spark):
-    """Fusion invariants on the real component: <= k rows per query with
-    contiguous ranks; every hit came from at least one modality; RRF
-    scores are consistent with the flags (a both-modality hit outscores
-    floor bounds); ordering is (score desc, id asc); and both
-    single-modality and (if present) dual-modality hits exist."""
-    from e_commerce_data_warehouse_recommendation_system_spark.operators.dedup import (
-        RRF_FUSION_K,
-    )
-    from e_commerce_data_warehouse_recommendation_system_spark.operators.similarity import (
-        TOPK,
-    )
-    from e_commerce_data_warehouse_recommendation_system_spark.registry import (
-        components,
-    )
-
-    rows = components()["sim_hybrid_rrf"].fn(spark, SF0001).collect()
-    assert rows
-    max_single = 1000000 // (RRF_FUSION_K + 1)
-    by_q: dict = {}
-    for r in rows:
-        assert r.from_vector or r.from_lexical
-        assert r.neighbor_id != r.query_id
-        if r.from_vector and r.from_lexical:
-            assert r.rrf_micro > max_single
-        else:
-            assert 0 < r.rrf_micro <= max_single
-        by_q.setdefault(r.query_id, []).append(r)
-    for q, hits in by_q.items():
-        assert len(hits) <= TOPK
-        hits.sort(key=lambda r: r.fused_rank)
-        assert [r.fused_rank for r in hits] == list(range(1, len(hits) + 1))
-        for a, b in zip(hits, hits[1:]):
-            assert (a.rrf_micro, -a.neighbor_id) >= (b.rrf_micro, -b.neighbor_id)
-    assert any(r.from_vector and not r.from_lexical for r in rows)
-    assert any(r.from_lexical and not r.from_vector for r in rows)
 
 
 def test_data_card_consistency(spark):
@@ -286,32 +191,6 @@ def test_backtest_coldstart_population_disjoint(spark):
     for r in rows:
         assert 0 <= r.n_hits <= min(TOP_K, r.n_post_items)
         assert r.p_at_k_micro == 1000000 * r.n_hits // TOP_K
-
-
-def test_ivf_incremental_add_contract(spark):
-    """Incremental ANN ingestion: the contract rows must show the batch
-    really arrived (queries unservable before, all servable after), the
-    base/batch split conserves the corpus, and both genuine parity flags
-    hold (additivity + serve identity vs the one-shot index)."""
-    from e_commerce_data_warehouse_recommendation_system_spark.registry import (
-        components,
-    )
-    from e_commerce_data_warehouse_recommendation_system_spark.sources.readers import (
-        prepare as _prep,
-    )
-
-    _prep(spark, SF0001)
-    rows = {
-        r.label: r.value_num
-        for r in components()["sim_ivf_incremental_add"].fn(spark, SF0001).collect()
-    }
-    n_emb = spark.table("embeddings").count()
-    assert rows["n_base"] + rows["n_batch"] == n_emb
-    assert rows["n_batch"] >= 1
-    assert rows["n_queries_before"] == 0
-    assert rows["n_queries_after"] >= 1
-    assert rows["assignment_additive_ok"] == 1
-    assert rows["serve_identical_ok"] == 1
 
 
 def test_backtest_leaderboard_totals_consistent(spark):

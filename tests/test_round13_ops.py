@@ -1,10 +1,8 @@
 """Round-13 regression tests.
 
-Round 13 closed the r12 verdict/advice items: the staged=True
-materialization contract is now asserted (not trusted), the hybrid
-build is memoized, the ALS backtest grew a hyperparameter-sensitivity
-grid and an online serving-quality monitor. These tests pin the new
-failure modes mechanically.
+Round 13 closed the r12 verdict/advice items: the ALS backtest grew a
+hyperparameter-sensitivity grid and an online serving-quality monitor.
+These tests pin the new failure modes mechanically.
 """
 
 from __future__ import annotations
@@ -12,39 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from e_commerce_data_warehouse_recommendation_system_spark.operators.text import (
-    two_phase_tape_offsets,
-)
-from e_commerce_data_warehouse_recommendation_system_spark.sources.readers import prepare
 from tests.conftest import SF0001
-
-
-def _counted(spark):
-    prepare(spark, SF0001)
-    return spark.table("documents").select(
-        "doc_id", "lang", F.length("text").alias("n_tokens")
-    )
-
-
-def test_staged_true_rejects_unmaterialized_input(spark):
-    """staged=True on a raw (unmaterialized) frame must raise: both
-    phases consume the input, so trusting the flag would re-execute the
-    upstream lineage twice — the exact double-scan the contract exists
-    to prevent (r12 verdict nit #3)."""
-    counted = _counted(spark)
-    with pytest.raises(AssertionError, match="MATERIALIZED"):
-        two_phase_tape_offsets(counted, "lang", "n_tokens", staged=True)
-
-
-def test_staged_true_accepts_checkpointed_and_matches_default(spark):
-    """A localCheckpointed input passes the staged=True assert, and the
-    opt-out path is row-identical to the self-staging default."""
-    counted = _counted(spark)
-    staged = counted.localCheckpoint(eager=True)
-    a = two_phase_tape_offsets(staged, "lang", "n_tokens", staged=True)
-    b = two_phase_tape_offsets(counted, "lang", "n_tokens")
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
 
 
 @pytest.mark.slow  # 7 seeded ALS fits
@@ -181,14 +147,3 @@ def test_blend_popularity_arm_broadcasts(spark):
     plan = pop_user._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" in plan
     assert "CartesianProduct" not in plan
-
-
-def test_staged_true_accepts_cached_input(spark):
-    """A cached (InMemoryRelation) input also satisfies the contract."""
-    counted = _counted(spark).cache()
-    try:
-        counted.count()
-        out = two_phase_tape_offsets(counted, "lang", "n_tokens", staged=True)
-        assert out.count() > 0
-    finally:
-        counted.unpersist()

@@ -23,10 +23,8 @@ from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from e_commerce_data_warehouse_recommendation_system_spark.sources.readers import (
-    SCHEMAS,
     TABLES,
     load_table,
 )
@@ -100,11 +98,6 @@ EXPECTED_DTYPES = {
         "lang": "string",
         "source": "string",
         "n_chars": "bigint",
-    },
-    "embeddings": {
-        "vec_id": "bigint",
-        "embedding": "array<float>",
-        "label": "int",
     },
 }
 
