@@ -33,7 +33,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from e_commerce_data_warehouse_recommendation_system_spark.functions.scalar import (
-    dec_sum,
     dec_sum_str,
     duration_days,
     word_title,

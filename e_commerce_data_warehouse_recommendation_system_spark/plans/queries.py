@@ -18,7 +18,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from e_commerce_data_warehouse_recommendation_system_spark.functions.scalar import (
-    dec_avg,
     dec_avg_exact,
     dec_str,
     dec_sum,

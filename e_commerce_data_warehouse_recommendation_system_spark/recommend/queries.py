@@ -17,17 +17,18 @@ mapping:
   mf_knn_recommender.py:108). Different optimizer (ALS normal equations vs
   SGD), so parity is metric-level, never factor-level — SURVEY §7 phase 3;
 - serving (M4/M5)       -> one float32 top-k kernel (``_topk_kernel``) that
-  replays MLlib's scoring: batch serving runs it per Arrow batch over the
-  user factors (the cluster replaces the reference's ThreadPoolExecutor,
-  reference: mf_knn_recommender.py:298-312); single-user serving runs it
-  on the driver-resident factors with no Spark job (reference:
+  replays MLlib's scoring over the driver-resident factors: batch serving
+  runs it in chunks over every trained user (the driver replaces the
+  reference's ThreadPoolExecutor, reference: mf_knn_recommender.py:298-312)
+  and single-user serving on one row with no Spark job (reference:
   use_model.py:46-50). ``recommendForUserSubset`` stays as the reference
   the kernel is checked against;
-- MMR (M6/M12)          -> grouped ``applyInPandas`` greedy re-ranker —
-  sequential per user, embarrassingly parallel across users
-  (reference: mf_knn_recommender.py:477-547);
-- eval (M7/M8)          -> P@k / R@k / F1 and catalog coverage as DataFrame
-  joins (reference: mf_knn_recommender.py:365-475);
+- MMR (M6/M12)          -> one numpy greedy body (``_mmr_picks``) per user,
+  run on the driver over the resident factors, or per Arrow batch for an
+  arbitrary candidate frame (reference: mf_knn_recommender.py:477-547);
+- eval (M7/M8)          -> P@k / R@k / F1 from the served top-k and one
+  collect of the held-out pairs; catalog coverage as a DataFrame
+  aggregate (reference: mf_knn_recommender.py:365-475);
 - PCA (M9)              -> ``pyspark.ml.feature.PCA`` on item factors
   (reference: mf_knn_recommender.py:324-363);
 - sampling (M10)        -> md5-hash deterministic split (the distributed
@@ -42,11 +43,11 @@ via orders ⋈ lineitem (the fact_orders customer×product pairs the reference
 trains on, reference: mf_knn_recommender.py:40-70).
 
 Scale posture: encoding dictionaries are bounded (distinct users/items);
-the ALS shuffle is on block ids (MLlib-internal); top-k serving emits
-k rows/user; eval joins shuffle on user_idx only. Besides final scalar
-metrics (which ARE the result rows), the only driver collect is the serving
-state: the trained factor tables, bounded by the dictionaries
-(``_serving_state``).
+the ALS shuffle is on block ids (MLlib-internal). The driver holds the
+serving state (the trained factor tables, bounded by the dictionaries,
+``_serving_state``), the top-k and MMR arrays computed from it (k rows
+per user) and the held-out pairs (``_held_out``, the one collect that
+grows with interactions).
 """
 
 from __future__ import annotations
@@ -56,6 +57,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from e_commerce_data_warehouse_recommendation_system_spark.operators.relational import (
@@ -226,6 +228,11 @@ def _artifacts(spark: SparkSession, sf_dir: str) -> dict:
     )
     train = encoded.filter(~F.col("bucket").isin(*_TEST_DIGITS)).cache()
     test = encoded.filter(F.col("bucket").isin(*_TEST_DIGITS)).cache()
+    # one ALS block per core, the rule _size_shuffle_partitions applies to
+    # shuffle partitions: MLlib's default of 10 blocks per side only adds
+    # tasks at these sizes. Each block seeds its factors from (SEED, block
+    # id), so the model follows the session's parallelism.
+    blocks = spark.sparkContext.defaultParallelism
     als = ALS(
         rank=RANK,
         maxIter=MAX_ITER,
@@ -237,6 +244,8 @@ def _artifacts(spark: SparkSession, sf_dir: str) -> dict:
         itemCol="item_idx",
         ratingCol="rating",
         coldStartStrategy="drop",
+        numUserBlocks=blocks,
+        numItemBlocks=blocks,
     )
     model = als.fit(train)
     art = {
@@ -275,23 +284,47 @@ def _decode_recs(recs: DataFrame, art: dict) -> DataFrame:
     )
 
 
-#: schema of every serving frame: batch (:func:`_topk_from_factors`) and
-#: single-user (:func:`serve_user`)
-_SERVE_SCHEMA = "user_id bigint, item_id bigint, rnk int, score float"
+#: schema of every serving frame: batch (:func:`_topk_recs`) and
+#: single-user (:func:`serve_user`) — ``user_id bigint, item_id bigint,
+#: rnk int, score float``, built as a StructType because parsing the DDL
+#: string costs a JVM round trip (~1.5 ms) on every request
+_SERVE_SCHEMA = T.StructType(
+    [
+        T.StructField("user_id", T.LongType()),
+        T.StructField("item_id", T.LongType()),
+        T.StructField("rnk", T.IntegerType()),
+        T.StructField("score", T.FloatType()),
+    ]
+)
+#: schema of every MMR frame: :func:`mmr_rerank` and
+#: :func:`mmr_diversify_frame`
+_MMR_SCHEMA = "user_id bigint, item_id bigint, relevance float, mmr_rank bigint"
+
+
+def _local_frame(spark: SparkSession, schema: "str | T.StructType", **cols) -> DataFrame:
+    """A frame over a pyarrow Table of driver arrays (the keyword order is
+    the column order). It plans as a LocalTableScan: building and
+    collecting it submit no Spark job (a Python list would cost one)."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table(cols), schema=schema)
 
 
 def _topk_kernel(U, V, k: int):
-    """The one top-k scoring kernel. Batch serving
-    (:func:`_topk_from_factors`, per Arrow batch), single-user serving
-    (:func:`serve_user`, one row) and fold-in scoring
-    (scripts/recommend_user.py) all rank through it.
+    """The one top-k scoring kernel. Batch serving (:func:`_topk_arrays`,
+    in chunks of users), single-user serving (:func:`serve_user`, one
+    row) and fold-in scoring (scripts/recommend_user.py and
+    ``stream_fold_in_serve``) all rank through it.
 
     ``U`` is an (m, rank) float32 user-factor block and ``V`` the
     (n, rank) float32 item factors ordered by item_idx. Returns
     ``(pos, score)``, both (m, min(k, n)): ``pos`` indexes rows of ``V``
     and ``score`` is float32. Each row is ordered by score descending,
     ties by position ascending — that is by item_idx, and so by item_id,
-    because ``_encode`` numbers ids by a sorted dense rank.
+    because ``_encode`` numbers ids by a sorted dense rank. Which of the
+    items tied at the k-th score make the cut is argpartition's choice,
+    so a prefix of a k=30 row need not equal the k=10 row: callers that
+    need both call the kernel twice.
 
     Scores replay MLlib's arithmetic: the pure-Java dev.ludovic.netlib
     BLAS computes each score as a SEQUENTIAL float32 multiply-add over
@@ -328,20 +361,19 @@ def _topk_kernel(U, V, k: int):
 
 def _serving_state(art: dict) -> dict:
     """Driver-resident serving state of one trained model, memoized in the
-    artifact dict: built by the refresh's first batch-serving call, then
-    reused by every request until the model is refit.
+    artifact dict: built by the refresh, then reused by every request
+    until the model is refit.
 
     - ``item_ids`` int64 (n_items,) and ``V`` float32 (n_items, rank): the
       item side, ordered by item_idx;
-    - ``user_row`` (user_id -> row) and ``U`` float32 (n_users, rank): the
-      user side;
-    - ``user_id_by_idx``: int64 user_idx -> user_id lookup, the batch
-      path's user decode.
+    - ``user_ids`` int64 (n_users,), ``user_row`` (user_id -> row) and
+      ``U`` float32 (n_users, rank): the user side, ordered by user_idx.
 
-    One collect: both factor frames, each joined to its encoding
-    dictionary, as one tagged union. The collect is bounded by the
-    dictionaries — (n_users + n_items) x rank float32 plus the id vectors,
-    about 2.3 MB at sf0.1 for rank 16."""
+    Both id vectors ascend, because ``_encode`` numbers ids by a sorted
+    dense rank. One collect: both factor frames, each joined to its
+    encoding dictionary, as one tagged union. The collect is bounded by
+    the dictionaries — (n_users + n_items) x rank float32 plus the id
+    vectors, about 2.3 MB at sf0.1 for rank 16."""
     if "serving" in art:
         return art["serving"]
     import numpy as np
@@ -368,124 +400,89 @@ def _serving_state(art: dict) -> dict:
 
     def arrays(is_user):
         sel = sorted((r for r in rows if r.is_user == is_user), key=lambda r: r.idx)
-        idx = np.array([r.idx for r in sel], dtype=np.int64)
         ids = np.array([r.nat_id for r in sel], dtype=np.int64)
         mat = np.array([r.features for r in sel], dtype=np.float32).reshape(len(sel), rank)
-        return idx, ids, mat
+        return ids, mat
 
-    u_idx, u_ids, U = arrays(True)
-    _, item_ids, V = arrays(False)
-    user_id_by_idx = np.full(int(u_idx.max()) + 1 if len(u_idx) else 0, -1, dtype=np.int64)
-    user_id_by_idx[u_idx] = u_ids
+    user_ids, U = arrays(True)
+    item_ids, V = arrays(False)
     art["serving"] = {
         "item_ids": item_ids,
         "V": V,
+        "user_ids": user_ids,
         "U": U,
-        "user_row": {int(u): i for i, u in enumerate(u_ids)},
-        "user_id_by_idx": user_id_by_idx,
+        "user_row": {int(u): i for i, u in enumerate(user_ids)},
     }
     return art["serving"]
 
 
-def _serving_broadcast(art: dict):
-    """The one broadcast of the serving state's item side plus the user
-    decode vector, memoized per model: every batch-serving call reuses it
-    rather than shipping (and leaking) a new catalog-sized copy."""
-    if "serving_bc" not in art:
-        st = _serving_state(art)
-        sc = art["model"].itemFactors.sparkSession.sparkContext
-        art["serving_bc"] = sc.broadcast((st["item_ids"], st["V"], st["user_id_by_idx"]))
-    return art["serving_bc"]
-
-
-def _topk_from_factors(art: dict, k: int) -> DataFrame:
-    """Batch top-k serving for every trained user, straight from the
-    factor frames: ``(user_id, item_id, rnk, score)`` in natural ids, the
-    rows ``recommendForAllUsers(k)`` plus a decode would give (order
-    among exactly tied scores aside, see :func:`_topk_kernel`; every
-    consumer is invariant to that order: the contract flags read min/max
-    rnk, eval hits are set joins, MMR re-ranks by (score, item) itself).
-
-    The user-factor frame is spread over every core and each Arrow batch
-    runs :func:`_topk_kernel` against the item side of the memoized
-    serving broadcast (:func:`_serving_broadcast`), decoding both ids by
-    array lookup in the same pass — no cross-join, no per-candidate
-    queue, no shuffle beyond the round-robin repartition, and no decode
-    join. The item side is collected and broadcast once per model; the
-    k=10 and k=30 frames of a refresh share it.
-
-    Scale: the user side partitions freely (one batch per worker in
-    memory, scored in chunks so the score buffer stays ~16 MB); the item
-    side is the bounded catalog, shipped once per executor."""
-    bc = _serving_broadcast(art)
-    uf = art["model"].userFactors.select("id", "features")
-    spark = uf.sparkSession
-
-    def score_partition(batches):
+def _topk_arrays(art: dict, k: int):
+    """Batch top-k for every trained user, on the driver: ``(pos, score)``
+    from :func:`_topk_kernel`, each (n_users, min(k, n_items)), rows in
+    the serving state's user order. Memoized per model and k; the refresh
+    asks for k=10 (serving, eval) and k=30 (the MMR pool). Users are
+    scored in chunks, so the score buffer stays ~16 MB however many users
+    there are; the result holds k positions (int64) and k scores
+    (float32) per user."""
+    memo_key = f"topk_k{k}"
+    if memo_key not in art:
         import numpy as np
-        import pyarrow as pa
 
-        item_ids, V, user_id_by_idx = bc.value  # once per task
-        n, rank = V.shape
-        k_eff = max(0, min(int(k), n))
-        # per-chunk score buffer ~16 MB however large the user side grows
-        rows_per_chunk = max(1, (4 << 20) // max(n, 1))
-        rnk = np.arange(1, k_eff + 1, dtype=np.int32)
-        for rb in batches:
-            m_rows = rb.num_rows
-            if m_rows == 0:
-                continue
-            uid = user_id_by_idx[rb.column("id").to_numpy(zero_copy_only=False)]
-            feats = rb.column("features")
-            offsets = feats.offsets.to_numpy(zero_copy_only=False)
-            widths = np.diff(offsets)
-            if (
-                (widths == rank).all()
-                and not feats.values.null_count
-                and not feats.null_count
-            ):
-                flat = feats.values.to_numpy(zero_copy_only=False)
-                U = flat[offsets[0] : offsets[-1]].reshape(m_rows, rank)
-            else:  # defensive: factor frames are uniform by construction
-                U = np.stack(feats.to_pandas().to_numpy()).astype(np.float32)
-            for lo in range(0, m_rows, rows_per_chunk):
-                hi = min(lo + rows_per_chunk, m_rows)
-                pos, score = _topk_kernel(U[lo:hi], V, k_eff)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.repeat(uid[lo:hi], k_eff), type=pa.int64()),
-                        pa.array(item_ids[pos].ravel(), type=pa.int64()),
-                        pa.array(np.tile(rnk, hi - lo), type=pa.int32()),
-                        pa.array(score.ravel(), type=pa.float32()),
-                    ],
-                    names=["user_id", "item_id", "rnk", "score"],
-                )
-
-    # spread ALS's ~numUserBlocks output partitions across the cluster —
-    # scale-adaptive: never fewer than the session's parallelism, never
-    # repartitioning a big frame DOWN (tiny rows, round-robin is cheap)
-    return uf.repartition(spark.sparkContext.defaultParallelism).mapInArrow(
-        score_partition, schema=_SERVE_SCHEMA
-    )
-
-
-def _serve_all(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
-    """M4/M5 serving plan, built fresh (no memoization): batch top-k for
-    every trained user in natural ids (:func:`_topk_from_factors`)."""
-    return _topk_from_factors(_artifacts(spark, sf_dir), k)
+        st = _serving_state(art)
+        U, V = st["U"], st["V"]
+        step = max(1, (4 << 20) // max(len(V), 1))
+        # max(.., 1): an empty user side still yields (0, k) arrays
+        parts = [_topk_kernel(U[lo : lo + step], V, k) for lo in range(0, max(len(U), 1), step)]
+        art[memo_key] = tuple(np.concatenate(p) for p in zip(*parts))
+    return art[memo_key]
 
 
 def _topk_recs(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
-    """Memoized wrapper around :func:`_serve_all`, per (session, sf_dir, k):
-    batch serving feeds the serving digest, the eval stack, coverage, AND
-    the MMR pool — without the cache each consumer re-runs the scoring."""
+    """M4/M5 batch serving: top-k for every trained user as
+    ``(user_id, item_id, rnk, score)`` in natural ids — the rows
+    ``recommendForAllUsers(k)`` plus a decode would give (order among
+    exactly tied scores aside, see :func:`_topk_kernel`). A frame over
+    :func:`_topk_arrays`, memoized per (session, sf_dir, k): it feeds the
+    catalog's serving digest, coverage and the eval and MMR checks."""
+    import numpy as np
+
     art = _artifacts(spark, sf_dir)
     memo_key = f"recs_k{k}"
-    if memo_key in art:
-        return art[memo_key]
-    out = _serve_all(spark, sf_dir, k).cache()
-    art[memo_key] = out
-    return out
+    if memo_key not in art:
+        st = _serving_state(art)
+        pos, score = _topk_arrays(art, k)
+        m, kk = pos.shape
+        art[memo_key] = _local_frame(
+            spark,
+            _SERVE_SCHEMA,
+            user_id=np.repeat(st["user_ids"], kk),
+            item_id=st["item_ids"][pos.ravel()],
+            rnk=np.tile(np.arange(1, kk + 1, dtype=np.int32), m),
+            score=score.ravel(),
+        )
+    return art[memo_key]
+
+
+def _lookup(sorted_ids, ids):
+    """Row of each of ``ids`` in the ascending id vector ``sorted_ids``,
+    -1 where absent."""
+    import numpy as np
+
+    row = np.searchsorted(sorted_ids, ids)
+    found = row < len(sorted_ids)
+    found[found] = sorted_ids[row[found]] == ids[found]
+    return np.where(found, row, -1)
+
+
+def _held_out(art: dict):
+    """The held-out (user_id, item_id) pairs as two bigint vectors,
+    memoized per model. Unlike the serving state this collect grows with
+    the interactions, not with the dictionaries: 16 bytes per pair,
+    11 066 pairs at sf0.01 and 112 572 (1.8 MB) at sf0.1."""
+    if "held_out" not in art:
+        t = art["test"].select("user_id", "item_id").toArrow()
+        art["held_out"] = (t.column("user_id").to_numpy(), t.column("item_id").to_numpy())
+    return art["held_out"]
 
 
 # --------------------------------------------------------------------------
@@ -612,7 +609,7 @@ def rec_als_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     verifies; perfbench's ``recommend`` workload measures the refresh."""
     prepare(spark, sf_dir)
     art = _artifacts(spark, sf_dir)
-    recs = _topk_recs(spark, sf_dir)  # memoized + cached in the artifact store
+    recs = _topk_recs(spark, sf_dir)  # memoized in the artifact store
     per_user = recs.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n"), F.max("rnk").alias("max_rnk"), F.min("rnk").alias("min_rnk")
     )
@@ -647,41 +644,39 @@ def rec_als_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def rec_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M7: P@k / R@k / F1 over held-out interactions
-    (reference: mf_knn_recommender.py:365-448): per-user hits via an inner
-    join of recs x truth, then global means. Only users with both training
-    presence and test truth are scored (the reference's common-user
-    intersection, :395 — J4 semi-join)."""
+    (reference: mf_knn_recommender.py:365-448), on the driver: per user,
+    hits = held-out items among the served top-k (:func:`_topk_arrays`),
+    then means over users. Only users with both training presence and
+    test truth are scored (the reference's common-user intersection,
+    :395 — J4 semi-join). The means sum in numpy's order, so they agree
+    with a SQL engine's to ~1e-12, not bit for bit. One row over a
+    pyarrow Table (collecting it runs no job)."""
+    import numpy as np
+
     prepare(spark, sf_dir)
     art = _artifacts(spark, sf_dir)
-    recs = _topk_recs(spark, sf_dir)
-    truth = art["test"].select("user_id", "item_id")
-    truth_sizes = truth.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_actual"))
-    hits = (
-        recs.join(truth, ["user_id", "item_id"])
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-    per_user = (
-        truth_sizes.join(recs.select("user_id").distinct(), "user_id", "left_semi")
-        .join(hits, "user_id", "left")
-        .na.fill({"n_hits": 0})
-        .select(
-            "user_id",
-            (F.col("n_hits") / F.lit(TOP_K)).alias("precision"),
-            (F.col("n_hits") / F.col("n_actual")).alias("recall"),
-        )
-    )
-    agg = per_user.agg(
-        F.avg("precision").alias("p_at_k"),
-        F.avg("recall").alias("r_at_k"),
-        F.count(F.lit(1)).alias("n_eval_users"),
-    )
-    f1 = F.when(
-        (F.col("p_at_k") + F.col("r_at_k")) > 0,
-        2 * F.col("p_at_k") * F.col("r_at_k") / (F.col("p_at_k") + F.col("r_at_k")),
-    ).otherwise(F.lit(0.0))
-    return agg.select(
-        F.lit(TOP_K).alias("k"), "p_at_k", "r_at_k", f1.alias("f1"), "n_eval_users"
+    st = _serving_state(art)
+    pos, _ = _topk_arrays(art, TOP_K)
+    users, items = _held_out(art)
+    row = _lookup(st["user_ids"], users)
+    trained = row >= 0
+    row, col = row[trained], _lookup(st["item_ids"], items[trained])
+    hit = (pos[row] == col[:, None]).any(axis=1)  # an untrained item (-1) never hits
+    n_actual = np.bincount(row, minlength=len(pos))
+    n_hits = np.bincount(row, weights=hit, minlength=len(pos))
+    scored = n_actual > 0
+    n_eval = int(scored.sum())
+    p = float((n_hits[scored] / TOP_K).mean()) if n_eval else None
+    r = float((n_hits[scored] / n_actual[scored]).mean()) if n_eval else None
+    f1 = 2 * p * r / (p + r) if n_eval and p + r > 0 else 0.0
+    return _local_frame(
+        spark,
+        "k int, p_at_k double, r_at_k double, f1 double, n_eval_users bigint",
+        k=np.array([TOP_K], dtype=np.int32),
+        p_at_k=np.array([p], dtype=np.float64),
+        r_at_k=np.array([r], dtype=np.float64),
+        f1=np.array([f1], dtype=np.float64),
+        n_eval_users=np.array([n_eval], dtype=np.int64),
     )
 
 
@@ -699,39 +694,88 @@ def rec_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M6+M12: MMR diversification via grouped applyInPandas
-    (reference: mf_knn_recommender.py:477-547): per user, widen to a 3k
-    candidate pool (O5), then greedily pick argmax of
-    ``λ·relevance − (1−λ)·max_cosine_to_selected`` (M12's pairwise cosine
-    lives inside the per-group pandas function — 30x30 per user, tiny).
+def _mmr_picks(mat, rel, lam: float = MMR_LAMBDA, k: int = TOP_K) -> list[int]:
+    """The one greedy MMR body (M6+M12, reference:
+    mf_knn_recommender.py:477-547), for one user's candidate pool. Rows of
+    ``mat`` are the candidates' item vectors and ``rel`` their relevances,
+    in (relevance desc, item asc) order. Each step picks the unpicked
+    candidate with the largest ``lam * rel - (1 - lam) * max_sim``, the
+    earliest on ties, where ``max_sim`` is its largest cosine to the picks
+    so far (0 before the first pick, which is therefore the top-relevance
+    candidate). Returns up to ``k`` row positions in pick order. Cosines
+    come from one pool x pool product of the unit-scaled rows (zero rows
+    stay zero) in the input's dtype. :func:`mmr_rerank`'s driver pass and
+    :func:`mmr_diversify_frame` both call it."""
+    import numpy as np
 
-    Sequential per user, parallel across users: exactly the shape
-    applyInPandas distributes. The pandas fn is a local closure, so
-    cloudpickle ships it by value (no executor import of this package needed).
-    """
+    norms = np.linalg.norm(mat, axis=1)
+    norms[norms == 0] = 1.0
+    unit = mat / norms[:, None]
+    sim = unit @ unit.T
+    gain = lam * rel
+    max_sim = np.zeros(len(rel), dtype=sim.dtype)
+    free = np.ones(len(rel), dtype=bool)
+    picks: list[int] = []
+    while len(picks) < min(k, len(rel)):
+        rem = np.flatnonzero(free)
+        best = int(rem[np.argmax(gain[rem] - (1 - lam) * max_sim[rem])])
+        # a running max over the picks' columns; cosines may be negative,
+        # so the first pick's column replaces the zeros rather than
+        # being maxed with them
+        max_sim = np.maximum(max_sim, sim[:, best]) if picks else sim[:, best].copy()
+        picks.append(best)
+        free[best] = False
+    return picks
+
+
+def _mmr_table(art: dict):
+    """MMR over every trained user's k=30 pool, on the driver: the pool
+    is :func:`_topk_arrays` at ``MMR_POOL`` (already in relevance desc,
+    item asc order), the vectors are rows of the resident ``V``, and each
+    user runs :func:`_mmr_picks`. Memoized per model as a pyarrow Table of
+    :data:`_MMR_SCHEMA` — the rows :func:`mmr_rerank` serves and the
+    refresh publishes. Holds k rows per user."""
+    if "mmr" not in art:
+        import numpy as np
+        import pyarrow as pa
+
+        st = _serving_state(art)
+        pos, score = _topk_arrays(art, MMR_POOL)
+        m, kk = len(pos), min(TOP_K, pos.shape[1])
+        picks = np.empty((m, kk), dtype=np.int64)
+        for u in range(m):
+            picks[u] = _mmr_picks(st["V"][pos[u]], score[u])
+        art["mmr"] = pa.table(
+            {
+                "user_id": np.repeat(st["user_ids"], kk),
+                "item_id": st["item_ids"][np.take_along_axis(pos, picks, 1).ravel()],
+                "relevance": np.take_along_axis(score, picks, 1).ravel(),
+                "mmr_rank": np.tile(np.arange(1, kk + 1, dtype=np.int64), m),
+            }
+        )
+    return art["mmr"]
+
+
+def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """M6+M12: MMR diversification (reference: mf_knn_recommender.py:477-547):
+    per user, widen to a 3k candidate pool (O5), then greedily pick argmax
+    of ``λ·relevance − (1−λ)·max_cosine_to_selected`` (M12's pairwise
+    cosine over the pool's item factors, 30x30 per user). Runs on the
+    driver over the resident factors (:func:`_mmr_table`); the frame is
+    over the memoized pyarrow Table, so collecting it runs no job."""
     prepare(spark, sf_dir)
-    art = _artifacts(spark, sf_dir)
-    pool = _topk_recs(spark, sf_dir, k=MMR_POOL)
-    item_factors = art["model"].itemFactors.select(
-        F.col("id").alias("item_idx"), F.col("features")
-    )
-    cand = (
-        pool.join(F.broadcast(art["items"]), "item_id")
-        .join(item_factors, "item_idx")
-        .select("user_id", "item_id", F.col("score").alias("relevance"), "features")
-    )
-    return mmr_diversify_frame(cand)
+    return spark.createDataFrame(_mmr_table(_artifacts(spark, sf_dir)), schema=_MMR_SCHEMA)
 
 
 def mmr_diversify_frame(
     cand: DataFrame, lam: float = MMR_LAMBDA, k: int = TOP_K
 ) -> DataFrame:
     """The greedy MMR core over any (user_id, item_id, relevance, features)
-    candidate frame — split from :func:`mmr_rerank` so the pick SEQUENCE is
-    testable on constructed geometry (tests/test_recommend.py pins the
-    exact ordered pick list on hand-derivable cosines, the round-11
-    differential; the ALS-backed query keeps its invariant contract)."""
+    candidate frame, distributed: each user group runs :func:`_mmr_picks`,
+    the body :func:`mmr_rerank`'s driver pass runs, so
+    tests/test_recommend.py's pick-sequence test on constructed geometry
+    pins both. The ALS backtest (``_backtest_als_rates``) diversifies its
+    pool through here."""
 
     def mmr(pdf):
         import numpy as np
@@ -740,55 +784,21 @@ def mmr_diversify_frame(
         pdf = pdf.sort_values(["relevance", "item_id"], ascending=[False, True]).reset_index(
             drop=True
         )
-        mat = np.vstack(pdf["features"].to_numpy())
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0] = 1.0
-        unit = mat / norms[:, None]
-        sim = unit @ unit.T
-        rel = pdf["relevance"].to_numpy()
-        n = len(pdf)
-        selected: list[int] = []
-        remaining = list(range(n))
-        while remaining and len(selected) < k:
-            if selected:
-                max_sim = sim[np.ix_(remaining, selected)].max(axis=1)
-            else:
-                max_sim = np.zeros(len(remaining))
-            mmr_score = lam * rel[remaining] - (1 - lam) * max_sim
-            best = remaining[int(np.argmax(mmr_score))]
-            selected.append(best)
-            remaining.remove(best)
-        out = pdf.iloc[selected][["user_id", "item_id", "relevance"]].copy()
-        out["mmr_rank"] = pd.RangeIndex(1, len(selected) + 1)
+        sel = _mmr_picks(np.vstack(pdf["features"].to_numpy()), pdf["relevance"].to_numpy(), lam, k)
+        out = pdf.iloc[sel][["user_id", "item_id", "relevance"]].copy()
+        out["mmr_rank"] = pd.RangeIndex(1, len(sel) + 1)
         return out
 
-    # One Python invocation PER PARTITION, not per user (guide §4.5):
-    # applyInPandas paid ~15k per-group calls (Arrow batch + pandas frame +
-    # schema coercion each) for ~30-row groups — measured 12.3 s of
-    # rec_pipeline_e2e's 22 s at sf0.1, pure grouped-UDF overhead. And the
-    # first per-partition form still burned ~4 s in per-group PANDAS
-    # machinery (sort_values / vstack of object cells / DataFrame build
-    # per user), so the hot path is mapInArrow: the feature matrix is
-    # a ZERO-COPY reshape of the Arrow list buffer, and the per-user
-    # greedy runs the IDENTICAL numpy body over array views (same float32
-    # dtype path, same argmax tie behavior, bit-identical pick sequences —
-    # the round-11 differential still pins them). The explicit repartition
-    # reproduces applyInPandas's own hashpartitioning(user_id) exchange —
-    # no extra shuffle, groups never straddle partitions.
-    #
-    # r15 opt (guide §5 spill safety / VERDICT r14 item 3 + "What's wrong"
-    # #1): the r14 form did list(batches) + combine_chunks() — the WHOLE
-    # partition pinned in one Python worker (fine at sf0.1, a fat
-    # partition at 100 TB is an OOM) — and assumed combine_chunks yields
-    # one chunk (a >2 GiB list payload chunks; chunk(0) would then crash).
-    # The partition-wide Python lexsort is now a Spark-side
-    # sortWithinPartitions (same total order: user asc, relevance desc,
-    # item asc — NaN-free relevance by construction, so the engines'
-    # NaN-ordering difference cannot fire), which makes user groups
-    # CONTIGUOUS in arrival order, so the worker streams batch-by-batch
-    # holding only one Arrow batch plus the trailing partial group
-    # (bounded by the per-user pool width). Multi-chunk/ragged/null
-    # feature chunks fall back to the per-user pandas body, per chunk.
+    # One Python invocation per partition (mapInArrow), not per user: the
+    # per-group cost of applyInPandas dominated ~30-row groups. The
+    # repartition reproduces applyInPandas's hashpartitioning(user_id)
+    # exchange, and sortWithinPartitions (user asc, relevance desc, item
+    # asc) makes each user's rows contiguous and in _mmr_picks' input
+    # order, so the worker streams batch by batch, holding one Arrow batch
+    # plus the trailing partial group. The feature matrix is a zero-copy
+    # reshape of the Arrow list buffer; multi-chunk, ragged or null
+    # features fall back to the pandas body, per chunk. _mmr_picks is
+    # pickled by reference: ship_package puts the package on the workers.
     def mmr_arrow(batches):
         import numpy as np
         import pandas as pd
@@ -839,28 +849,11 @@ def mmr_diversify_frame(
             out_u, out_i, out_r, out_k = [], [], [], []
             for g in range(len(starts)):
                 lo, hi = bounds[g], bounds[g + 1]
-                gmat, grel = mat[lo:hi], rel[lo:hi]
-                norms = np.linalg.norm(gmat, axis=1)
-                norms[norms == 0] = 1.0
-                unit = gmat / norms[:, None]
-                sim = unit @ unit.T
-                n = hi - lo
-                selected: list[int] = []
-                remaining = list(range(n))
-                while remaining and len(selected) < k:
-                    if selected:
-                        max_sim = sim[np.ix_(remaining, selected)].max(axis=1)
-                    else:
-                        max_sim = np.zeros(len(remaining))
-                    mmr_score = lam * grel[remaining] - (1 - lam) * max_sim
-                    best = remaining[int(np.argmax(mmr_score))]
-                    selected.append(best)
-                    remaining.remove(best)
-                sel = np.asarray(selected, dtype=np.int64) + lo
+                sel = np.asarray(_mmr_picks(mat[lo:hi], rel[lo:hi], lam, k), dtype=np.int64) + lo
                 out_u.append(uid[sel])
                 out_i.append(iid[sel])
                 out_r.append(rel[sel])
-                out_k.append(np.arange(1, len(selected) + 1, dtype=np.int64))
+                out_k.append(np.arange(1, len(sel) + 1, dtype=np.int64))
             return pa.RecordBatch.from_arrays(
                 [
                     pa.array(np.concatenate(out_u), type=pa.int64()),
@@ -897,10 +890,7 @@ def mmr_diversify_frame(
     return (
         cand.repartition(F.col("user_id"))
         .sortWithinPartitions("user_id", F.desc("relevance"), "item_id")
-        .mapInArrow(
-            mmr_arrow,
-            schema="user_id bigint, item_id bigint, relevance float, mmr_rank bigint",
-        )
+        .mapInArrow(mmr_arrow, schema=_MMR_SCHEMA)
     )
 
 
@@ -922,16 +912,16 @@ def mmr_diversify_frame(
     """,
 )
 def rec_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M6's driver row: run the full MMR re-rank (``mmr_rerank``,
-    applyInPandas greedy over a 3k candidate pool) and emit its contract —
+    """M6's driver row: run the full MMR re-rank (``mmr_rerank``, the
+    greedy over a 3k candidate pool) and emit its contract —
     k picks per user, every pick drawn from the pool, and the first pick
     equal to the pool's max-relevance candidate (with no items selected the
     MMR score reduces to λ·relevance, reference: mf_knn_recommender.py:514-516).
     Flags are computed from the real re-ranked rows; pick counts are
     SQL-expressible (k × trained users)."""
     prepare(spark, sf_dir)
-    out = mmr_rerank(spark, sf_dir).cache()
-    pool = _topk_recs(spark, sf_dir, k=MMR_POOL)  # memoized + cached
+    out = mmr_rerank(spark, sf_dir)
+    pool = _topk_recs(spark, sf_dir, k=MMR_POOL)  # memoized
     per_user = out.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n"),
         F.min("mmr_rank").alias("min_rank"),
@@ -1269,7 +1259,6 @@ def _gram_matrix(factors: DataFrame, rank: int) -> "list[list[float]]":
     factors are stored float32 and a single-precision outer-product sum
     would erode parity as batches grow."""
     import numpy as np
-    from pyspark.sql import types as T
 
     def partials(batches):
         import pandas as pd
@@ -1312,7 +1301,6 @@ def rec_fold_in_user_factors(
     rank^2 per user."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
     prepare(spark, sf_dir)
     art = _artifacts(spark, sf_dir)
@@ -1978,25 +1966,30 @@ def serve_user(spark: SparkSession, sf_dir: str, user_id: int, k: int = TOP_K) -
 
     Memory: the state keeps n_users x rank float32 user factors (plus
     n_items x rank item factors) on the driver for the model's lifetime,
-    about 1 MB of users at sf0.1 for rank 16."""
-    import numpy as np
-    import pyarrow as pa
+    about 1 MB of users at sf0.1 for rank 16.
 
-    prepare(spark, sf_dir)
-    st = _serving_state(_artifacts(spark, sf_dir))
+    A warm request looks its model up in ``_CACHE`` and touches no view
+    or conf: ``prepare`` (about a dozen py4j round trips) runs only on a
+    miss, before the fit."""
+    import numpy as np
+
+    art = _CACHE.get((spark.sparkContext.applicationId, sf_dir))
+    if art is None:
+        prepare(spark, sf_dir)
+        art = _artifacts(spark, sf_dir)
+    st = _serving_state(art)
     row = st["user_row"].get(user_id)
     U = st["U"][row : row + 1] if row is not None else st["U"][:0]
     pos, score = _topk_kernel(U, st["V"], k)
     n = pos.size
-    table = pa.table(
-        {
-            "user_id": pa.array(np.full(n, user_id, dtype=np.int64), type=pa.int64()),
-            "item_id": pa.array(st["item_ids"][pos.ravel()], type=pa.int64()),
-            "rnk": pa.array(np.arange(1, n + 1), type=pa.int32()),
-            "score": pa.array(score.ravel(), type=pa.float32()),
-        }
+    return _local_frame(
+        spark,
+        _SERVE_SCHEMA,
+        user_id=np.full(n, user_id, dtype=np.int64),
+        item_id=st["item_ids"][pos.ravel()],
+        rnk=np.arange(1, n + 1, dtype=np.int32),
+        score=score.ravel(),
     )
-    return spark.createDataFrame(table, schema=_SERVE_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -2723,13 +2716,23 @@ def _sql_rec_pipeline() -> str:
 def rec_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The RECOMMENDATION CAPSTONE: the reference's daily serving DAG
     (dags/e_commerce_dw_dag.py: extract -> train MF -> recommend -> store,
-    with mf_knn_recommender.py supplying train/serve/diversify/eval)
-    replayed as ONE chained Spark lineage with per-stage conservation
-    rows. Stages: (1) extract implicit interactions, (2) dictionary
-    encode, (3) leakage-safe md5 split, (4) seeded ALS fit, (5) batch
-    top-k serving for every trained user, (6) MMR diversification over a
-    3k pool, (7) P@k/R@k/F1 evaluation on the held-out split, (8) publish
-    the diversified lists to parquet and re-read (the DAG's store step).
+    with mf_knn_recommender.py supplying train/serve/diversify/eval) with
+    per-stage conservation rows. Stages: (1) extract implicit
+    interactions, (2) dictionary encode, (3) leakage-safe md5 split, (4)
+    seeded ALS fit, (5) batch top-k serving for every trained user, (6)
+    MMR diversification over a 3k pool, (7) P@k/R@k/F1 evaluation on the
+    held-out split, (8) publish the diversified lists to parquet and
+    re-read them (the DAG's store step).
+
+    Stages 1-4 run in Spark (``_artifacts``). Stages 5-8 are one driver
+    pass over the fitted factors, which the serving state already keeps
+    on the driver (the inference-next-to-resident-model shape of the
+    reference's NumPy recommender, mf_knn_recommender.py:244-547): top-k
+    at k=10 and k=30 through ``_topk_kernel``, MMR per user through
+    ``_mmr_picks``, eval from one collect of the held-out pairs, and the
+    publish as one parquet write of the MMR Table followed by a Spark
+    read-back. The stages call ``mmr_rerank`` and ``rec_eval_metrics``, so
+    the catalog queries and the refresh share one implementation.
 
     Every stage emits either a count the DuckDB oracle derives
     INDEPENDENTLY from the same deterministic inputs (interaction/dict/
@@ -2742,96 +2745,71 @@ def rec_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped between fit and serve, MMR inventing items, a lossy publish —
     flips a count or flag and the suite's driver row goes red.
 
-    Scale: stages reuse their solo postures (shuffle joins on natural keys,
-    MLlib block ALS, memoized artifacts, applyInPandas bounded 30-row
-    groups per user); the publish stage is one parquet write + re-read of
-    k rows per user. Nothing here adds a plan the solo operators don't
-    already run at their recorded postures."""
+    Driver memory: the serving state and the top-k and MMR arrays are
+    bounded by the dictionaries (k rows per user); the held-out pairs
+    grow with the interactions (see ``_held_out``)."""
     import shutil
     import tempfile
-    from concurrent.futures import ThreadPoolExecutor
 
-    import pyarrow as pa
+    import numpy as np
+    import pyarrow.parquet as pq
 
     prepare(spark, sf_dir)
     art = _artifacts(spark, sf_dir)
-    model = art["model"]
-    # build both memoized serving frames SERIALLY first (the memo dict is
-    # not a concurrency primitive), then fan the independent stage actions
-    # out over a small driver thread pool (guide §2.6: actions are only
-    # sequential because the driver calls them sequentially — each of
-    # these jobs underfills the session's cores at bench scale, and none
-    # depends on another's result except where the future graph below
-    # says so). Every emitted count/flag is computed from the same frames
-    # as the serial form, so the digest rows are bit-identical.
-    recs = _topk_recs(spark, sf_dir, TOP_K)
-    pool = _topk_recs(spark, sf_dir, k=MMR_POOL)
     # stages 1-4 cost no job of their own: the exact counts came with the
     # dictionary-bounds pass, and the factor counts are the row counts of
-    # the driver-resident serving state the serving frames were built from
+    # the driver-resident serving state
     counts = art["counts"]
     st = _serving_state(art)
 
-    def stage_srv():
-        # stage 5: serving contract from the real rec rows (memoized frame)
-        per_user = recs.groupBy("user_id").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("rnk").alias("min_rnk"),
-            F.max("rnk").alias("max_rnk"),
-        )
-        return per_user.agg(
-            F.sum("n").alias("n_rows"),
-            (
-                (F.min("n") == TOP_K)
-                & (F.max("n") == TOP_K)
-                & (F.min("min_rnk") == 1)
-                & (F.max("max_rnk") == TOP_K)
-            ).alias("contract_ok"),
-        ).collect()[0]
+    # stage 5: every user has TOP_K distinct items, scores non-increasing
+    pos, score = _topk_arrays(art, TOP_K)
+    srv_ok = (
+        pos.shape == (len(st["U"]), TOP_K)
+        and bool((np.diff(np.sort(pos, axis=1), axis=1) != 0).all())
+        and bool((np.diff(score, axis=1) <= 0).all())
+    )
 
-    def stage_eval():
-        # stage 7: held-out evaluation
-        return rec_eval_metrics(spark, sf_dir).collect()[0]
+    # stage 6: MMR over each user's 30-item pool. mmr_rerank memoizes the
+    # picks as a pyarrow Table; the check and the publish read that Table.
+    # Every (user, item) pick must be one of that user's pool pairs.
+    mmr_rerank(spark, sf_dir)
+    mmr = _mmr_table(art)
+    pool, _ = _topk_arrays(art, MMR_POOL)
+    n_items = len(st["item_ids"])
+    m_user = mmr.column("user_id").to_numpy()
+    m_item = mmr.column("item_id").to_numpy()
+    m_rank = mmr.column("mmr_rank").to_numpy()
+    pick_row, pick_col = _lookup(st["user_ids"], m_user), _lookup(st["item_ids"], m_item)
+    pool_keys = np.arange(len(pool))[:, None] * n_items + pool
+    off_pool = int(
+        ((pick_row < 0) | (pick_col < 0)).sum()
+        + (~np.isin(pick_row * n_items + pick_col, pool_keys)).sum()
+    )
 
-    def stage_mmr_publish():
-        # stage 6: MMR diversification + picks-from-pool conservation,
-        # then stage 8: publish + read-back checksum (both consume the
-        # checkpointed MMR frame, so they live on one future)
-        mmr = mmr_rerank(spark, sf_dir).localCheckpoint(eager=True)
-        off_pool = mmr.join(
-            pool.select("user_id", "item_id"), ["user_id", "item_id"], "left_anti"
-        ).count()
-        want = mmr.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("user_id") + F.col("item_id") * F.col("mmr_rank")).alias("ck"),
-        ).collect()[0]
-        tmp = tempfile.mkdtemp(prefix="ecomdw_recs_")
-        try:
-            path = f"{tmp}/recommendations"
-            mmr.write.mode("overwrite").parquet(path)
-            back = spark.read.parquet(path)
-            got = back.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    F.col("user_id") + F.col("item_id") * F.col("mmr_rank")
-                ).alias("ck"),
-            ).collect()[0]
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-        return off_pool, want, got
-
-    with ThreadPoolExecutor(max_workers=3) as ex:
-        f_srv = ex.submit(stage_srv)
-        f_eval = ex.submit(stage_eval)
-        f_mmr = ex.submit(stage_mmr_publish)
-        srv = f_srv.result()
-        m = f_eval.result()
-        off_pool, want, got = f_mmr.result()
-
+    # stage 7: held-out evaluation (one row over a pyarrow Table: no job)
+    m = rec_eval_metrics(spark, sf_dir).collect()[0]
     metrics_ok = (
         0.0 <= m.p_at_k <= 1.0 and 0.0 <= m.r_at_k <= 1.0 and 0.0 <= m.f1 <= 1.0
     )
-    publish_ok = (got.n, got.ck) == (want.n, want.ck)
+
+    # stage 8: publish the MMR Table, then check what Spark reads back
+    want_ck = int((m_user + m_item * m_rank).sum())
+    tmp = tempfile.mkdtemp(prefix="ecomdw_recs_")
+    try:
+        path = f"{tmp}/recommendations.parquet"
+        pq.write_table(mmr, path, compression="zstd")
+        got = (
+            spark.read.parquet(path)
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.col("user_id") + F.col("item_id") * F.col("mmr_rank")).alias("ck"),
+            )
+            .collect()[0]
+        )
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    publish_ok = (got.n, got.ck) == (mmr.num_rows, want_ck)
 
     rows = [
         (1, "extract", "n_interactions", float(counts["n_interactions"])),
@@ -2839,31 +2817,26 @@ def rec_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         (2, "encode", "n_items", float(counts["n_items"])),
         (3, "split", "n_train", float(counts["n_interactions"] - counts["n_test"])),
         (3, "split", "n_test", float(counts["n_test"])),
-        (4, "fit", "rank", float(model.rank)),
+        (4, "fit", "rank", float(art["model"].rank)),
         (4, "fit", "n_user_factors", float(len(st["U"]))),
         (4, "fit", "n_item_factors", float(len(st["V"]))),
-        (5, "serve", "n_rec_rows", float(srv.n_rows)),
-        (5, "serve", "rank_contract_ok", 1.0 if srv.contract_ok else 0.0),
-        (6, "diversify", "n_mmr_rows", float(want.n)),
+        (5, "serve", "n_rec_rows", float(pos.size)),
+        (5, "serve", "rank_contract_ok", 1.0 if srv_ok else 0.0),
+        (6, "diversify", "n_mmr_rows", float(mmr.num_rows)),
         (6, "diversify", "picks_from_pool_ok", 1.0 if off_pool == 0 else 0.0),
         (7, "evaluate", "n_eval_users", float(m.n_eval_users)),
         (7, "evaluate", "metrics_in_01_ok", 1.0 if metrics_ok else 0.0),
         (8, "publish", "n_published", float(got.n)),
         (8, "publish", "roundtrip_checksum_ok", 1.0 if publish_ok else 0.0),
     ]
-    # over a pyarrow Table the frame plans as a LocalTableScan: building
-    # and collecting it submit no job (a Python list would cost one)
     ords, stages, metrics, values = zip(*rows)
-    table = pa.table(
-        {
-            "stage_ord": pa.array(ords, type=pa.int64()),
-            "stage": pa.array(stages, type=pa.string()),
-            "metric": pa.array(metrics, type=pa.string()),
-            "value_num": pa.array(values, type=pa.float64()),
-        }
-    )
-    return spark.createDataFrame(
-        table, schema="stage_ord bigint, stage string, metric string, value_num double"
+    return _local_frame(
+        spark,
+        "stage_ord bigint, stage string, metric string, value_num double",
+        stage_ord=np.array(ords, dtype=np.int64),
+        stage=list(stages),
+        metric=list(metrics),
+        value_num=np.array(values, dtype=np.float64),
     )
 
 

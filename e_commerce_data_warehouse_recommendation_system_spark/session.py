@@ -89,15 +89,21 @@ def _silence_bounded_window_warnings(spark: SparkSession) -> None:
     rewriting tiny windows into fake constant partitions) keeps the plans
     honest and the logs readable; a NEW unbounded global window would still
     be caught by the plan tests and perfbench's timings, which is where a
-    real one shows up anyway."""
+    real one shows up anyway. Idempotent per SparkContext, like
+    ``ship_package``: the reconfigure costs a few ms and every ``tune``
+    calls it."""
+    sc = spark.sparkContext
+    if getattr(sc, "_ecomdw_window_log_silenced", False):
+        return
     try:
-        jvm = spark.sparkContext._jvm
+        jvm = sc._jvm
         jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
             "org.apache.spark.sql.execution.window.WindowExec",
             jvm.org.apache.logging.log4j.Level.ERROR,
         )
     except Exception:
         pass  # non-log4j2 host JVM: warnings stay, everything else works
+    sc._ecomdw_window_log_silenced = True
 
 
 def _size_shuffle_partitions(spark: SparkSession) -> None:

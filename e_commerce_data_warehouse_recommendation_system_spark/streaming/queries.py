@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from e_commerce_data_warehouse_recommendation_system_spark.functions.scalar import dec_sum, dec_sum_exact
+from e_commerce_data_warehouse_recommendation_system_spark.functions.scalar import dec_sum_exact
 from e_commerce_data_warehouse_recommendation_system_spark.registry import component, register
 from e_commerce_data_warehouse_recommendation_system_spark.sources.readers import (
     normalize_event_ts,
@@ -1726,14 +1726,18 @@ def stream_fold_in_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per batch, fold-in touches only accumulated rows of TOUCHED
     users (join-pruned), the solve is rank^2 per user inside Arrow batches,
     and the factor-state upsert is the keyed-merge posture of
-    stream_event_daily_upsert; serving broadcasts the bounded catalog
-    factors while the user side partitions freely. Total fold work across a
-    drain is <= n_batches x one full fold."""
+    stream_event_daily_upsert; the audit subset (1 in FOLD_IN_AUDIT_MOD
+    users) is scored on the driver by the serving kernel. Total fold work
+    across a drain is <= n_batches x one full fold."""
     import os
+
+    import numpy as np
 
     from e_commerce_data_warehouse_recommendation_system_spark.recommend.queries import (
         TOP_K,
         _artifacts,
+        _serving_state,
+        _topk_kernel,
         rec_fold_in_user_factors,
     )
 
@@ -1858,51 +1862,29 @@ def stream_fold_in_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
         # exported-factor serving for the audit subset — every
-        # FOLD_IN_AUDIT_MOD-th user, rec_user_topk's subset
-        # convention: the serve cross product is subset x catalog, so the
-        # modulus directly sets the timed slot's dominant cost
-        itf = art["model"].itemFactors.select(
-            F.col("id").alias("item_idx"), F.col("features").alias("ifeat")
+        # FOLD_IN_AUDIT_MOD-th user, rec_user_topk's subset convention:
+        # the subset's terminal factors come to the driver (bounded by the
+        # user dictionary / FOLD_IN_AUDIT_MOD) and score through the one
+        # top-k kernel against the resident item factors
+        subset = (
+            terminal.join(
+                F.broadcast(
+                    art["users"].filter(F.col("user_id") % FOLD_IN_AUDIT_MOD == 0)
+                ),
+                "user_idx",
+            )
+            .select("user_idx", "features")
+            .collect()
         )
-        subset = terminal.join(
-            F.broadcast(
-                art["users"].filter(F.col("user_id") % FOLD_IN_AUDIT_MOD == 0)
-            ),
-            "user_idx",
+        V = _serving_state(art)["V"]
+        U = np.array([r.features for r in subset], dtype=np.float32).reshape(
+            len(subset), V.shape[1]
         )
-        sdot = F.aggregate(
-            F.zip_with(F.col("features"), F.col("ifeat"), lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        scored = subset.join(F.broadcast(itf)).select(
-            "user_idx", sdot.cast("float").alias("score"), "item_idx"
-        )
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("user_idx").orderBy(F.desc("score"), F.asc("item_idx"))
-        served = (
-            scored.withColumn("rnk", F.row_number().over(w).cast("int"))
-            .filter(F.col("rnk") <= TOP_K)
-            .localCheckpoint(eager=True)
-        )
-        n_served_users = subset.count()
-        per_user = served.groupBy("user_idx").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("rnk").alias("mn"),
-            F.max("rnk").alias("mx"),
-        )
-        sc = per_user.agg(
-            F.count(F.lit(1)).alias("nu"),
-            F.sum("n").alias("n_rows"),
-            (
-                (F.min("n") == TOP_K)
-                & (F.max("n") == TOP_K)
-                & (F.min("mn") == 1)
-                & (F.max("mx") == TOP_K)
-            ).alias("ok"),
-        ).collect()[0]
-        contract_ok = bool(sc.ok) and sc.nu == n_served_users
+        pos, _ = _topk_kernel(U, V, TOP_K)
+        n_served_users = len(subset)
+        contract_ok = pos.shape == (n_served_users, TOP_K) and len(
+            {r.user_idx for r in subset}
+        ) == n_served_users
 
         rows = [
             ("feed_rows", n_feed),
@@ -1910,7 +1892,7 @@ def stream_fold_in_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("folded_users", n_folded),
             ("stream_batch_parity_ok", 1 if parity_ok else 0),
             ("served_users", n_served_users),
-            ("served_rows", int(sc.n_rows or 0)),
+            ("served_rows", int(pos.size)),
             ("serve_contract_ok", 1 if contract_ok else 0),
         ]
         return spark.createDataFrame(rows, schema="label string, value_num bigint")

@@ -45,6 +45,9 @@ PATTERNS: dict[str, str] = {
     # driver-side collects (documented classes only: 1-row scalars,
     # <=K lists, per-batch/per-cell audits)
     "collect": r"\.collect\(\)",
+    # Arrow collects to the driver: the same class as collect, through
+    # the columnar path (each site states what bounds it)
+    "toArrow": r"\.toArrow\(\)",
     # Arrow boundary sites — the ONLY places Python touches row data
     "arrow_sites": r"applyInPandas|mapInPandas",
     # .cache() sites (r12 verdict #1: the never-unpersisted-corpus-cache

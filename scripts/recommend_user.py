@@ -76,7 +76,7 @@ def main(argv: list[str] | None = None) -> int:
                 .orderBy("user_id", "mmr_rank")
             )
         else:
-            df = rq._serve_all(spark, sf, k=args.top_k).orderBy("user_id", "rnk")
+            df = rq._topk_recs(spark, sf, k=args.top_k).orderBy("user_id", "rnk")
         df.show(5 * args.top_k, truncate=False)
         return 0
 

@@ -10,7 +10,6 @@ filter in the configured regime (``bloom_injected``).
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from e_commerce_data_warehouse_recommendation_system_spark.operators.relational import (

@@ -17,6 +17,7 @@ from pathlib import Path
 import pytest
 
 from e_commerce_data_warehouse_recommendation_system_spark.recommend import queries as rq
+from e_commerce_data_warehouse_recommendation_system_spark.sources.readers import prepare
 from tests.conftest import SF0001
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
@@ -25,6 +26,12 @@ from check_correctness import duck_connect, normalize  # noqa: E402
 
 # full-gate lane: trains a model (see pytest.ini)
 pytestmark = pytest.mark.slow
+
+#: Spark jobs of one cold refresh at sf0.001 on local[4]: the bounds and
+#: counts pass, the two dictionaries, the ALS fit (4 blocks per side),
+#: the serving-state collect, the held-out collect and the publish
+#: read-back. Stages 5-8 otherwise run on the driver.
+COLD_REFRESH_JOBS = 77
 
 
 @pytest.fixture(scope="module")
@@ -59,3 +66,23 @@ def test_rec_pipeline_e2e_result_frame_runs_no_job(spark, refresh):
         sc.setLocalProperty("spark.job.description", None)
     assert jobs == [], f"collecting the refresh's result submitted Spark jobs {jobs}"
     assert len(rows) == 16
+
+
+def test_cold_refresh_submits_a_pinned_number_of_jobs(spark):
+    """From no memoized model and an empty Spark cache, the refresh
+    submits exactly ``COLD_REFRESH_JOBS`` jobs, so a stage that goes back
+    to Spark, or an extra pass before the fit, shows as a count."""
+    prepare(spark, SF0001)  # views registered outside the counted group
+    rq._CACHE.pop((spark.sparkContext.applicationId, SF0001), None)
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    group = "test-cold-refresh-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        rows = rq.rec_pipeline_e2e(spark, SF0001).collect()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(rows) == 16
+    assert len(jobs) == COLD_REFRESH_JOBS

@@ -10,7 +10,6 @@ from __future__ import annotations
 import datetime as dt
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from e_commerce_data_warehouse_recommendation_system_spark.functions.scalar import (
     dec_avg,

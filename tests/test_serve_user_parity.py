@@ -1,5 +1,5 @@
-"""``serve_user``: parity with MLlib, the zero-job contract, and one
-memoized serving broadcast.
+"""``serve_user``: parity with MLlib, equality with batch serving, and
+the zero-job contract.
 
 ``serve_user`` scores one user with ``_topk_kernel`` over the model's
 driver-resident factors. For every trained user at sf0.001 its rows must
@@ -36,7 +36,7 @@ SERVE_SCHEMA = "struct<user_id:bigint,item_id:bigint,rnk:int,score:float>"
 def art(spark):
     prepare(spark, SF0001)
     a = rq._artifacts(spark, SF0001)
-    rq._topk_recs(spark, SF0001)  # the refresh's batch serving builds the state
+    rq._topk_recs(spark, SF0001)  # batch serving, as the refresh runs it
     return a
 
 
@@ -109,13 +109,15 @@ def test_serve_user_submits_no_spark_job(spark, art):
     assert unknown.schema == served.schema
 
 
-def test_batch_serving_reuses_one_memoized_broadcast(spark, art, monkeypatch):
-    sc = spark.sparkContext
-    made = []
-    real = sc.broadcast
-    monkeypatch.setattr(sc, "broadcast", lambda value: made.append(value) or real(value))
-    rq._serve_all(spark, SF0001).count()
-    bc = art["serving_bc"]
-    rq._serve_all(spark, SF0001, k=rq.MMR_POOL).count()
-    assert art["serving_bc"] is bc
-    assert made == [], "batch serving created a new broadcast"
+def test_warm_serve_user_skips_prepare(spark, art, monkeypatch):
+    """With the model memoized, ``serve_user`` answers from ``_CACHE``
+    and never calls ``prepare`` (its conf sets and view checks cost about
+    a dozen py4j round trips per request)."""
+    user = min(rq._serving_state(art)["user_row"])
+    want = rq.serve_user(spark, SF0001, user).collect()
+
+    def no_prepare(*_):
+        raise AssertionError("warm serve_user called prepare")
+
+    monkeypatch.setattr(rq, "prepare", no_prepare)
+    assert rq.serve_user(spark, SF0001, user).collect() == want
