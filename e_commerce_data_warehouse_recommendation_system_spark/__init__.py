@@ -11,8 +11,7 @@ semantics Spark-first:
 - ``functions``  — scalar layer incl. pandas-parity wrappers (title-case, weekday
                    origin, fractional-day durations)
 - ``operators``  — relational ops (joins/aggs/dedup/windows/set-ops) plus the
-                   large-scale data-pipeline extensions (MinHash/SimHash dedup,
-                   text analysis)
+                   text-analysis extension
 - ``plans``      — the warehouse ETL (staging -> dims -> fact) and the headline
                    analytical queries
 - ``recommend``  — ALS recommender + MMR diversification + ranking eval (MLlib)

@@ -1,2 +1,2 @@
 """Operator library: relational core (SURVEY.md SS2.2-2.8) plus the
-large-scale data-pipeline extensions (dedup, text)."""
+text-analysis extension."""

@@ -660,8 +660,7 @@ def j6_fk_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
 from e_commerce_data_warehouse_recommendation_system_spark.operators.agg import *  # noqa: E402,F401,F403
 
 # ==========================================================================
-# SS2.5 Deduplication (relational forms; scale-out text dedup lives in
-# operators/dedup.py)
+# SS2.5 Deduplication (relational forms)
 # ==========================================================================
 
 

@@ -19,7 +19,7 @@ from pyspark.sql.window import Window
 from e_commerce_data_warehouse_recommendation_system_spark.registry import component, register
 from e_commerce_data_warehouse_recommendation_system_spark.sources.readers import prepare
 
-# Canonical tokenization shared by text + dedup operators: trim, split on
+# Canonical tokenization shared by the text operators: trim, split on
 # whitespace runs. DuckDB twin: string_split_regex(trim(text), '\s+').
 def tokens(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -210,10 +210,9 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LANG-ID QUALITY EVAL — the classifier-vs-labels confusion census
-    (the eval-discipline family: dedup_lsh_quality measures the LSH
-    against exact truth, this measures the marker-voting language ID
-    against the labeled ``lang`` column): one row per (true, predicted)
-    pair with document counts and a correctness flag. Per-language
+    of the marker-voting language ID against the labeled ``lang``
+    column: one row per (true, predicted) pair with document counts and
+    a correctness flag. Per-language
     precision/recall/accuracy all derive from these cells; a lexicon
     regression (dropped markers, a tie-break change) moves counts between
     cells and flips the suite digest red. Everything is a join + count,
@@ -2248,98 +2247,6 @@ def text_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(blocked).cast("long").alias("n_blocked_hits"),
         F.coalesce(F.array_min(blocked), F.lit("")).alias("blocked_term"),
         (F.size(blocked) == 0).alias("keep"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Cross-document boilerplate n-gram detection (CCNet/C4-class cleaning)
-# --------------------------------------------------------------------------
-
-#: an n-gram present in >= this percent of documents is boilerplate
-BOILER_DF_PCT = 1
-
-
-@component(
-    "text_boilerplate_ngrams",
-    oracle=f"""
-    WITH sh AS (
-      SELECT DISTINCT doc_id,
-             unnest(list_transform(range(1, len(t) - 1),
-                    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS s
-      FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
-            FROM documents)
-    ),
-    dfreq AS (SELECT s, COUNT(*) AS df FROM sh GROUP BY s),
-    n AS (SELECT COUNT(*) AS n_docs FROM documents),
-    boiler AS (
-      SELECT s FROM dfreq, n WHERE df * 100 >= n_docs * {BOILER_DF_PCT}
-    )
-    SELECT sh.doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_shingles,
-           CAST(SUM(CASE WHEN b.s IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_boiler,
-           CAST(FLOOR(SUM(CASE WHEN b.s IS NOT NULL THEN 1 ELSE 0 END)
-                      * 1000000.0 / COUNT(*)) AS BIGINT) AS boiler_ratio_micro
-    FROM sh LEFT JOIN boiler b ON sh.s = b.s
-    GROUP BY sh.doc_id
-    """,
-    cols=[
-        ("doc_id", "num"),
-        ("n_shingles", "num"),
-        ("n_boiler", "num"),
-        ("boiler_ratio_micro", "num"),
-    ],
-)
-def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-document boilerplate detection, the CCNet/C4 cleaning step the
-    per-document ops can't do: an n-gram occurring in >= {BOILER_DF_PCT}%
-    of the corpus (headers, footers, cookie banners, license blurbs) is
-    template text, not content, and its per-document density is the
-    cleaning signal. Emits per-doc distinct-shingle count, boilerplate-hit
-    count, and the density in integer micro-units (the cross-engine-exact
-    ratio form). Complements the whole-doc dedup ladder (dedup.py — those
-    catch COPIED documents; this catches REPEATED FRAGMENTS inside
-    otherwise-distinct documents) and the intra-doc repetition score
-    (text_repetition — that one never looks across documents).
-
-    Scale: reuses the shared shingle pass (operators/dedup.shingle_rows —
-    one MLlib NGram scan, one distinct). Document frequency is one
-    map-side-combined groupBy on the shingle; the corpus-size scalar rides
-    a broadcast cross join; the boilerplate set is then joined back
-    BROADCAST — its size is bounded by construction (each member needs
-    df >= n_docs * {BOILER_DF_PCT}/100, so there are at most
-    100/{BOILER_DF_PCT} x avg-shingles-per-doc members regardless of
-    corpus row count), so the fact side never shuffles for it; the final
-    per-doc rollup is one groupBy on doc_id. Three shuffles total, all
-    map-side combined, none growing super-linearly at 100 TB."""
-    from e_commerce_data_warehouse_recommendation_system_spark.operators.dedup import (
-        shingle_rows,
-    )
-
-    prepare(spark, sf_dir)
-    sh = shingle_rows(spark)  # (doc_id, s) distinct
-    dfreq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-    n_docs = spark.table("documents").agg(F.count(F.lit(1)).alias("n_docs"))
-    boiler = (
-        dfreq.crossJoin(F.broadcast(n_docs))
-        .filter(F.col("df") * 100 >= F.col("n_docs") * BOILER_DF_PCT)
-        .select("s", F.lit(1).alias("is_boiler"))
-    )
-    return (
-        sh.join(F.broadcast(boiler), "s", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_shingles"),
-            F.sum(F.coalesce(F.col("is_boiler"), F.lit(0))).cast("long").alias("n_boiler"),
-        )
-        .select(
-            "doc_id",
-            "n_shingles",
-            "n_boiler",
-            F.floor(F.col("n_boiler") * 1000000.0 / F.col("n_shingles"))
-            .cast("bigint")
-            .alias("boiler_ratio_micro"),
-        )
     )
 
 

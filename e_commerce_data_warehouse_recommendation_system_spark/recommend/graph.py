@@ -1,8 +1,7 @@
 """Graph analytics over the co-purchase graph.
 
-Five graph operators grew inside the recommender module by accretion
-(connected components lives with the dedup family in operators/dedup.py);
-this module holds the other four — PageRank, bounded-BFS reachability,
+Four graph operators grew inside the recommender module by accretion;
+this module holds them — PageRank, bounded-BFS reachability,
 triangle counting, and k-core decomposition — pure move from
 recommend/queries.py in round 10, registry names unchanged (``registry``
 imports this module right after ``recommend.queries``).
@@ -102,9 +101,8 @@ def rec_pagerank_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     central to many baskets' neighborhoods rank above merely-frequent
     ones (the same signal the lift table surfaces pairwise, propagated
     transitively). {PAGERANK_ITERS} power iterations, damping
-    {PAGERANK_DAMPING}, on the symmetric same-basket graph; the iterative
-    class the engine otherwise exercises only as label propagation
-    (dedup.connected_components), here with NUMERIC state.
+    {PAGERANK_DAMPING}, on the symmetric same-basket graph: iterative
+    propagation with NUMERIC state.
 
     Engine-determinism across engines AND partitionings: each iteration's
     per-node contribution sum accumulates through DECIMAL(38,18) (the
@@ -216,9 +214,8 @@ def graph_reach_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic promoted-item set (part keys divisible by
     {BFS_SEED_MODULUS}), which catalog items are within
     {BFS_MAX_HOPS} co-purchase hops, and at what minimum distance? The
-    third graph operator alongside connected components (dedup_clusters,
-    min-label propagation) and PageRank (rec_pagerank_items, power
-    iteration): BFS is the one with a TRUE recursive-SQL twin, so the
+    graph operator beside PageRank (rec_pagerank_items, power
+    iteration) with a TRUE recursive-SQL twin, so the
     oracle is a genuine WITH RECURSIVE CTE, not a bounded unrolling.
 
     Level-synchronous BFS is exact here: the h-th frontier is joined
@@ -226,8 +223,7 @@ def graph_reach_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT ANTI join, and first discovery IS minimum distance, so no
     re-relaxation is ever needed (unweighted edges). {BFS_MAX_HOPS}
     iterations keep the lineage shallow enough that no checkpoint is
-    required; an unbounded variant would checkpoint per level exactly
-    like dedup_clusters does.
+    required; an unbounded variant would checkpoint per level.
 
     Scale: the edge list is a per-order self-join (blow-up O(k²) per
     basket, k ≤ items-per-order — same bound rec_copurchase_pairs
@@ -265,7 +261,7 @@ def graph_reach_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cache each level: frontier h feeds BOTH the next level's expansion
         # and every later level's anti join (through `reached`) — uncached,
         # level h's subtree replays once per later level (the iterative
-        # lineage blowup dedup_clusters checkpoints against; 3 bounded
+        # lineage blowup an unbounded loop checkpoints against; 3 bounded
         # levels make cache() sufficient here)
         nxt = (
             frontier.join(edges, frontier["id"] == edges["src"])
@@ -344,12 +340,12 @@ TRIANGLE_TOP_K = 20
 )
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle counting + local clustering coefficient over the
-    co-purchase graph — the fourth graph operator beside connected
-    components (dedup_clusters), PageRank (rec_pagerank_items), and BFS
-    (graph_reach_bfs): triangles measure how CLIQUISH an item's
-    neighborhood is (bundle detection, category coherence), and the local
-    coefficient 2·tri(v)/(deg(v)·(deg(v)−1)) is the standard normalized
-    form (FLOOR-micro crossing; the count itself is exact int64). Edges
+    co-purchase graph — the graph operator beside PageRank
+    (rec_pagerank_items), BFS (graph_reach_bfs) and k-core: triangles
+    measure how CLIQUISH an item's neighborhood is (bundle detection,
+    category coherence), and the local coefficient
+    2·tri(v)/(deg(v)·(deg(v)−1)) is the standard normalized form
+    (FLOOR-micro crossing; the count itself is exact int64). Edges
     are canonically oriented u<v, so each triangle a<b<c is enumerated
     exactly once by the two-path join (a,b)+(b,c) closed by (a,c), then
     fanned out to its three corners for the per-node count.

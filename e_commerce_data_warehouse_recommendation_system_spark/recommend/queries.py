@@ -250,6 +250,7 @@ def _artifacts(spark: SparkSession, sf_dir: str) -> dict:
     model = als.fit(train)
     art = {
         "model": model,
+        "inter": inter,
         "train": train,
         "test": test,
         "users": users,
@@ -478,9 +479,13 @@ def _held_out(art: dict):
     """The held-out (user_id, item_id) pairs as two bigint vectors,
     memoized per model. Unlike the serving state this collect grows with
     the interactions, not with the dictionaries: 16 bytes per pair,
-    11 066 pairs at sf0.01 and 112 572 (1.8 MB) at sf0.1."""
+    11 066 pairs at sf0.01 and 112 572 (1.8 MB) at sf0.1. The pairs are
+    the cached interactions filtered by the split, not the ``test``
+    frame: every interaction has both codes, so the dictionary joins
+    select the same pairs and would only rebuild both dictionaries."""
     if "held_out" not in art:
-        t = art["test"].select("user_id", "item_id").toArrow()
+        held = _split_bucket("user_id", "item_id").isin(*_TEST_DIGITS)
+        t = art["inter"].filter(held).select("user_id", "item_id").toArrow()
         art["held_out"] = (t.column("user_id").to_numpy(), t.column("item_id").to_numpy())
     return art["held_out"]
 
@@ -2899,7 +2904,7 @@ def rec_backtest_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the leakage-safe eval discipline for recommenders at scale:
     time splits beat random splits when usage drifts, the same way
     group-aware splits beat row splits for documents
-    (text_group_holdout_split / dedup_split_leakage).
+    (text_group_holdout_split).
 
     Scale: two scans of the fact join with the date filter pushed to the
     scan, one hash groupBy each; the shelf is a global top-k of a

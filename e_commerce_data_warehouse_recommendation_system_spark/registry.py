@@ -111,7 +111,6 @@ def _load_all() -> None:
     import e_commerce_data_warehouse_recommendation_system_spark.plans.queries  # noqa: F401
     import e_commerce_data_warehouse_recommendation_system_spark.plans.etl  # noqa: F401
     import e_commerce_data_warehouse_recommendation_system_spark.operators.relational  # noqa: F401
-    import e_commerce_data_warehouse_recommendation_system_spark.operators.dedup  # noqa: F401
     import e_commerce_data_warehouse_recommendation_system_spark.operators.text  # noqa: F401
     import e_commerce_data_warehouse_recommendation_system_spark.operators.quality  # noqa: F401
     import e_commerce_data_warehouse_recommendation_system_spark.recommend.queries  # noqa: F401

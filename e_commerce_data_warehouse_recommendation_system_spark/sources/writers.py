@@ -53,8 +53,10 @@ def upsert(old: DataFrame, new: DataFrame, keys: list[str]) -> DataFrame:
 
     Join-based MERGE emulation: rows of ``old`` whose key collides with
     ``new`` are replaced; everything else kept. Like SQL MERGE, ``new``
-    must be key-unique — duplicate source keys would all survive (callers
-    with replayed inputs dedupe first, e.g. the streaming merge sink).
+    must be key-unique. This function does not check it: a repeated
+    source key would land once per row and the key would stop being
+    unique. :func:`upsert_path` checks and raises ``ValueError``; the
+    streaming merge sink collapses within-batch duplicates first.
     With Delta on the classpath this becomes ``MERGE INTO`` (same public
     semantics); the anti-join form is shuffle-on-key and scales with AQE
     skew handling.
@@ -132,7 +134,22 @@ def upsert_path(spark, target_path: str, new: DataFrame, keys: list[str]) -> Non
     partition (the nightly delta spans all order years) gains nothing from
     the scoping and pays for the extra touched-values pass and the
     dynamic-overwrite write.
+
+    Raises ``ValueError``, before anything is written, if ``new`` holds a
+    key more than once: neither branch can pick which row wins.
     """
+    repeated = (
+        new.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .filter(F.col("_n") > 1)
+        .select(*keys)
+        .first()
+    )
+    if repeated is not None:
+        raise ValueError(
+            f"upsert delta holds key {repeated.asDict()} more than once "
+            f"(key columns {keys}); the delta must be key-unique"
+        )
     if _has_delta():  # pragma: no cover - no Delta jar in this container
         from delta.tables import DeltaTable
 

@@ -19,7 +19,6 @@ silently evict a flagship query again.
 from __future__ import annotations
 
 # Importing the component modules runs their @component registrations.
-import e_commerce_data_warehouse_recommendation_system_spark.operators.dedup  # noqa: F401
 import e_commerce_data_warehouse_recommendation_system_spark.operators.relational  # noqa: F401
 import e_commerce_data_warehouse_recommendation_system_spark.plans.etl  # noqa: F401
 import e_commerce_data_warehouse_recommendation_system_spark.plans.queries  # noqa: F401
@@ -143,35 +142,11 @@ SUITE_SPECS: dict[str, list[str]] = {
         # bitwise OR/AND/XOR flag-mask rollups (mergeable 8-byte state)
         "a28_bitwise_flags",
     ],
-    # §2.5 dedup + §2.6 windows (+ near-dup cluster assignment)
+    # §2.5 dedup + §2.6 windows
     "rel_window_dedup_suite": [
         "d1_dedup_keep_first",
         "d2_dedup_pair_subset",
         "d3_distinct",
-        "dedup_clusters",
-        # short-string entity resolution: blocked edit-distance join
-        "dedup_fuzzy_names",
-        # ER end-to-end: match edges -> transitive clusters -> golden
-        # record survivorship (round 14)
-        "er_golden_record",
-        # continuous-crawl posture: new batch probed against the
-        # historical hash + band index, O(batch) not O(corpus)
-        "text_incremental_dedup",
-        # SimHash Hamming-banded pair mining (lossless for <=3 by pigeonhole)
-        "dedup_simhash_pairs",
-        # exact-substring shared spans (the suffix-array dedup statistic)
-        "dedup_shared_spans",
-        # span EXCISION: cut duplicated spans from the later doc (keep-first)
-        "dedup_span_excision",
-        # holdout-split leakage census: near-dup pairs crossing train/val/
-        # test under row-level vs group-aware splits (round 11)
-        "dedup_split_leakage",
-        # LSH quality eval: banding recall vs the exact-Jaccard truth,
-        # precision computed from the spurious anti-join (round 11)
-        "dedup_lsh_quality",
-        # near-dup-aware sampling weights: 1e6 // cluster size per doc,
-        # the soft alternative to hard removal (round 12)
-        "dedup_cluster_weights",
         # regular-grid resampling: gap fill + forward fill per user
         "ts_resample_ffill",
         # Holt level+trend smoothing: per-series sequential state via
@@ -199,8 +174,8 @@ SUITE_SPECS: dict[str, list[str]] = {
         "ts_cusum_shift",
         # classical additive decomposition (centered 12-mo MA, ×24 exact)
         "ts_seasonal_decompose",
-        # streaming twin of the batch dedup ladder: watermarked exactly-once
-        # repair over a replayed source
+        # streaming dedup: watermarked exactly-once repair over a replayed
+        # source
         "stream_dedup_replay",
         # native session_window as a STREAM (boundary-exact vs batch oracle)
         "stream_session_window_native",
@@ -273,10 +248,6 @@ SUITE_SPECS: dict[str, list[str]] = {
     ],
     # text analysis: counting / quality / fingerprint / sampling / tf-idf
     "text_profile_suite": [
-        # the release DATA CARD: per-(lang, source) doc/char/token counts,
-        # exact-unique docs, near-dup-weighted effective mass, Gopher pass
-        # rate — three oracles composed into one artifact (round 12)
-        "text_data_card",
         # lang-ID confusion census vs the labeled column (round 12)
         "text_langid_confusion",
         "text_token_count",
@@ -285,9 +256,6 @@ SUITE_SPECS: dict[str, list[str]] = {
         "text_stratified_sample",
         "text_tfidf_topterms",
         "text_repetition",
-        "text_contamination",
-        # span-level decontamination (the GPT-3 13-gram collision rule)
-        "text_span_decontamination",
         "text_pii_scrub",
         # ftfy-class encoding-damage detection + repair (injected markers)
         "text_mojibake_detect",
@@ -329,8 +297,6 @@ SUITE_SPECS: dict[str, list[str]] = {
         "text_group_holdout_split",
         # §2.11 UDTF surface: sequential RLE over token streams
         "text_rle_udtf",
-        # cross-document boilerplate n-gram density (CCNet/C4 cleaning)
-        "text_boilerplate_ngrams",
         # corpus-trained bigram LM fluency score (CCNet LM filter)
         "text_lm_score",
         # CCNet head/middle/tail per-lang LM-quality terciles (round 11)

@@ -37,9 +37,6 @@ LAZY = [
     "etl_scd2_customer_priority",
     "text_lang_id",
     "text_pack_sequences",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
 ]
 
 

@@ -62,3 +62,19 @@ def test_deliberate_unmanaged_cache_fails_audit(tmp_path):
     got = measure(tmp_path)
     assert got["cache"] == 1
     assert cache_by_file(tmp_path) == {"ops.py": 1}
+
+
+def test_string_literals_are_not_sites(tmp_path):
+    """Docstrings and other string literals are prose, not code: rewording
+    one cannot move a count. A ``mapInArrow`` call is an Arrow site."""
+    mod = tmp_path / "ops.py"
+    mod.write_text(
+        "def build(df):\n"
+        '    """Unlike .cache() or applyInPandas, this\n'
+        '    stays in Arrow: df.collect() # not here."""\n'
+        '    sql = "SELECT 1 -- .crossJoin( in a string"\n'
+        "    return df.mapInArrow(f, schema=sql)\n"
+    )
+    got = measure(tmp_path)
+    assert got["cache"] == got["collect"] == got["crossJoin"] == 0
+    assert got["arrow_sites"] == 1

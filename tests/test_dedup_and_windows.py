@@ -1,33 +1,10 @@
-"""Shingle edge cases, keep-first dedup, and category-code parity."""
+"""Keep-first dedup and category-code parity."""
 
 from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-from e_commerce_data_warehouse_recommendation_system_spark.operators.dedup import shingles
-
-
-def _shingles(spark, text, n=3):
-    df = spark.createDataFrame([(text,)], schema="text string")
-    (row,) = df.select(shingles("text", n).alias("s")).collect()
-    return row.s
-
-
-def test_shingles_basic(spark):
-    assert _shingles(spark, "a b c d") == ["a b c", "b c d"]
-
-
-def test_shingles_exactly_n_tokens(spark):
-    assert _shingles(spark, "a b c") == ["a b c"]
-
-
-def test_shingles_fewer_than_n_tokens_is_empty(spark):
-    # Without the guard, Spark's sequence(1, size-2) would count DOWN and
-    # produce garbage for 1-2 token docs.
-    assert _shingles(spark, "a b") == []
-    assert _shingles(spark, "a") == []
 
 
 def test_dedup_keep_first_matches_pandas(spark):

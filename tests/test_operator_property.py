@@ -1,7 +1,7 @@
 """Property tests for the custom operators most at risk of semantic drift:
 asof_join vs DuckDB's native ASOF JOIN, surrogate_key vs plain sorted
-enumeration, connected_components vs a pure-Python union-find, and the
-context-window chunker vs directly computed window geometry."""
+enumeration, and the context-window chunker vs directly computed window
+geometry."""
 
 from __future__ import annotations
 
@@ -79,45 +79,6 @@ def test_surrogate_key_is_row_number(spark, vals):
     out = surrogate_key(df, "id", "sk", buckets=4)
     got = sorted((r.id, r.sk) for r in out.collect())
     want = sorted((v, i + 1) for i, v in enumerate(sorted(vals)))
-    assert got == want
-
-
-# random undirected graphs on a small node domain: self-loops, parallel
-# edges, and isolated nodes all occur
-graph_edges = st.lists(
-    st.tuples(st.integers(0, 11), st.integers(0, 11)), min_size=0, max_size=25
-)
-
-
-@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
-@given(graph_edges)
-@pytest.mark.usefixtures("spark")
-def test_connected_components_matches_union_find(spark, edges):
-    from e_commerce_data_warehouse_recommendation_system_spark.operators.dedup import (
-        connected_components,
-    )
-
-    n = 12
-    parent = list(range(n))
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    # min-label convention: every node's label is the smallest id reachable
-    want = {x: min(y for y in range(n) if find(y) == find(x)) for x in range(n)}
-
-    nodes = spark.createDataFrame([(i,) for i in range(n)], "node int")
-    edf = spark.createDataFrame(edges or [(0, 0)], "a int, b int")
-    if not edges:
-        edf = edf.filter("a < 0")
-    got = {r.node: r.label for r in connected_components(nodes, edf).collect()}
     assert got == want
 
 

@@ -434,9 +434,6 @@ SHUFFLE_BUDGET = {
     # The old budget of 1 was one corpus exchange on BARE lang — fewer
     # exchanges, but a single task sorting ~90% of a skewed corpus.
     "text_pack_sequences": 4,
-    "dedup_exact": 1,
-    "dedup_ngram_jaccard": 7,
-    "dedup_simhash": 2,
 }
 
 #: same ceilings for the lazy suite COMPONENTS added in round 6 (the
@@ -488,8 +485,6 @@ COMPONENT_SHUFFLE_BUDGET = {
     # round 11: LM scoring (cached, runs once) + boundary agg + broadcast
     # assignment join
     "text_ccnet_buckets": 7,
-    # round 11: minhash pair mining + two split-tag joins + census rollup
-    "dedup_split_leakage": 8,
     # round 11: two date-filtered fact scans + distincts + shelf top-k +
     # per-user census
     "rec_backtest_popularity": 8,
@@ -513,9 +508,6 @@ COMPONENT_SHUFFLE_BUDGET = {
     "text_lm_score": 6,
     # BPE stats: one corpus word groupBy + one vocab-bounded pair groupBy
     "text_bpe_pair_stats": 2,
-    # boilerplate: shared shingle pass + doc-frequency groupBy + per-doc
-    # rollup (boilerplate set joins back broadcast — no fact shuffle)
-    "text_boilerplate_ngrams": 5,
     # level-synchronous BFS: one-time edge build + repartition-on-src
     # layout, then 3 levels x (frontier expand + dedup + anti-join prune)
     # — every per-level exchange is frontier-sized, never graph-sized
@@ -544,28 +536,13 @@ COMPONENT_SHUFFLE_BUDGET = {
     # temperature mixture: one source rollup + the 2-scalar aggregate +
     # its broadcast (integer math is map-side)
     "text_mixture_temperature": 3,
-    # simhash banding: fingerprint build (explode+groupBy) + the banded
-    # candidate self-join on (band, key) + pair distinct + the per-doc
-    # verdict rollup — every exchange bucket- or corpus-sized, never pairs
-    "dedup_simhash_pairs": 9,
-    # shared spans: shingle df groupBy + the capped index join + the
-    # (pair, diagonal) island window + two rollups — pairs exist only
-    # where an exact k-gram match exists, never all-pairs
-    "dedup_shared_spans": 7,
-    # excision: the span base + drop-range rollup + the position range
-    # join + affected filter + the per-doc ordered reassembly — wide
-    # (16) but every exchange is span-, pair-, or affected-doc-bounded
-    "dedup_span_excision": 16,
     # fertility: the encode's 5 + a language-bounded rollup (lang join
     # broadcasts)
     "text_bpe_fertility": 5,
     # k-core: checkpointed peel rounds bill their per-round degree
-    # groupBy/joins off-plan (the BFS/CC convention); the 12 on-plan
+    # groupBy/joins off-plan (the BFS convention); the 12 on-plan
     # exchanges are the final assembly joins over node-bounded frames
     "graph_kcore": 12,
-    # span decontamination: eval shingles broadcast into the train scan;
-    # islands window + two rollups — fan-out bounded by the eval side
-    "text_span_decontamination": 5,
     # BPE round-trip: the encode's word/token distincts + single-partition
     # vocab window + the vocab-bounded decode join/groupBy (broadcast) +
     # the per-doc ordered reassembly (measured 8; ceiling 9 leaves one

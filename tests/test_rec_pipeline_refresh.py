@@ -29,9 +29,10 @@ pytestmark = pytest.mark.slow
 
 #: Spark jobs of one cold refresh at sf0.001 on local[4]: the bounds and
 #: counts pass, the two dictionaries, the ALS fit (4 blocks per side),
-#: the serving-state collect, the held-out collect and the publish
-#: read-back. Stages 5-8 otherwise run on the driver.
-COLD_REFRESH_JOBS = 77
+#: the serving-state collect, the held-out collect (over the cached
+#: interactions, no dictionary) and the publish read-back. Stages 5-8
+#: otherwise run on the driver.
+COLD_REFRESH_JOBS = 62
 
 
 @pytest.fixture(scope="module")

@@ -19,7 +19,6 @@ FAMILIES = (
     "q",  # headline analytics
     "j_asof",  # custom as-of join
     "etl_",  # warehouse ETL
-    "dedup_",  # text dedup ladder
     "text_",  # text analysis
     "dq_",  # data quality
     "rec_",  # recommender

@@ -340,46 +340,6 @@ def test_funnel_reasons_reconcile_with_aggregate_funnel(spark):
     assert verdicts.get("kept", 0) == funnel["r5_language"][1]
 
 
-def test_split_leakage_reconciles_with_pair_count(spark):
-    """The leakage census must conserve pairs: each strategy's n_pairs sums
-    to the minhash near-dup pair count; is_leak is exactly split_a !=
-    split_b; and a same-source pair can never leak under the group split
-    (both ends share md5(source) by construction)."""
-    from e_commerce_data_warehouse_recommendation_system_spark.operators.dedup import (
-        dedup_minhash_lsh,
-    )
-    from e_commerce_data_warehouse_recommendation_system_spark.registry import (
-        components,
-    )
-
-    rows = components()["dedup_split_leakage"].fn(spark, SF0001).collect()
-    n_pairs = dedup_minhash_lsh(spark, SF0001).count()
-    for strategy in ("doc_level", "group_level"):
-        assert sum(r.n_pairs for r in rows if r.strategy == strategy) == n_pairs
-    for r in rows:
-        assert r.is_leak == (r.split_a != r.split_b)
-    # group-split guarantee on same-source pairs: tag pairs with sources
-    # and check every same-source pair lands in a non-leak group_level cell
-    pairs = dedup_minhash_lsh(spark, SF0001).select("doc_a", "doc_b")
-    docs = spark.table("documents").select("doc_id", "source")
-    same_src = (
-        pairs.join(docs.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-        .withColumnRenamed("source", "src_a")
-        .join(
-            docs.withColumnRenamed("doc_id", "doc_b").withColumnRenamed(
-                "source", "src_b"
-            ),
-            "doc_b",
-        )
-        .filter("src_a = src_b")
-        .count()
-    )
-    group_same = sum(
-        r.n_pairs for r in rows if r.strategy == "group_level" and not r.is_leak
-    )
-    assert group_same >= same_src
-
-
 def test_rec_pipeline_e2e_stage_links(spark):
     """The serving capstone's cross-stage conservation: split partitions the
     interactions, factor cardinalities equal the train dictionary sizes'
@@ -460,64 +420,6 @@ def test_gopher_rules_matrix_consistency(spark):
     for flag in ("g1_word_count", "g5_required_words"):
         vals = {getattr(r, flag) for r in rows}
         assert vals == {True, False}, flag
-
-
-@pytest.fixture(scope="module")
-def leakage_dir(spark, tmp_path_factory):
-    """Constructed corpus with HAND-DERIVABLE leakage census. md5 first hex
-    digits (computed offline, hashlib): doc 100 -> 'f' (test), 101 -> '3'
-    (train), 103 -> '6' (train), 105 -> '6' (train); source srcA -> 'd'
-    (test), srcB -> '3' (train), srcG -> 'a' (val). Two exact-duplicate
-    pairs: (100, 101) share source srcB -> leaks under the doc split
-    (test x train) but NOT under the group split (train x train); (103,
-    105) sit in srcA/srcG -> safe under the doc split (train x train) but
-    leaks under the group split (test x val). Fillers share no shingles."""
-    import os
-
-    base = tmp_path_factory.mktemp("leak_diff")
-    out = str(base / "fixture")
-    os.makedirs(out)
-    for t in (
-        "region nation customer supplier part orders lineitem events"
-    ).split():
-        os.symlink(f"/root/testdata/sf0.001/{t}.parquet", f"{out}/{t}.parquet")
-    p = " ".join(f"p{i:02d}" for i in range(10))
-    q = " ".join(f"q{i:02d}" for i in range(10))
-    rows = [
-        (100, p, "en", "srcB", len(p)),
-        (101, p, "en", "srcB", len(p)),
-        (103, q, "en", "srcA", len(q)),
-        (105, q, "en", "srcG", len(q)),
-        (110, " ".join(f"w{i:02d}" for i in range(12)), "en", "srcC", 12),
-        (111, " ".join(f"x{i:02d}" for i in range(12)), "en", "srcD", 12),
-    ]
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).coalesce(1).write.parquet(f"{out}/documents.parquet")
-    return out
-
-
-def test_split_leakage_hand_derived_census(spark, leakage_dir):
-    """The leakage audit on the constructed corpus must report EXACTLY the
-    hand-derived cells — a wrong split rule, a dropped pair, or leak
-    misclassification all produce a different census."""
-    from e_commerce_data_warehouse_recommendation_system_spark.registry import (
-        components,
-    )
-
-    got = sorted(
-        tuple(r)
-        for r in components()["dedup_split_leakage"].fn(spark, leakage_dir).collect()
-    )
-    want = sorted(
-        [
-            ("doc_level", "test", "train", 1, True),
-            ("doc_level", "train", "train", 1, False),
-            ("group_level", "train", "train", 1, False),
-            ("group_level", "test", "val", 1, True),
-        ]
-    )
-    assert got == want
 
 
 def test_backtest_popularity_bounds_and_novelty(spark):

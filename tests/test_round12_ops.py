@@ -107,63 +107,6 @@ def test_backtest_als_lift_floors(spark):
     assert rates["rate_micro"] > pop_rate
 
 
-def test_cluster_weights_algebra(spark):
-    """Weight algebra on the real component: every cluster's members share
-    its root and size; exactly one keeper per cluster (the root itself);
-    weight_micro == 1e6 // size; singleton docs keep full weight; the
-    effective-corpus identity holds (sum of 1e6//size over members of a
-    size-s cluster = s * (1e6 // s), summed over clusters)."""
-    from e_commerce_data_warehouse_recommendation_system_spark.registry import (
-        components,
-    )
-
-    rows = components()["dedup_cluster_weights"].fn(spark, SF0001).collect()
-    assert rows
-    by_root: dict = {}
-    for r in rows:
-        by_root.setdefault(r.cluster_root, []).append(r)
-    for root, members in by_root.items():
-        size = len(members)
-        keepers = [m for m in members if m.is_keeper]
-        assert len(keepers) == 1 and keepers[0].doc_id == root
-        assert root == min(m.doc_id for m in members)
-        for m in members:
-            assert m.cluster_size == size
-            assert m.weight_micro == 1000000 // size
-    # at least one non-trivial cluster exists in the fixture, and
-    # singletons keep weight exactly 1.0
-    assert any(len(m) > 1 for m in by_root.values())
-    assert any(
-        len(m) == 1 and m[0].weight_micro == 1000000 for m in by_root.values()
-    )
-
-
-def test_data_card_consistency(spark):
-    """The release card's cells must be mutually consistent and conserve
-    the corpus: per group, unique <= docs, gopher-pass <= docs, effective
-    mass <= docs (weights never exceed 1.0) and >= the per-group doc count
-    would imply no dedup — at least one group must show effective < docs
-    (the fixture plants duplicate families); the group doc totals must sum
-    to the documents table row count."""
-    from e_commerce_data_warehouse_recommendation_system_spark.registry import (
-        components,
-    )
-    from e_commerce_data_warehouse_recommendation_system_spark.sources.readers import (
-        prepare as _prep,
-    )
-
-    _prep(spark, SF0001)
-    rows = components()["text_data_card"].fn(spark, SF0001).collect()
-    assert rows
-    for r in rows:
-        assert 1 <= r.n_exact_unique <= r.n_docs
-        assert 0 <= r.n_gopher_pass <= r.n_docs
-        assert 0 < r.effective_docs_micro <= r.n_docs * 1000000
-        assert r.n_tokens > 0 and r.n_chars > 0
-    assert sum(r.n_docs for r in rows) == spark.table("documents").count()
-    assert any(r.effective_docs_micro < r.n_docs * 1000000 for r in rows)
-
-
 def test_backtest_coldstart_population_disjoint(spark):
     """The cold-start census covers EXACTLY the users the warm backtests
     cannot: disjoint from every pre-cutoff user, and together with the

@@ -54,6 +54,24 @@ def test_upsert_path_matches_null_key_components(spark, tmp_path):
     assert [tuple(r) for r in spark.read.parquet(target).collect()] == [(2, None, "b2")]
 
 
+def test_upsert_path_rejects_a_repeated_delta_key(spark, tmp_path):
+    """A delta that holds one key twice raises and names the key; the
+    target keeps its rows."""
+    from e_commerce_data_warehouse_recommendation_system_spark.sources.writers import (
+        upsert_path,
+    )
+
+    schema = "k1 int, k2 int, v string"
+    target = str(tmp_path / "tgt")
+    first = spark.createDataFrame([(1, 1, "a"), (2, 2, "b")], schema)
+    upsert_path(spark, target, first, ["k1", "k2"])
+    delta = spark.createDataFrame([(1, 1, "x"), (1, 1, "y")], schema)
+    with pytest.raises(ValueError, match=r"\{'k1': 1, 'k2': 1\}.*\['k1', 'k2'\]"):
+        upsert_path(spark, target, delta, ["k1", "k2"])
+    got = sorted(tuple(r) for r in spark.read.parquet(target).collect())
+    assert got == [(1, 1, "a"), (2, 2, "b")]
+
+
 def test_delete_by_keys(spark):
     df = _df(spark, [(1, "a"), (2, "b"), (3, "c")])
     dels = spark.createDataFrame([(2,), (9,)], schema="k int")
