@@ -6,9 +6,10 @@ mf_knn_recommender.py:98-173 training, :244-322 serving, :365-475 eval,
 :477-547 MMR diversification), driven by use_model.py:24-54. Spark-first
 mapping:
 
-- label encoding (M1)   -> dense_rank dictionaries (LabelEncoder sorts its
-  classes, reference: mf_knn_recommender.py:73-80 — dense_rank over the
-  natural key order reproduces exactly that numbering);
+- label encoding (M1)   -> ``np.unique`` over the collected interactions
+  on the driver (``_dictionary``; LabelEncoder sorts its classes,
+  reference: mf_knn_recommender.py:73-80 — a code is the sorted id's
+  position, exactly SQL's dense_rank - 1);
 - interactions (M2)     -> long-format distinct (user_idx, item_idx, 1.0) —
   never a materialized matrix (the CSR matrix at
   reference: mf_knn_recommender.py:82-96 becomes ALS's internal blocks);
@@ -42,12 +43,14 @@ Interactions come from the testdata star: user = o_custkey, item = l_partkey
 via orders ⋈ lineitem (the fact_orders customer×product pairs the reference
 trains on, reference: mf_knn_recommender.py:40-70).
 
-Scale posture: encoding dictionaries are bounded (distinct users/items);
-the ALS shuffle is on block ids (MLlib-internal). The driver holds the
-serving state (the trained factor tables, bounded by the dictionaries,
-``_serving_state``), the top-k and MMR arrays computed from it (k rows
-per user) and the held-out pairs (``_held_out``, the one collect that
-grows with interactions).
+Scale posture: the refresh is one Spark query in (the interactions with
+their split flag, collected once), one MLlib fit (its shuffle is on block
+ids) and one factor collect out. The driver encodes the collected pairs
+(``_artifacts``, the one collect that grows with the interactions, held
+while the refresh encodes them and fits from them) and keeps the
+dictionaries, the held-out pairs (``_held_out``), the serving state (the
+trained factor tables, bounded by the dictionaries, ``_serving_state``)
+and the top-k and MMR arrays computed from it (k rows per user).
 """
 
 from __future__ import annotations
@@ -60,9 +63,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from e_commerce_data_warehouse_recommendation_system_spark.operators.relational import (
-    surrogate_key,
-)
 from e_commerce_data_warehouse_recommendation_system_spark.registry import (
     component,
     register,
@@ -114,63 +114,26 @@ def interactions(spark: SparkSession) -> DataFrame:
     )
 
 
-def _encode(
-    df: DataFrame, id_col: str, idx_col: str, bounds: "list | None" = None
-) -> DataFrame:
-    """M1: LabelEncoder analog — 0-based dense codes in sorted-key order
-    (sklearn LabelEncoder numbers sorted classes,
-    reference: mf_knn_recommender.py:73-80).
+def _dictionary(table, name: str):
+    """M1: the LabelEncoder analog, on the driver (sklearn LabelEncoder
+    numbers its sorted classes, reference: mf_knn_recommender.py:73-80).
+    For column ``name`` of a collected pyarrow Table, returns ``(ids,
+    codes)``: ``ids`` the distinct values ascending, ``codes`` the int32
+    row of each value in ``ids``. A code is therefore exactly SQL's
+    ``DENSE_RANK() OVER (ORDER BY id) - 1`` (the ``rec_label_encode``
+    oracle). Every encoder of the package goes through here: the refresh
+    (:func:`_artifacts`), the ALS backtest, ``rec_label_encode`` and the
+    item dictionary of ``rec_negative_samples``.
 
-    Built on the two-phase surrogate key (operators.relational.surrogate_key,
-    oracle-proven ≡ global ROW_NUMBER by w1b): the distinct-id dictionary is
-    ranked per quantile bucket + broadcast offsets — never a single-partition
-    global sort, so the encoding scales with the id space (at 100× the user
-    dictionary is exactly what grows). The dense_rank SQL oracle is
-    unchanged (rec_label_encode digests prove equivalence).
+    Raises ``ValueError`` naming the column when it holds a NULL: a NULL
+    id has no code, and converting the column would make it float."""
+    import numpy as np
 
-    ``bounds``: optional precomputed bucket boundaries (see
-    :func:`_encode_bounds_pair`) — skips surrogate_key's own eager
-    approxQuantile job; provably result-identical (any monotone bucketing
-    reconstructs the same global rank)."""
-    distinct_ids = df.select(id_col).distinct()
-    keyed = surrogate_key(distinct_ids, id_col, "_sk", bounds=bounds)
-    return keyed.select(F.col(id_col), (F.col("_sk") - 1).cast("int").alias(idx_col))
-
-
-def _encode_bounds_pair(
-    df: DataFrame, user_c: str, item_c: str, **counts: F.Column
-) -> tuple[list, list, dict]:
-    """ONE aggregation job computing bucket boundaries for BOTH encoding
-    dictionaries (r15 opt, guide §1.2 / VERDICT r14 item 4): the two
-    ``_encode`` calls each ran an eager approxQuantile over a distinct()
-    of the interaction frame — two actions, each with its own
-    distinct-shuffle, for boundary lists whose PLACEMENT only affects
-    bucket balance, never the surrogate-key result. A single
-    ``percentile_approx`` pass over both raw columns (no distinct —
-    multiplicity skews placement only) replaces both. Sketches merge
-    map-side, so on its own this is one shuffle-free scan of the (cached)
-    interaction frame.
-
-    ``counts``: named aggregate columns evaluated in the same pass, so a
-    caller gets the frame's counts without a job of their own. Returns
-    ``(user_bounds, item_bounds, {name: value})``. :func:`_artifacts`
-    passes the refresh's exact counts this way: interactions
-    (``count(*)``), distinct users and items (``count_distinct``, which
-    adds the pass's only shuffle) and held-out pairs."""
-    spark = df.sparkSession
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    qs = [i / n for i in range(1, n)]
-    aggs = [c.alias(name) for name, c in counts.items()]
-    if qs:
-        qarr = F.array(*[F.lit(q) for q in qs])
-        aggs += [
-            F.percentile_approx(user_c, qarr, F.lit(10000)).alias("_ub"),
-            F.percentile_approx(item_c, qarr, F.lit(10000)).alias("_ib"),
-        ]
-    if not aggs:
-        return [], [], {}
-    row = df.agg(*aggs).first().asDict()
-    return list(row.pop("_ub", None) or []), list(row.pop("_ib", None) or []), row
+    col = table.column(name)
+    if col.null_count:
+        raise ValueError(f"{name} holds {col.null_count} NULL id(s), which have no code")
+    ids, codes = np.unique(col.to_numpy(), return_inverse=True)
+    return ids, codes.astype(np.int32)
 
 
 def _split_bucket(user_c: str, item_c: str) -> F.Column:
@@ -190,44 +153,73 @@ _CACHE: dict[tuple[str, str], dict] = {}
 
 
 def _artifacts(spark: SparkSession, sf_dir: str) -> dict:
+    """The refresh's model and what it was fitted on, memoized per
+    (session, sf_dir): one Spark query in, one MLlib fit.
+
+    The interactions reach the driver in one ``toArrow`` collect, with
+    the md5 split flag computed in Spark (``_split_bucket``). Everything
+    before the fit comes from those arrays: both dictionaries
+    (:func:`_dictionary`), the exact ``counts`` and the ``held_out``
+    pairs. ``users``, ``items``, ``train`` and ``test`` are frames over
+    pyarrow Tables (LocalTableScans): building them runs no job, and they
+    need no cache. ``user_dict``/``item_dict`` are the dictionaries' id
+    vectors, which decode the fitted factors (:func:`_serving_state`).
+
+    Scale limit: the driver holds the collected pairs while it encodes
+    them (two int64 ids, two int32 codes and the flag per pair; 599 351
+    pairs at sf0.1), and the fit reads ``train`` from the driver, so the
+    fit's first stage carries the pairs inside its tasks, one slice per
+    core. At sf0.1 on ``local[4]`` a slice is about 5.8 MB, and Spark
+    warns of a "task of very large size". Past the driver's memory the
+    encoding has to return to a distributed dictionary."""
     cache_key = (spark.sparkContext.applicationId, sf_dir)
     if cache_key in _CACHE:
         return _CACHE[cache_key]
     # evict entries from dead sessions: only the current application's
-    # artifacts can ever be reused, and each entry pins cached frames +
-    # memoized serving outputs — keeping them would grow driver memory with
-    # every session restart
+    # artifacts can ever be reused, and each entry pins driver arrays and
+    # local frames — keeping them would grow driver memory with every
+    # session restart
     for stale in [k for k in _CACHE if k[0] != cache_key[0]]:
         del _CACHE[stale]
+    import numpy as np
     from pyspark.ml.recommendation import ALS
 
-    # cache: the interaction join feeds the bounds-and-counts pass, the two
-    # dictionary builds and the encoded train/test materialization — without
-    # it orders ⋈ lineitem re-executes per consumer
-    inter = interactions(spark).cache()
-    # one pass for both dictionaries' bounds (r15 opt; see
-    # _encode_bounds_pair) that also takes the refresh's exact counts
-    ub, ib, counts = _encode_bounds_pair(
-        inter,
-        "user_id",
-        "item_id",
-        n_interactions=F.count(F.lit(1)),
-        n_users=F.count_distinct("user_id"),
-        n_items=F.count_distinct("item_id"),
-        n_test=F.count(
-            F.when(_split_bucket("user_id", "item_id").isin(*_TEST_DIGITS), 1)
-        ),
+    held = _split_bucket("user_id", "item_id").isin(*_TEST_DIGITS)
+    # the one collect that grows with the interactions (see docstring);
+    # one chunk per column, so every to_numpy below is zero-copy
+    t = (
+        interactions(spark)
+        .select("user_id", "item_id", held.alias("held"))
+        .toArrow()
+        .combine_chunks()
     )
-    users = _encode(inter, "user_id", "user_idx", bounds=ub)
-    items = _encode(inter, "item_id", "item_idx", bounds=ib)
-    encoded = (
-        inter.join(users, "user_id")
-        .join(items, "item_id")
-        .withColumn("rating", F.lit(1.0))
-        .withColumn("bucket", _split_bucket("user_id", "item_id"))
-    )
-    train = encoded.filter(~F.col("bucket").isin(*_TEST_DIGITS)).cache()
-    test = encoded.filter(F.col("bucket").isin(*_TEST_DIGITS)).cache()
+    user_dict, user_idx = _dictionary(t, "user_id")
+    item_dict, item_idx = _dictionary(t, "item_id")
+    user_id, item_id = t.column("user_id").to_numpy(), t.column("item_id").to_numpy()
+    is_test = t.column("held").to_numpy(zero_copy_only=False)
+    test_rows = np.flatnonzero(is_test)
+
+    def pairs(rows):
+        return _local_frame(
+            spark,
+            "item_id bigint, user_id bigint, user_idx int, item_idx int, rating double",
+            item_id=item_id[rows],
+            user_id=user_id[rows],
+            user_idx=user_idx[rows],
+            item_idx=item_idx[rows],
+            rating=np.ones(len(rows)),
+        )
+
+    train = pairs(np.flatnonzero(~is_test))
+    test = pairs(test_rows)
+    users = _dictionary_frame(spark, user_dict, "user_id", "user_idx")
+    items = _dictionary_frame(spark, item_dict, "item_id", "item_idx")
+    counts = {
+        "n_interactions": t.num_rows,
+        "n_users": len(user_dict),
+        "n_items": len(item_dict),
+        "n_test": len(test_rows),
+    }
     # one ALS block per core, the rule _size_shuffle_partitions applies to
     # shuffle partitions: MLlib's default of 10 blocks per side only adds
     # tasks at these sizes. Each block seeds its factors from (SEED, block
@@ -250,12 +242,14 @@ def _artifacts(spark: SparkSession, sf_dir: str) -> dict:
     model = als.fit(train)
     art = {
         "model": model,
-        "inter": inter,
         "train": train,
         "test": test,
         "users": users,
         "items": items,
+        "user_dict": user_dict,
+        "item_dict": item_dict,
         "counts": counts,
+        "held_out": (user_id[test_rows], item_id[test_rows]),
     }
     _CACHE[cache_key] = art
     return art
@@ -311,6 +305,18 @@ def _local_frame(spark: SparkSession, schema: "str | T.StructType", **cols) -> D
     return spark.createDataFrame(pa.table(cols), schema=schema)
 
 
+def _dictionary_frame(spark: SparkSession, ids, id_col: str, idx_col: str) -> DataFrame:
+    """One encoding dictionary as a local frame ``(id_col bigint, idx_col
+    int)``: the ascending ``ids`` of :func:`_dictionary` and their codes."""
+    import numpy as np
+
+    return _local_frame(
+        spark,
+        f"{id_col} bigint, {idx_col} int",
+        **{id_col: ids, idx_col: np.arange(len(ids), dtype=np.int32)},
+    )
+
+
 def _topk_kernel(U, V, k: int):
     """The one top-k scoring kernel. Batch serving (:func:`_topk_arrays`,
     in chunks of users), single-user serving (:func:`serve_user`, one
@@ -322,7 +328,7 @@ def _topk_kernel(U, V, k: int):
     ``(pos, score)``, both (m, min(k, n)): ``pos`` indexes rows of ``V``
     and ``score`` is float32. Each row is ordered by score descending,
     ties by position ascending — that is by item_idx, and so by item_id,
-    because ``_encode`` numbers ids by a sorted dense rank. Which of the
+    because :func:`_dictionary` numbers sorted ids. Which of the
     items tied at the k-th score make the cut is argpartition's choice,
     so a prefix of a k=30 row need not equal the k=10 row: callers that
     need both call the kernel twice.
@@ -370,43 +376,36 @@ def _serving_state(art: dict) -> dict:
     - ``user_ids`` int64 (n_users,), ``user_row`` (user_id -> row) and
       ``U`` float32 (n_users, rank): the user side, ordered by user_idx.
 
-    Both id vectors ascend, because ``_encode`` numbers ids by a sorted
-    dense rank. One collect: both factor frames, each joined to its
-    encoding dictionary, as one tagged union. The collect is bounded by
+    Both id vectors ascend, because :func:`_dictionary` numbers sorted
+    ids. One ``toArrow`` collect of both factor frames as one tagged
+    union, with no join: each side is sorted by its factor id (the code),
+    and the code indexes the dictionary's id vector
+    (``art["user_dict"]``/``art["item_dict"]``). The collect is bounded by
     the dictionaries — (n_users + n_items) x rank float32 plus the id
     vectors, about 2.3 MB at sf0.1 for rank 16."""
     if "serving" in art:
         return art["serving"]
     import numpy as np
+    import pyarrow.compute as pc
 
     model = art["model"]
-
-    def side(factors, dictionary, idx_col, id_col, is_user):
-        return factors.join(
-            F.broadcast(dictionary), F.col("id") == F.col(idx_col)
-        ).select(
-            F.lit(is_user).alias("is_user"),
-            F.col("id").alias("idx"),
-            F.col(id_col).alias("nat_id"),
-            "features",
-        )
-
     # dictionary-bounded driver collect (see docstring)
-    rows = (
-        side(model.userFactors, art["users"], "user_idx", "user_id", True)
-        .unionByName(side(model.itemFactors, art["items"], "item_idx", "item_id", False))
-        .collect()
+    t = (
+        model.userFactors.select(F.lit(True).alias("is_user"), "id", "features")
+        .unionByName(model.itemFactors.select(F.lit(False).alias("is_user"), "id", "features"))
+        .toArrow()
+        .combine_chunks()
     )
-    rank = model.rank
+    is_user = t.column("is_user").to_numpy(zero_copy_only=False)
+    codes = t.column("id").to_numpy()
+    mat = pc.list_flatten(t.column("features")).to_numpy().reshape(t.num_rows, model.rank)
 
-    def arrays(is_user):
-        sel = sorted((r for r in rows if r.is_user == is_user), key=lambda r: r.idx)
-        ids = np.array([r.nat_id for r in sel], dtype=np.int64)
-        mat = np.array([r.features for r in sel], dtype=np.float32).reshape(len(sel), rank)
-        return ids, mat
+    def arrays(rows, dictionary):
+        rows = rows[np.argsort(codes[rows])]
+        return dictionary[codes[rows]], mat[rows]
 
-    user_ids, U = arrays(True)
-    item_ids, V = arrays(False)
+    user_ids, U = arrays(np.flatnonzero(is_user), art["user_dict"])
+    item_ids, V = arrays(np.flatnonzero(~is_user), art["item_dict"])
     art["serving"] = {
         "item_ids": item_ids,
         "V": V,
@@ -476,17 +475,12 @@ def _lookup(sorted_ids, ids):
 
 
 def _held_out(art: dict):
-    """The held-out (user_id, item_id) pairs as two bigint vectors,
-    memoized per model. Unlike the serving state this collect grows with
-    the interactions, not with the dictionaries: 16 bytes per pair,
-    11 066 pairs at sf0.01 and 112 572 (1.8 MB) at sf0.1. The pairs are
-    the cached interactions filtered by the split, not the ``test``
-    frame: every interaction has both codes, so the dictionary joins
-    select the same pairs and would only rebuild both dictionaries."""
-    if "held_out" not in art:
-        held = _split_bucket("user_id", "item_id").isin(*_TEST_DIGITS)
-        t = art["inter"].filter(held).select("user_id", "item_id").toArrow()
-        art["held_out"] = (t.column("user_id").to_numpy(), t.column("item_id").to_numpy())
+    """The held-out (user_id, item_id) pairs as two bigint vectors: the
+    interactions whose md5 bucket is a test digit, taken by
+    :func:`_artifacts` from its one collect and memoized with the model.
+    Unlike the serving state they grow with the interactions, not with
+    the dictionaries: 16 bytes per pair, 11 066 pairs at sf0.01 and
+    112 572 (1.8 MB) at sf0.1."""
     return art["held_out"]
 
 
@@ -512,21 +506,24 @@ def _held_out(art: dict):
     """,
 )
 def rec_label_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M1: both encoding dictionaries, stacked (entity, original_id, idx)."""
+    """M1: both encoding dictionaries, stacked (entity, original_id, idx):
+    one collect of the interactions, encoded on the driver by
+    :func:`_dictionary` as the refresh encodes them."""
+    import numpy as np
+
     prepare(spark, sf_dir)
-    # cache: each _encode runs an eager approxQuantile plus rank/offset jobs
-    # over this join — uncached, the orders ⋈ lineitem distinct re-executes
-    # per consumer (same reasoning as _artifacts)
-    inter = interactions(spark).cache()
-    # one quantile pass for both dictionaries (r15 opt; see _encode_bounds_pair)
-    ub, ib, _ = _encode_bounds_pair(inter, "user_id", "item_id")
-    u = _encode(inter, "user_id", "idx", bounds=ub).select(
-        F.lit("user").alias("entity"), F.col("user_id").alias("original_id"), "idx"
+    t = interactions(spark).toArrow()
+    user_ids, _ = _dictionary(t, "user_id")
+    item_ids, _ = _dictionary(t, "item_id")
+    return _local_frame(
+        spark,
+        "entity string, original_id bigint, idx int",
+        entity=["user"] * len(user_ids) + ["item"] * len(item_ids),
+        original_id=np.concatenate([user_ids, item_ids]),
+        idx=np.concatenate(
+            [np.arange(len(user_ids), dtype=np.int32), np.arange(len(item_ids), dtype=np.int32)]
+        ),
     )
-    i = _encode(inter, "item_id", "idx", bounds=ib).select(
-        F.lit("item").alias("entity"), F.col("item_id").alias("original_id"), "idx"
-    )
-    return u.unionByName(i)
 
 
 @component(
@@ -2201,19 +2198,22 @@ def rec_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: candidate space is |users| x {NEG_SLOTS} — a bounded map-side
     fan-out, never |users| x |items|; the item dictionary is
-    vocabulary-sized and broadcast; the anti-join shuffles on the pair
-    key once; per-user windows run on <= {NEG_SLOTS} rows."""
+    vocabulary-sized, encoded on the driver and broadcast; the anti-join
+    shuffles on the pair key once; per-user windows run on <= {NEG_SLOTS}
+    rows."""
+    import numpy as np
+
     prepare(spark, sf_dir)
     inter = interactions(spark)
-    items = _encode(inter, "item_id", "idx").select(
-        "item_id", F.col("idx").cast("long").alias("idx")
+    # the item dictionary: one vocabulary-sized collect, encoded on the driver
+    item_ids, _ = _dictionary(inter.select("item_id").distinct().toArrow(), "item_id")
+    items = _local_frame(
+        spark, "item_id bigint, idx bigint", item_id=item_ids, idx=np.arange(len(item_ids))
     )
-    n = items.agg(F.count(F.lit(1)).alias("n_items"))
     users = inter.select("user_id").distinct()
     slots = spark.range(NEG_SLOTS).select(F.col("id").alias("slot"))
     cand = (
         users.crossJoin(F.broadcast(slots))
-        .crossJoin(F.broadcast(n))
         .select(
             "user_id",
             "slot",
@@ -2233,7 +2233,7 @@ def rec_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
                     16,
                     10,
                 ).cast("long")
-                % F.col("n_items")
+                % F.lit(len(item_ids))
             ).alias("idx"),
         )
     )
@@ -2729,12 +2729,14 @@ def rec_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     held-out split, (8) publish the diversified lists to parquet and
     re-read them (the DAG's store step).
 
-    Stages 1-4 run in Spark (``_artifacts``). Stages 5-8 are one driver
+    Stages 1-4 are ``_artifacts``: one Spark query collects the
+    interactions with their md5 split flag, the driver encodes and splits
+    them, and MLlib fits ALS. Stages 5-8 are one driver
     pass over the fitted factors, which the serving state already keeps
     on the driver (the inference-next-to-resident-model shape of the
     reference's NumPy recommender, mf_knn_recommender.py:244-547): top-k
     at k=10 and k=30 through ``_topk_kernel``, MMR per user through
-    ``_mmr_picks``, eval from one collect of the held-out pairs, and the
+    ``_mmr_picks``, eval over the held-out pairs, and the
     publish as one parquet write of the MMR Table followed by a Spark
     read-back. The stages call ``mmr_rerank`` and ``rec_eval_metrics``, so
     the catalog queries and the refresh share one implementation.
@@ -2751,8 +2753,9 @@ def rec_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     flips a count or flag and the suite's driver row goes red.
 
     Driver memory: the serving state and the top-k and MMR arrays are
-    bounded by the dictionaries (k rows per user); the held-out pairs
-    grow with the interactions (see ``_held_out``)."""
+    bounded by the dictionaries (k rows per user); the collected
+    interactions and the held-out pairs grow with the interactions (see
+    ``_artifacts`` and ``_held_out``)."""
     import shutil
     import tempfile
 
@@ -2761,8 +2764,8 @@ def rec_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     prepare(spark, sf_dir)
     art = _artifacts(spark, sf_dir)
-    # stages 1-4 cost no job of their own: the exact counts came with the
-    # dictionary-bounds pass, and the factor counts are the row counts of
+    # stages 1-4 cost no job of their own: the exact counts come from the
+    # collected interactions, and the factor counts are the row counts of
     # the driver-resident serving state
     counts = art["counts"]
     st = _serving_state(art)
@@ -3304,21 +3307,32 @@ def _backtest_als_artifacts(spark: SparkSession, sf_dir: str) -> dict:
     Scale: the fit is MLlib ALS over the pre slice (same block shuffles as
     the production fit); serving is ``recommendForUserSubset`` over the
     eval users only (left-semi-pruned, NOT all users); the seen-item
-    exclusion is one anti-join against the pre pairs; the only collects
-    are two 1-row scalars (pool-width sizing + the n_items clamp)."""
+    exclusion is one anti-join against the pre pairs. Collects: the pre
+    pairs, once, which :func:`_dictionary` encodes on the driver (the
+    refresh's scale limit, see :func:`_artifacts`), and one 1-row scalar
+    (the pool-width sizing)."""
     cache_key = (spark.sparkContext.applicationId, sf_dir, "backtest_als")
     if cache_key in _CACHE:
         return _CACHE[cache_key]
+    import numpy as np
     from pyspark.ml.recommendation import ALS
 
     pre, post = _backtest_pre_post(spark)
-    pre = pre.cache()  # feeds encode x2, train, novelty anti-join, sizing
-    # one quantile pass for both dictionaries (r15 opt; see _encode_bounds_pair)
-    ub, ib, _ = _encode_bounds_pair(pre, "u", "i")
-    users = _encode(pre, "u", "user_idx", bounds=ub)
-    items = _encode(pre, "i", "item_idx", bounds=ib)
-    train = (
-        pre.join(users, "u").join(items, "i").withColumn("rating", F.lit(1.0))
+    pre = pre.cache()  # feeds the encode, novelty anti-join, sizing, serving
+    # the pre pairs, encoded on the driver as the refresh encodes them
+    t = pre.toArrow().combine_chunks()
+    u_ids, u_idx = _dictionary(t, "u")
+    i_ids, i_idx = _dictionary(t, "i")
+    users = _dictionary_frame(spark, u_ids, "u", "user_idx")
+    items = _dictionary_frame(spark, i_ids, "i", "item_idx")
+    train = _local_frame(
+        spark,
+        "i bigint, u bigint, user_idx int, item_idx int, rating double",
+        i=t.column("i").to_numpy(),
+        u=t.column("u").to_numpy(),
+        user_idx=u_idx,
+        item_idx=i_idx,
+        rating=np.ones(t.num_rows),
     )
     als = ALS(
         rank=RANK,
@@ -3343,11 +3357,11 @@ def _backtest_als_artifacts(spark: SparkSession, sf_dir: str) -> dict:
     # >= MMR_POOL (>= TOP_K) unseen candidates per user after the seen
     # anti-join — so n_pred == TOP_K is a STRUCTURAL invariant the census
     # oracle can pin, not a hope (asserted below: the pool must FIT the
-    # catalog, never silently clamp to it). Two bounded scalars collect
+    # catalog, never silently clamp to it). One bounded scalar collects
     # here (documented 1-row class). At 100 TB a mega-user cap replaces
     # the global max (accepting n_pred < k for capped users — the
     # census's n_pred column is computed genuinely either way).
-    k_pool = _pool_sizing(pre, eval_users, items.count())
+    k_pool = _pool_sizing(pre, eval_users, len(i_ids))
     subset = users.join(eval_users, "u", "left_semi")
     pool = _unseen_ranked_pool(model, users, items, pre, subset, k_pool).cache()
     art = {

@@ -126,22 +126,6 @@ def test_q1_single_shuffle(spark):
     assert "Exchange SinglePartition" not in plan
 
 
-def test_label_encode_has_no_global_sort_window(spark):
-    """_encode must build its dictionaries with the two-phase surrogate key:
-    no unpartitioned dense_rank/row_number window over the distinct-id set
-    (the round-2 perf-weak finding). The only tolerated single-partition
-    work is the O(buckets) offset frame."""
-    from e_commerce_data_warehouse_recommendation_system_spark.recommend.queries import _encode
-    from e_commerce_data_warehouse_recommendation_system_spark.sources.readers import prepare
-
-    prepare(spark, SF0001)
-    ids = spark.table("orders").select(F.col("o_custkey").alias("user_id"))
-    plan = _plan(_encode(ids, "user_id", "user_idx"))
-    assert "dense_rank" not in plan, "dictionary built by a global dense_rank sort"
-    # the partition-local rank must be windowed by the quantile bucket
-    assert "row_number" in plan and "_bkt" in plan
-
-
 def test_salted_join_matches_plain_join(spark):
     fact = spark.createDataFrame(
         [(i % 3, float(i)) for i in range(100)], schema="k int, x double"
@@ -496,11 +480,11 @@ COMPONENT_SHUFFLE_BUDGET = {
     "j_ivm_join_view": 2,
     # NDCG: train reach + shelf TakeOrdered + holdout/DCG user shuffles
     "rec_ndcg_popularity": 6,
-    # negative sampling: the dictionary's two-phase surrogate key + the
-    # interactions distinct (computed for the dict AND the anti-join
-    # side) + per-user dedup/window — every frame is bounded (users,
-    # items, |users|x10 candidates), so the count is wide, not deep
-    "rec_negative_samples": 12,
+    # negative sampling: the interactions distinct (for the users AND the
+    # anti-join side) + per-user dedup/window; the item dictionary is
+    # encoded on the driver (a local frame, no exchange). Every frame is
+    # bounded (users, items, |users|x10 candidates)
+    "rec_negative_samples": 4,
     # equi-depth: one boundary aggregate + one bucket-count aggregate
     "a16_equidepth_histogram": 2,
     # round 8: LM scoring = bigram counts + context counts + scoring join

@@ -5,8 +5,8 @@ Stages 5-8 of ``rec_pipeline_e2e`` run on the driver over the fitted
 factors. Here the driver MMR is checked against the distributed
 ``mmr_diversify_frame`` over the same pool, the driver P@k/R@k against
 DuckDB SQL over the served top-k and the md5 held-out split, and (at
-sf0.1) the driver arrays against a byte bound per user, item and
-held-out pair.
+sf0.1) the driver arrays against a byte bound per user, item, held-out
+pair and collected interaction.
 """
 
 from __future__ import annotations
@@ -110,30 +110,57 @@ BYTES_PER_USER = rq.RANK * 4 + 8 + (rq.TOP_K + rq.MMR_POOL) * 12 + rq.TOP_K * 28
 BYTES_PER_ITEM = rq.RANK * 4 + 8
 #: per held-out pair: two int64 ids
 BYTES_PER_HELD_OUT = 16
+#: per dictionary entry (every distinct user and item): its int64 id
+BYTES_PER_DICT_ID = 8
+#: per collected interaction, held while the refresh encodes them: the
+#: two int64 ids and the split flag as collected (plus a validity bit per
+#: column) and the two int32 codes
+BYTES_PER_INTERACTION = 25
 
 
-def test_refresh_driver_arrays_bounded_at_sf01(spark):
-    """At sf0.1 the refresh's driver arrays stay inside the per-user,
-    per-item and per-held-out-pair byte budget above, and under 20 MB in
-    total (15 000 users, 20 000 items, 112 572 held-out pairs). The
-    held-out pairs are the one part that grows with interactions."""
+def test_refresh_driver_arrays_bounded_at_sf01(spark, monkeypatch):
+    """At sf0.1 the refresh's driver arrays stay inside the byte budget
+    above (15 000 users, 20 000 items, 599 351 interactions, 112 572 of
+    them held out). What the model keeps stays under 20 MB. The collected
+    interactions, which the encoder sees once, are counted beside it, and
+    the two together stay under 40 MB."""
     key = (spark.sparkContext.applicationId, SF01)
+    collected: dict = {}
+    encode = rq._dictionary
+
+    def counting_encode(table, name):
+        ids, codes = encode(table, name)
+        collected[id(table)] = table.nbytes  # each collect once
+        collected[(id(table), name)] = codes.nbytes
+        return ids, codes
+
+    monkeypatch.setattr(rq, "_dictionary", counting_encode)
     try:
         rows = {r.metric: r.value_num for r in rq.rec_pipeline_e2e(spark, SF01).collect()}
         art = rq._CACHE[key]
         st = art["serving"]
         arrays = [st["U"], st["V"], st["user_ids"], st["item_ids"], *art["held_out"]]
+        arrays += [art["user_dict"], art["item_dict"]]
         arrays += [*art[f"topk_k{rq.TOP_K}"], *art[f"topk_k{rq.MMR_POOL}"]]
-        total = sum(a.nbytes for a in arrays) + art["mmr"].nbytes
+        kept = sum(a.nbytes for a in arrays) + art["mmr"].nbytes
         n_users, n_items, n_held_out = len(st["U"]), len(st["V"]), len(art["held_out"][0])
+        n_dict = len(art["user_dict"]) + len(art["item_dict"])
     finally:
-        stale = rq._CACHE.pop(key, None)
-        if stale:
-            stale["train"].unpersist()
-            stale["test"].unpersist()
+        rq._CACHE.pop(key, None)
         prepare(spark, SF0001)
     assert n_held_out == rows["n_test"] == 112_572
+    assert rows["n_interactions"] == 599_351
     assert (n_users, n_items) == (rows["n_user_factors"], rows["n_item_factors"])
-    bound = n_users * BYTES_PER_USER + n_items * BYTES_PER_ITEM + n_held_out * BYTES_PER_HELD_OUT
+    assert n_dict == rows["n_users"] + rows["n_items"]
+    bound = (
+        n_users * BYTES_PER_USER
+        + n_items * BYTES_PER_ITEM
+        + n_held_out * BYTES_PER_HELD_OUT
+        + n_dict * BYTES_PER_DICT_ID
+    )
+    assert kept <= bound, f"{kept} driver bytes kept > {bound}"
+    assert kept < 20_000_000
+    total = kept + sum(collected.values())
+    bound += int(rows["n_interactions"]) * BYTES_PER_INTERACTION
     assert total <= bound, f"{total} driver bytes > {bound}"
-    assert total < 20_000_000
+    assert total < 40_000_000

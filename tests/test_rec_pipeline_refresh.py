@@ -1,9 +1,9 @@
 """The daily refresh, ``rec_pipeline_e2e``: its rows against the DuckDB
 oracle, and a result frame that costs no Spark job.
 
-The refresh takes its stage counts from the one aggregate over the cached
-interactions that also places the dictionary buckets, and its factor
-counts from the driver-resident serving state. Its own conservation link
+The refresh takes its stage counts from the one collect of the
+interactions, which the driver encodes and splits, and its factor counts
+from the driver-resident serving state. Its own conservation link
 ``n_train + n_test == n_interactions`` therefore holds by construction;
 here every count is checked against the oracle, which derives it
 independently from the raw tables.
@@ -27,12 +27,12 @@ from check_correctness import duck_connect, normalize  # noqa: E402
 # full-gate lane: trains a model (see pytest.ini)
 pytestmark = pytest.mark.slow
 
-#: Spark jobs of one cold refresh at sf0.001 on local[4]: the bounds and
-#: counts pass, the two dictionaries, the ALS fit (4 blocks per side),
-#: the serving-state collect, the held-out collect (over the cached
-#: interactions, no dictionary) and the publish read-back. Stages 5-8
-#: otherwise run on the driver.
-COLD_REFRESH_JOBS = 62
+#: Spark jobs of one cold refresh at sf0.001 on local[4]: the interactions
+#: collect (3, its query stages under adaptive execution), the ALS fit
+#: (21, 4 blocks per side), the factor collect (1) and the publish
+#: read-back (3). The encoding, the split, the held-out pairs and stages
+#: 5-8 run on the driver.
+COLD_REFRESH_JOBS = 28
 
 
 @pytest.fixture(scope="module")
